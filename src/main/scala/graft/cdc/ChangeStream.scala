@@ -16,24 +16,34 @@ import graft.store.TableStore
   * not consume the stream).
   *
   * Scale: hasData short-circuits on the version counter (pure pointer
-  * read); only when versions are pending does it run a limit-1 probe over
-  * the pending change batches (isEmpty ⇒ take(1), not a full scan). read
-  * unions only the pending change batches, never the base table.
+  * read); only when versions are pending does it look at the pending
+  * change batches, and then only at their parquet footers' row counts,
+  * read without a Spark job (a gate runs every scheduler tick). A
+  * footer it cannot read falls back to a limit-1 Spark probe (isEmpty ⇒
+  * take(1), not a full scan). read unions only the pending change
+  * batches, never the base table.
   */
 class ChangeStream(store: TableStore, val table: String, val name: String) {
 
   /** Current consumed-through version. */
   def offset: Long = store.readOffset(table, name)
 
-  /** system$stream_has_data (F4): non-consuming emptiness check. */
+  /** system$stream_has_data (F4): non-consuming emptiness check, answered
+    * from the pending change batches' footers (see the class notes). */
   def hasData: Boolean = {
     val cur = store.currentVersion(table)
     val off = offset
-    cur > off && !read.isEmpty
+    cur > off && store.changeRowCount(table, off, cur).map(_ > 0).getOrElse(!read.isEmpty)
   }
 
   /** Non-consuming read of pending changes (base columns + __action). */
   def read: DataFrame = store.readChanges(table, offset, store.currentVersion(table))
+
+  /** Register the pending slice as temp view `name`, rebuilt only when
+    * the offset or the table's committed version changed (the store's
+    * view memo, [[TableStore.viewKey]]). */
+  def registerView(): Unit =
+    store.memoView(name, s"$offset\u0000${store.viewKey(table)}")(read)
 
   /** Consume: run `body` on the pending slice; advance the offset only if
     * it succeeds. Returns body's result. */

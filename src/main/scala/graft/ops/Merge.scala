@@ -39,6 +39,11 @@ object Merge {
   /** Alias used for the source side in expressions. */
   val S = "__merge_s"
 
+  /** Hidden column [[upsert]] appends when asked to label its rows:
+    * `update` for matched keys, `insert` for source-only keys, null for
+    * target-only rows the merge carries unchanged. */
+  val ActionCol = "__graft_action"
+
   /** Reference a target column inside whenMatchedSet. */
   def tgt(c: String): Column = col(s"$T.$c")
   /** Reference a source column inside whenMatchedSet / insert exprs. */
@@ -60,6 +65,10 @@ object Merge {
     *                          insert branch doesn't set the column (column
     *                          DEFAULT exprs / autoincrement placeholders);
     *                          without an entry the fallback stays null.
+    * @param emitAction        append [[ActionCol]], the action the join
+    *                          already decided for each output row — the
+    *                          store's MERGE writes it into the batch files
+    *                          so its change batch needs no second join.
     */
   def upsert(
       target: DataFrame,
@@ -68,7 +77,8 @@ object Merge {
       whenMatchedSet: Option[Map[String, Column]] = None,
       whenNotMatchedInsert: Option[Map[String, Column]] = None,
       whenMatchedDelete: Option[Column] = None,
-      insertFallback: Map[String, Column] = Map.empty): DataFrame = {
+      insertFallback: Map[String, Column] = Map.empty,
+      emitAction: Boolean = false): DataFrame = {
 
     val srcCols = source.columns.toSet
     val t = target.withColumn("__t_exists", lit(true)).as(T)
@@ -105,6 +115,9 @@ object Merge {
         .otherwise(keep)
         .as(c)
     }
-    joined.select(out.toIndexedSeq: _*)
+    val action =
+      if (!emitAction) Nil
+      else Seq(when(matched, lit("update")).when(insertOnly, lit("insert")).as(ActionCol))
+    joined.select((out.toIndexedSeq ++ action): _*)
   }
 }

@@ -28,7 +28,12 @@ import graft.store.TableStore
   *    reference item-...sql:214).
   *  - every attempt is recorded in the run-log table (the
   *    `information_schema.task_history()` analogue, F6) with state
-  *    SUCCEEDED / FAILED / SKIPPED and timing.
+  *    SUCCEEDED / FAILED / SKIPPED and its own scheduled and completed
+  *    times. A cycle buffers its rows and commits them with ONE append
+  *    when it ends, so they become visible together at cycle end — also
+  *    when a task throws past the cycle — and the run log advances by one
+  *    version per cycle. A gate that throws fails its task (recorded with
+  *    the error) like a body that throws.
   *
   * Scale: the orchestrator is a driver-side control loop — all data work
   * happens inside task bodies as Spark jobs; the DAG walk itself is O(n)
@@ -107,26 +112,32 @@ class Orchestrator(spark: SparkSession, store: TableStore, runLogTable: String =
   /** One scheduler tick: walk the DAG from `root` in dependency order.
     * A task runs iff it is enabled, all its `after` parents ran (or were
     * skipped by their gate) this cycle, and its gate passes. Returns the
-    * per-task states of this cycle. */
+    * per-task states of this cycle; its run-log rows are committed in one
+    * append when the walk ends, however it ends. */
   def runCycle(root: String): Map[String, String] = {
     require(tasks.contains(root), s"unknown root task $root")
     runId += 1
     val states = mutable.Map.empty[String, String]
-    val order = topoFrom(root)
-    order.foreach { name =>
+    val logRows = mutable.ArrayBuffer.empty[Row]
+    try topoFrom(root).foreach { name =>
       val t = tasks(name)
       val parentsOk = name == root ||
         t.after.nonEmpty && t.after.forall(p => states.get(p).exists(_ != "FAILED"))
       if (!t.enabled || !parentsOk) states(name) = "NOT_RUN"
       else {
         val scheduled = now()
-        val state =
-          if (!t.when()) ("SKIPPED", null)
-          else
-            try { t.body(); ("SUCCEEDED", null) }
-            catch { case e: Exception => ("FAILED", e.toString.take(500)) }
-        states(name) = state._1
-        log(t.name, state._1, state._2, scheduled)
+        val (state, error) =
+          try {
+            if (!t.when()) ("SKIPPED", null)
+            else { t.body(); ("SUCCEEDED", null) }
+          } catch { case e: Exception => ("FAILED", e.toString.take(500)) }
+        states(name) = state
+        logRows += Row(t.name, state, error, scheduled, now(), runId)
+      }
+    } finally {
+      if (logRows.nonEmpty) {
+        import scala.jdk.CollectionConverters._
+        store.append(runLogTable, spark.createDataFrame(logRows.asJava, runLogSchema))
       }
     }
     states.toMap
@@ -159,12 +170,6 @@ class Orchestrator(spark: SparkSession, store: TableStore, runLogTable: String =
   }
 
   private def now() = new Timestamp(System.currentTimeMillis())
-
-  private def log(name: String, state: String, error: String, scheduled: Timestamp): Unit = {
-    val row = Row(name, state, error, scheduled, now(), runId)
-    store.append(runLogTable,
-      spark.createDataFrame(java.util.List.of(row), runLogSchema))
-  }
 
   /** The reference's task-history monitoring query (F6;
     * customer-...sql:198-201): latest runs of the given tasks. */

@@ -131,7 +131,7 @@ object GraftSql {
     def registerViews(): Unit = {
       store.registerAllViews()
       session.foreach { se =>
-        se.allStreams.foreach(s => s.read.createOrReplaceTempView(s.name))
+        se.allStreams.foreach(_.registerView())
         // views re-evaluate over the snapshots just registered; creation
         // order lets later views reference earlier ones. A view broken by
         // later DDL must not poison statements that never touch it.

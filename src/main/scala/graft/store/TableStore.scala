@@ -500,12 +500,45 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
   /** Register the CURRENT version of `table` as a temp view so `spark.sql`
     * can query it (a snapshot, like reading a version: re-register after
-    * mutations to see newer commits). */
+    * mutations to see newer commits). The snapshot is rebuilt only when
+    * [[viewKey]] changed since this store last registered it, or when the
+    * session no longer holds the view it registered (see [[memoView]]). */
   def registerView(table: String, viewName: String = null): Unit =
-    read(table).createOrReplaceTempView(Option(viewName).getOrElse(table))
+    memoView(Option(viewName).getOrElse(table), viewKey(table))(read(table))
 
   /** Register snapshots of every table (SQL-surface catalog listing). */
   def registerAllViews(): Unit = listTables().foreach(t => registerView(t))
+
+  /** What a snapshot view of `table` depends on: the text of its current
+    * committed manifest (whose `#commit` token is unique per commit, so a
+    * dropped and recreated table reaching the same version number still
+    * differs), its `_schema.json` (ALTER TABLE ADD/DROP COLUMN change the
+    * read schema without a new version) and its clustering keys (they
+    * decide the hidden day companions a read scans). */
+  private[graft] def viewKey(table: String): String =
+    Seq(table, readFile(manifestPath(table, currentVersion(table))),
+      readFile(new Path(tdir(table), "_schema.json")), clusterByOf(table).mkString(","))
+      .mkString("\u0000")
+
+  // view name -> (key it was built for, the temp view relation registered)
+  private val viewMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, AnyRef)]()
+
+  /** Register `build` as temp view `viewName` unless this store already
+    * registered it for `key` AND the session still holds that exact
+    * registration (`getRawTempView` identity): a view replaced or dropped
+    * by anyone else — `spark.sql`, another store on the same session — is
+    * rebuilt. Compute `key` before `build` so a commit racing in between
+    * can only make the view newer than its key. */
+  private[graft] def memoView(viewName: String, key: String)(build: => DataFrame): Unit = {
+    val catalog = spark.sessionState.catalog
+    val live = catalog.getRawTempView(viewName)
+    val memo = Option(viewMemo.get(viewName))
+    if (!memo.exists { case (k, rel) => k == key && live.exists(_ eq rel) }) {
+      build.createOrReplaceTempView(viewName)
+      catalog.getRawTempView(viewName).foreach(rel => viewMemo.put(viewName, (key, rel)))
+    }
+  }
 
   // ---- manifests ----------------------------------------------------------
 
@@ -1496,7 +1529,22 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
   /** MERGE INTO (A-MERGE): bucket-pruned upsert. Only buckets containing
     * source keys are rewritten; the rest of the table carries over at
-    * manifest level. Change batch = source rows labeled insert/update.
+    * manifest level.
+    *
+    * Change batch = the committed rows of the keys the MERGE touched,
+    * labeled `update` (matched) or `insert` (source-only), in one pass:
+    * [[Merge.upsert]] emits the action its join already decided as the
+    * hidden [[Merge.ActionCol]] column, the batch files carry it (like
+    * `__graft_z` and the `__graft_day_*` companions), and the change batch
+    * is a filtered read of the files just written. Every store read uses
+    * the declared schema, so the marker never surfaces in [[read]],
+    * [[readVersion]], views or copies. Reading the written files back,
+    * rather than re-evaluating the merge plan, also makes the change rows
+    * show exactly the committed values (custom SET expressions,
+    * autoincrement keys, `current_timestamp()` defaults). Rows removed by
+    * a `WHEN MATCHED … DELETE` branch are not in the new files: they come
+    * from an anti-join of the touched buckets against the written keys,
+    * with their pre-merge values and `__action = 'delete'`.
     *
     * `alignSource = false` keeps extra (non-target-schema) source columns
     * visible to custom `whenMatchedSet` / `whenNotMatchedInsert`
@@ -1532,51 +1580,19 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     // null through the merge and are filled below, past the global max)
     val insertDefaults = defaultsOf(table).map { case (c, e) => c -> expr(e) }
     val merged = fillAutoInc(table, Merge.upsert(touched, alignedSrc, keys, whenMatchedSet,
-      whenNotMatchedInsert, whenMatchedDelete, insertDefaults), base)
+      whenNotMatchedInsert, whenMatchedDelete, insertDefaults, emitAction = true), base)
 
     val newEntries = writeBatch(table, base + 1, merged)
     lastBatch = newEntries
     val untouched = readManifest(table, base).filterNot(e => srcBuckets(e._1))
 
-    // CDC batch, labeled by what the MERGE did to each source key (matches
-    // Snowflake: a stream on the target sees the merged values). Post-merge
-    // values come from READING BACK the files just written — re-evaluating
-    // the merge plan would run its heaviest job twice and could diverge
-    // (autoincrement assignment is deterministic only per evaluation).
-    lazy val committed = readBack(table, newEntries)
-    val tgtKeys = touched.select(keys.map(col): _*).withColumn("__m", lit(true))
-    // change rows must show the values the merge COMMITTED: with custom
-    // branch exprs the source values differ from the merged ones, and with
-    // autoincrement / non-deterministic DEFAULTs (current_timestamp()) a
-    // re-evaluated source would surface nulls or fresh default values that
-    // diverge from the written rows — all three cases read back the files
-    // just written instead of re-deriving from the source
-    val srcValuesAreCommitted =
-      alignSource && defaultsOf(table).isEmpty && autoIncOf(table).isEmpty
-    val upserts =
-      if (srcValuesAreCommitted)
-        alignedSrc
-          .join(tgtKeys, keys, "left_outer")
-          .withColumn("__action", when(col("__m").isNotNull, lit("update")).otherwise(lit("insert")))
-          .drop("__m")
-      else {
-        // emit the committed rows (already target schema) for keys in the source
-        val srcKeys = alignedSrc.select(keys.map(col): _*).distinct()
-        committed
-          .join(srcKeys, keys, "left_semi")
-          .join(tgtKeys, keys, "left_outer")
-          .withColumn("__action", when(col("__m").isNotNull, lit("update")).otherwise(lit("insert")))
-          .drop("__m")
-      }
+    val upserts = readBackActions(table, newEntries)
     val changes = whenMatchedDelete match {
       case None => upserts
       case Some(_) =>
-        // keys removed by the DELETE branch: pre-merge values, action=delete;
-        // they also must not appear as phantom "update" rows
-        val survivors = committed.select(keys.map(col): _*)
+        val survivors = readBack(table, newEntries).select(keys.map(col): _*)
         val deletedRows = touched.join(survivors, keys, "left_anti")
-        upserts.join(survivors, keys, "left_semi")
-          .unionByName(withAction(align(table, deletedRows), "delete"))
+        upserts.unionByName(withAction(align(table, deletedRows), "delete"))
     }
     (untouched ++ newEntries, Some(changes), -1)
     } // commitLoop
@@ -1585,10 +1601,21 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
   // ---- helpers ------------------------------------------------------------
 
-  private def readBack(table: String, entries: Seq[(Int, String)]): DataFrame =
+  private def readBack(table: String, entries: Seq[(Int, String)],
+      schema: StructType = null): DataFrame = {
+    val s = Option(schema).getOrElse(schemaOf(table))
     if (entries.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(table))
-    else spark.read.schema(schemaOf(table)).parquet(entries.map(_._2): _*)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    else spark.read.schema(s).parquet(entries.map(_._2): _*)
+  }
+
+  /** The rows of a MERGE's freshly written batch that the merge inserted
+    * or updated, with their [[Merge.ActionCol]] marker surfaced as the
+    * change batch's `__action` column. */
+  private def readBackActions(table: String, entries: Seq[(Int, String)]): DataFrame =
+    readBack(table, entries,
+      schemaOf(table).add(Merge.ActionCol, org.apache.spark.sql.types.StringType))
+      .filter(col(Merge.ActionCol).isNotNull).withColumnRenamed(Merge.ActionCol, "__action")
 
   /** Align df to the table schema by name with casts (the permissive,
     * schema-on-write landing behavior: missing cols → their declared
@@ -1608,16 +1635,43 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   }
 
   /** Fill null autoincrement columns continuing past the table-wide max
-    * (one column-pruned max() scan per autoinc column, only on tables that
-    * declare one — zero cost otherwise). */
+    * of version `base` (only on tables that declare one — zero cost
+    * otherwise). The max comes from the batches' stats sidecars when they
+    * cover it ([[sidecarMax]]), else from a column-pruned max() scan. */
   private def fillAutoInc(table: String, df: DataFrame, base: Long): DataFrame =
     autoIncOf(table).foldLeft(df) { (d, c) =>
-      val globalMax: Long = readVersion(table, base).agg(max(col(c))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r                  => r.getLong(0)
+      val globalMax: Long = sidecarMax(table, base, c).getOrElse {
+        readVersion(table, base).agg(max(col(c))).head() match {
+          case r if r.isNullAt(0) => 0L
+          case r                  => r.getLong(0)
+        }
       }
       graft.ops.SurrogateKey.assignFrom(d, c, globalMax)
     }
+
+  /** Max of LONG column `c` over version `base`, read without a Spark job
+    * from the `_graft_stats` sidecars of the batches its manifest references
+    * (0 for an empty version). None — the caller scans — unless every
+    * batch's sidecar has a trusted inventory and every data file the
+    * manifest references carries a max for `c` (a legacy batch has no
+    * sidecar; an all-null file has no max). Files of a batch's buckets
+    * that a later merge rewrote are not referenced, so they don't count. */
+  private[store] def sidecarMax(table: String, base: Long, c: String): Option[Long] = {
+    val maxes = readManifest(table, base).groupBy(e => new Path(e._2).getParent).toSeq.flatMap {
+      case (batchDir, bucketDirs) =>
+        val sc = readStatsSidecar(batchDir)
+        if (!sc.inventoryTrusted) return None
+        val wanted = bucketDirs.map(bd => new Path(bd._2).getName).toSet
+        sc.files.toSeq.collect {
+          case (rel, stats) if wanted(rel.takeWhile(_ != '/')) =>
+            stats.get(c).flatMap(_.max) match {
+              case Some(m: Long) => m
+              case _ => return None
+            }
+        }
+    }
+    Some(if (maxes.isEmpty) 0L else maxes.max)
+  }
 
   // ---- CDC ----------------------------------------------------------------
 
@@ -1632,6 +1686,26 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     if (dirs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(dirs: _*)
+  }
+
+  /** Row count of the change batches of versions (fromExclusive,
+    * toInclusive], summed from their parquet footers without a Spark job.
+    * None when a data file's footer can't be read (truncated,
+    * corrupt): the caller then asks Spark. */
+  private[graft] def changeRowCount(table: String, fromExclusive: Long,
+      toInclusive: Long): Option[Long] = {
+    import scala.jdk.CollectionConverters._
+    val files = (fromExclusive + 1 to toInclusive).flatMap(v => changesDirOf(table, v))
+      .flatMap(d => fs.listStatus(d).toIndexedSeq)
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+    val counts = files.map(st => scala.util.Try {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
+      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+      finally reader.close()
+    })
+    if (counts.exists(_.isFailure)) None else Some(counts.map(_.get).sum)
   }
 
   private[graft] def readOffset(table: String, stream: String): Long = {
