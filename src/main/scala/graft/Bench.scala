@@ -137,12 +137,6 @@ object Bench {
     val spreadJson = spread.map { case (k, (mn, mx)) =>
       jstr(k) + s""":{"min":$mn,"max":$mx}""" }.mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errCount":${errors.size},"errors":$errs,"iters":$iterations,"sf":"$sfDir","env":$env,"artifactWarm":$warm,"spreadOutlierCount":${spread.size},"spreadOutliers":$spreadJson,"iterTimes":$iterTimes,"soak":$soakJson}"""
-    // self-check BEFORE printing (r21): round 19's capture was lost to a
-    // driver-side parse failure ("parsed": null) — prove the emitted line
-    // round-trips through a real JSON parser (Jackson, on Spark's
-    // classpath) so a malformed line fails THIS run loudly instead of
-    // silently voiding the round's perf evidence
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     println(line)
     // the driver captures only a bounded stdout TAIL of this one giant
     // JSON line (BENCH_r11 lost 73/106 timings to truncation) — persist
@@ -150,6 +144,12 @@ object Bench {
     // survives regardless of how much of stdout the harness keeps
     try java.nio.file.Files.writeString(java.nio.file.Path.of("BENCH_LOCAL.json"), line + "\n")
     catch { case e: Exception => System.err.println(s"BENCH_LOCAL.json write failed: $e") }
+    // self-check AFTER the line is out (round 19's capture was lost to a
+    // parse failure downstream, "parsed": null): the emitted line must
+    // round-trip through a real JSON parser (Jackson, on Spark's
+    // classpath), so a malformed line fails THIS run loudly while its
+    // payload stays on stdout and in BENCH_LOCAL.json for diagnosis
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     spark.stop()
     if (soak > 1) {
       // ONE-SIDED guard: the leak signature is a LATER pass getting

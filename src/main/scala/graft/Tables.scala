@@ -49,27 +49,10 @@ object Tables {
     * every downstream operator in this repo is partitioning-insensitive
     * by construction (explicit total sort keys, commutative/partial
     * aggregates, rank-ordered folds — the oracle-determinism contract),
-    * re-proven after this change by the full 155-query DuckDB replay.
-    *
-    * Conf: spark.graft.scanParallelismFloor overrides the floor
-    * (0/1 disables); env SPARK_GRAFT_SCAN_FLOOR overrides both (the
-    * A/B knob — flips every opted-in site at once). */
+    * re-proven after this change by the full 155-query DuckDB replay. */
   def loadSpread(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = load(spark, dir, name)
-    // defensive parse (r21, ADVICE): a malformed override must fail with
-    // a message naming the knob, not a bare NumberFormatException deep
-    // inside whichever query happened to read a table first
-    def parseFloor(src: String, v: String): Int =
-      try v.trim.toInt
-      catch {
-        case _: NumberFormatException => sys.error(
-          s"$src: expected an integer scan-parallelism floor, got '$v'")
-      }
-    val floor = sys.env.get("SPARK_GRAFT_SCAN_FLOOR")
-      .map(parseFloor("SPARK_GRAFT_SCAN_FLOOR", _))
-      .orElse(spark.conf.getOption("spark.graft.scanParallelismFloor")
-        .map(parseFloor("spark.graft.scanParallelismFloor", _)))
-      .getOrElse(spark.sparkContext.defaultParallelism)
+    val floor = spark.sparkContext.defaultParallelism
     if (floor <= 1) df
     else if (df.rdd.getNumPartitions < floor) df.repartition(floor)
     else df

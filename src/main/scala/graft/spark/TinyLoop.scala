@@ -3,8 +3,11 @@ package graft.spark
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared child session for DRIVER-SYNCED iteration loops over
-  * bounded-tiny working sets (BPE merge rounds, the connected-components
-  * star contraction, pagerank's score iteration).
+  * bounded-tiny working sets. Its users are the BPE merge rounds
+  * ([[graft.ops.CorpusOps]]) and pagerank's score iteration
+  * ([[graft.ops.Dedup.pagerankCentrality]]). The connected-components
+  * star contraction is deliberately NOT one: the rebind was measured and
+  * rejected there (see the note in [[graft.ops.Dedup.clusterPairs]]).
   *
   * The problem (r21, ProfileQ + driver thread dumps): when the working
   * set fits a handful of partitions, each round's wall time is DRIVER

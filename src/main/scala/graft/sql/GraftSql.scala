@@ -1,7 +1,9 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, UpdateTable}
 import org.apache.spark.sql.types.StructType
 
 import graft.GraftSession
@@ -39,7 +41,7 @@ import graft.store.TableStore
   *  - `MERGE INTO ...` (delegated to [[MergeSql]]; a stream source is
   *    consumed transactionally — offset advances only if the merge
   *    commits, the reference's exactly-once contract)
-  *  - `USE ...` → no-op; `--` comments are stripped
+  *  - `USE ...` → no-op; `--` and block comments are stripped
   *  - any other statement → registered-view `spark.sql` passthrough
   *    (SELECT monitoring queries, E3), with
   *    `table(information_schema.task_history())` rewritten to the
@@ -54,6 +56,16 @@ import graft.store.TableStore
   * run through Spark's full SQL stack against snapshot views of the store
   * tables, so all of Catalyst's SQL surface is available inside INSERT
   * bodies.
+  *
+  * How the text is read: MERGE, UPDATE and DELETE go through Spark's own
+  * parser (the session's `sqlParser`), and graft reads the plans it
+  * returns (see [[MergeSql]] for the MERGE clause regrouping). Every other
+  * quote-, comment- or paren-aware step — comment stripping, statement
+  * and list splitting, name normalization, QUALIFY, `AT (VERSION => n)`,
+  * `TABLE(graft_*(…))` and the `task_history()` rewrite — walks the tokens
+  * of [[SqlScanner]], the one lexing rule, so none of them looks inside a
+  * string literal or a comment. The remaining regexes only classify a
+  * statement by its leading keywords and pick out DDL names and options.
   */
 object GraftSql {
 
@@ -111,10 +123,7 @@ object GraftSql {
     """(?is)^\s*DROP\s+(TABLE|STREAM|PIPE|VIEW)\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$""".r
   private val TruncateRe =
     """(?is)^\s*TRUNCATE\s+(?:TABLE\s+)?(?:IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$""".r
-  private val DeleteRe =
-    """(?is)^\s*DELETE\s+FROM\s+([\w.]+)(?:\s+WHERE\s+(.*?))?\s*;?\s*$""".r
-  private val UpdateRe =
-    """(?is)^\s*UPDATE\s+([\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*?))?\s*;?\s*$""".r
+  private val UpdateOrDeleteRe = """(?is)^\s*(?:UPDATE|DELETE)\b.*$""".r
   private val InsertRe =
     """(?is)^\s*INSERT\s+(INTO|OVERWRITE)(?:\s+INTO)?\s+(?:TABLE\s+)?([\w.]+)\s*(?:\(([\w\s,]+)\)\s*)?(SELECT.*|VALUES.*)$""".r
   private val MergeRe = """(?is)^\s*MERGE\s+INTO\s+.*$""".r
@@ -141,7 +150,7 @@ object GraftSql {
         }
       }
     }
-    val stmt = norm(stripComments(sql), session)
+    val stmt = norm(SqlScanner.stripComments(sql), session)
     stmt match {
       case UseRe() => None
 
@@ -409,19 +418,23 @@ object GraftSql {
           sys.error(s"table $flat does not exist")
         None
 
-      case DeleteRe(name, whereClause) =>
-        val pred = Option(whereClause).map(expr).getOrElse(expr("true"))
-        store.delete(session.map(_.recordName(name)).getOrElse(name), pred)
-        None
-
-      case UpdateRe(name, setClause, whereClause) =>
-        val sets = MergeSql.splitTopLevel(setClause, ',').map { a =>
-          val i = a.indexOf('=')
-          require(i > 0, s"bad SET assignment: $a")
-          a.take(i).trim -> expr(a.drop(i + 1).trim)
-        }.toMap
-        val pred = Option(whereClause).map(expr).getOrElse(expr("true"))
-        store.update(session.map(_.recordName(name)).getOrElse(name), pred, sets)
+      case UpdateOrDeleteRe() =>
+        // read by Spark's parser, like MERGE
+        def flat(table: LogicalPlan) = {
+          val name = MergeSql.tableRef(table)._1
+          session.map(_.recordName(name)).getOrElse(name)
+        }
+        def column(e: Expression) = GraftColumnBridge.column(e)
+        MergeSql.parsePlan(stmt) match {
+          case DeleteFromTable(table, cond) => store.delete(flat(table), column(cond))
+          case UpdateTable(table, assignments, cond) =>
+            val sets = assignments.map {
+              case Assignment(k: UnresolvedAttribute, v) => k.nameParts.mkString(".") -> column(v)
+              case other => throw new IllegalArgumentException(s"bad SET assignment: $other")
+            }.toMap
+            store.update(flat(table), column(cond.getOrElse(Literal.TrueLiteral)), sets)
+          case _ => throw new IllegalArgumentException(s"unsupported statement: ${stmt.take(200)}")
+        }
         None
 
       case InsertRe(mode, name, colList, body) =>
@@ -449,11 +462,11 @@ object GraftSql {
         val directStream = session.flatMap(_.streamOpt(pm.source))
         // a USING (subquery) that reads a stream (the reference's item
         // script dedups its stream inside the subquery) also consumes it
-        val subqueryStream = pm.sourceQuery.flatMap { q =>
-          session.toSeq.flatMap(_.allStreams).find(s =>
-            ("(?i)\\b" + java.util.regex.Pattern.quote(s.name) + "\\b").r
-              .findFirstIn(q).isDefined)
-        }
+        val subqueryStream = for {
+          se <- session
+          q <- pm.sourceQuery
+          stm <- MergeSql.relations(q).flatMap(se.streamOpt).headOption
+        } yield stm
         (directStream, subqueryStream) match {
           case (Some(stm), _) =>
             // stream source: transactional consume — the offset advances
@@ -489,7 +502,7 @@ object GraftSql {
         registerViews()
         Some(spark.sql(rewriteQualify(TableFunctions.rewrite(spark, store, session,
           timeTravel(spark, store, session,
-            other.replaceAll(TaskHistoryFnRe, "task_history"))), spark)))
+            SqlScanner.mapCode(other)(_.replaceAll(TaskHistoryFnRe, "task_history")))), spark)))
     }
   }
 
@@ -503,7 +516,7 @@ object GraftSql {
     * reconstructable — [[TableStore.readVersion]]). */
   private def timeTravel(spark: SparkSession, store: TableStore,
       session: Option[GraftSession], sql: String): String =
-    AtRe.replaceAllIn(sql, m => {
+    SqlScanner.mapCode(sql)(AtRe.replaceAllIn(_, m => {
       val flat = session.map(_.recordName(m.group(1))).getOrElse(m.group(1))
       val v =
         if (m.group(2).equalsIgnoreCase("VERSION")) m.group(3).toLong
@@ -511,13 +524,13 @@ object GraftSql {
       val view = s"${flat}__at_$v"
       store.readVersion(flat, v).createOrReplaceTempView(view)
       java.util.regex.Matcher.quoteReplacement(view)
-    })
+    }))
 
   /** Execute a script of `;`-separated statements; returns the rows of
     * the final statement if it was a query. */
   def executeScript(spark: SparkSession, store: TableStore, script: String,
       session: Option[GraftSession] = None): Option[DataFrame] =
-    splitStatements(stripComments(script)).foldLeft(Option.empty[DataFrame]) { (_, stmt) =>
+    splitStatements(SqlScanner.stripComments(script)).foldLeft(Option.empty[DataFrame]) { (_, stmt) =>
       execute(spark, store, stmt, session)
     }
 
@@ -531,7 +544,7 @@ object GraftSql {
   def executeScriptLenient(spark: SparkSession, store: TableStore, script: String,
       session: Option[GraftSession] = None): Seq[(String, String)] = {
     val errs = Seq.newBuilder[(String, String)]
-    splitStatements(stripComments(script)).foreach { stmt =>
+    splitStatements(SqlScanner.stripComments(script)).foreach { stmt =>
       try execute(spark, store, stmt, session)
       catch {
         case e: Exception =>
@@ -550,7 +563,7 @@ object GraftSql {
     * IS a name — system$ function arguments — resolves via the session at
     * the call site ([[parseGate]], [[SystemFnRe]] handlers). */
   private def norm(sql: String, session: Option[GraftSession]): String =
-    session.map(se => mapOutsideQuotes(sql) { span =>
+    session.map(se => SqlScanner.mapCode(sql) { span =>
       se.nameMap.foldLeft(span) { case (acc, (full, flat)) =>
         acc.replaceAll("(?i)(?<![\\w.])" + java.util.regex.Pattern.quote(full) + "(?![\\w.])", flat)
       }
@@ -585,87 +598,35 @@ object GraftSql {
     * failure (e.g. an unregistered table at view-definition time) keeps the
     * injected form and surfaces naturally at execution. */
   private[graft] def rewriteQualify(sql: String, probe: SparkSession = null): String = {
-    val lower = sql.toLowerCase
-    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    // locate a depth-0, unquoted QUALIFY keyword
-    var depth = 0; var quote: Char = 0; var i = 0; var qStart = -1
-    while (i < sql.length && qStart < 0) {
-      val ch = sql(i)
-      if (quote != 0) {
-        if (ch == '\\') i += 1 else if (ch == quote) quote = 0
-      } else ch match {
-        case '\'' | '"' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && (ch == 'q' || ch == 'Q') && lower.startsWith("qualify", i) &&
-              (i == 0 || !isWordChar(sql(i - 1))) &&
-              (i + 7 >= sql.length || !isWordChar(sql(i + 7))))
-            qStart = i
-      }
-      i += 1
-    }
-    if (qStart < 0) return sql
-    val head = sql.substring(0, qStart).trim
-    val rest = sql.substring(qStart + 7)
+    val toks = SqlScanner.tokens(sql)
+    def top(from: Int, until: Int)(words: String*) =
+      (from until until).find(i => toks(i).depth == 0 && words.exists(w => toks(i).is(w)))
+    val q = top(0, toks.length)("qualify").getOrElse(return sql)
+    val head = sql.substring(0, toks(q).start).trim
     // the predicate runs to a top-level ORDER BY / LIMIT or the end
-    var tailIdx = -1
-    depth = 0; quote = 0; i = 0
-    val restLower = rest.toLowerCase
-    while (i < rest.length && tailIdx < 0) {
-      val ch = rest(i)
-      if (quote != 0) {
-        if (ch == '\\') i += 1 else if (ch == quote) quote = 0
-      } else ch match {
-        case '\'' | '"' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && (i == 0 || !isWordChar(rest(i - 1))) &&
-              (restLower.startsWith("order", i) && !isWordChar(restLower.charAt(math.min(i + 5, rest.length - 1))) ||
-               restLower.startsWith("limit", i) && !isWordChar(restLower.charAt(math.min(i + 5, rest.length - 1)))))
-            tailIdx = i
-      }
-      i += 1
+    val (pred, tail) = top(q + 1, toks.length)("order", "limit") match {
+      case None => (sql.substring(toks(q).end).trim.stripSuffix(";").trim, "")
+      case Some(t) => (sql.substring(toks(q).end, toks(t).start).trim,
+        sql.substring(toks(t).start).trim.stripSuffix(";").trim)
     }
-    val (pred, tail) =
-      if (tailIdx < 0) (rest.trim.stripSuffix(";").trim, "")
-      else (rest.substring(0, tailIdx).trim, rest.substring(tailIdx).trim.stripSuffix(";").trim)
     // inject the predicate INTO the query block's select list (not a wrapper
     // over the projected output): Snowflake QUALIFY may reference BASE
     // columns the projection drops, and select-list aliases — both resolve
-    // there (aliases via Spark's lateral column alias resolution). Find the
-    // block's top-level FROM to split "SELECT <list>" from "FROM <rest>".
-    var fromIdx = -1
-    depth = 0; quote = 0; i = 0
-    val headLower = head.toLowerCase
-    while (i < head.length && fromIdx < 0) {
-      val ch = head(i)
-      if (quote != 0) {
-        if (ch == '\\') i += 1 else if (ch == quote) quote = 0
-      } else ch match {
-        case '\'' | '"' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && headLower.startsWith("from", i) &&
-              (i == 0 || !isWordChar(head(i - 1))) &&
-              (i + 4 >= head.length || !isWordChar(head(i + 4))))
-            fromIdx = i
-      }
-      i += 1
-    }
-    val distinct = headLower.matches("(?s)^\\s*select\\s+distinct\\b.*")
+    // there (aliases via Spark's lateral column alias resolution). The
+    // block's top-level FROM splits "SELECT <list>" from "FROM <rest>".
+    val from = top(0, q)("from").filter(f => sql.substring(0, toks(f).start).trim.nonEmpty)
+    val distinct = head.matches("(?is)^\\s*select\\s+distinct\\b.*")
     val tailSql = if (tail.isEmpty) "" else " " + tail
     // wrapper form: predicate over the projected output (select-list
     // aliases resolve everywhere; dropped base columns do not)
     val wrapper =
       s"SELECT * EXCEPT(__qualify) FROM (SELECT *, ($pred) AS __qualify FROM ($head) __qualify_src) " +
         s"WHERE __qualify" + tailSql
-    if (fromIdx > 0 && !distinct) {
+    if (from.isDefined && !distinct) {
+      val f = toks(from.get).start
       val injected =
-        s"SELECT * EXCEPT(__qualify) FROM (${head.substring(0, fromIdx).trim}, " +
-          s"($pred) AS __qualify ${head.substring(fromIdx)}) " +
+        s"SELECT * EXCEPT(__qualify) FROM (${sql.substring(0, f).trim}, " +
+          s"($pred) AS __qualify ${sql.substring(f, toks(q).start).trim}) " +
           s"WHERE __qualify" + tailSql
       if (probe == null) injected
       else
@@ -682,84 +643,14 @@ object GraftSql {
       wrapper
   }
 
-  /** Apply `f` to each maximal span of `sql` OUTSIDE single/double-quoted
-    * string literals (backslash escapes respected, same lexing as
-    * [[stripComments]]); quoted literals pass through verbatim. */
-  private[sql] def mapOutsideQuotes(sql: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val span = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    while (i < sql.length) {
-      val ch = sql(i)
-      if (quote != 0) {
-        if (ch == '\\' && i + 1 < sql.length) { out += ch; out += sql(i + 1); i += 1 }
-        else { out += ch; if (ch == quote) quote = 0 }
-      } else if (ch == '\'' || ch == '"') {
-        out ++= f(span.toString); span.clear()
-        quote = ch; out += ch
-      } else span += ch
-      i += 1
-    }
-    out ++= f(span.toString)
-    out.toString
-  }
-
   /** Strip one balanced outer paren pair (and a trailing `;`) from a CTAS
-    * body — `CREATE TABLE t AS (SELECT ...)` (quote-aware balance walk). */
+    * body — `CREATE TABLE t AS (SELECT ...)`. */
   private[sql] def stripOuterParens(body: String): String = {
     val s = body.trim.stripSuffix(";").trim
-    if (!s.startsWith("(") || !s.endsWith(")")) return s
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val ch = s(i)
-      if (quote != 0) {
-        if (ch == '\\' && i + 1 < s.length) i += 1
-        else if (ch == quote) quote = 0
-      } else ch match {
-        case '\'' | '"' => quote = ch
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          // the opening paren closes before the end → not one outer pair
-          if (depth == 0 && i < s.length - 1) return s
-        case _ =>
-      }
-      i += 1
-    }
-    if (depth == 0) s.substring(1, s.length - 1).trim else s
-  }
-
-  /** Strip `--` line comments and `slash-star … star-slash` block comments
-    * (outside quotes). An unclosed block comment runs to end of script —
-    * the worksheet behavior the reference's order script relies on (its
-    * tail opens a block comment that never closes). */
-  private[sql] def stripComments(sql: String): String = {
-    val out = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    var inBlock = false
-    while (i < sql.length) {
-      val ch = sql(i)
-      if (inBlock) {
-        if (ch == '*' && i + 1 < sql.length && sql(i + 1) == '/') { inBlock = false; i += 1 }
-      } else if (quote != 0) {
-        // backslash-escaped quotes (Snowflake string syntax) stay inside
-        if (ch == '\\' && i + 1 < sql.length) { out += ch; out += sql(i + 1); i += 1 }
-        else { out += ch; if (ch == quote) quote = 0 }
-      } else if (ch == '\'' || ch == '"') {
-        quote = ch; out += ch
-      } else if (ch == '-' && i + 1 < sql.length && sql(i + 1) == '-') {
-        while (i < sql.length && sql(i) != '\n') i += 1
-        if (i < sql.length) out += '\n'
-      } else if (ch == '/' && i + 1 < sql.length && sql(i + 1) == '*') {
-        inBlock = true; i += 1
-      } else out += ch
-      i += 1
-    }
-    out.toString
+    val toks = SqlScanner.tokens(s)
+    if (toks.nonEmpty && toks.head.is('(') && SqlScanner.closing(toks, 0) == toks.length - 1)
+      s.substring(1, s.length - 1).trim
+    else s
   }
 
   /** `WHEN [NOT] system$stream_has_data('s')` task gates. */
@@ -785,7 +676,7 @@ object GraftSql {
       val raw = m.group(2).trim
       val v =
         if (raw.startsWith("(") && raw.endsWith(")"))
-          MergeSql.splitTopLevel(raw.substring(1, raw.length - 1), ',')
+          SqlScanner.splitTopLevel(raw.substring(1, raw.length - 1), ',')
             .map(_.trim).headOption.getOrElse("")
         else raw
       k -> v.stripPrefix("'").stripSuffix("'")
@@ -802,7 +693,7 @@ object GraftSql {
 
   /** `TYPE='CSV', SKIP_HEADER=1, ...` option lists. */
   private def parseOptions(opts: String): Map[String, String] =
-    MergeSql.splitTopLevel(opts, ',').map(_.trim).filter(_.nonEmpty).map { kv =>
+    SqlScanner.splitTopLevel(opts, ',').map(_.trim).filter(_.nonEmpty).map { kv =>
       val i = kv.indexOf('=')
       require(i > 0, s"bad option: $kv")
       kv.take(i).trim.toLowerCase -> kv.drop(i + 1).trim.stripPrefix("'").stripSuffix("'")
@@ -814,7 +705,7 @@ object GraftSql {
   private[sql] def parseColumns(ddl: String): (StructType, Map[String, String], Seq[String]) = {
     val defaults = Map.newBuilder[String, String]
     val autoInc = Seq.newBuilder[String]
-    val fields = MergeSql.splitTopLevel(ddl, ',').map(_.trim).filter(_.nonEmpty).map { colDef =>
+    val fields = SqlScanner.splitTopLevel(ddl, ',').map(_.trim).filter(_.nonEmpty).map { colDef =>
       val m = """(?s)^(\w+)\s+(.+)$""".r.findFirstMatchIn(colDef)
         .getOrElse(sys.error(s"bad column definition: $colDef"))
       val name = m.group(1)
@@ -853,26 +744,8 @@ object GraftSql {
     }
   }
 
-  /** Split on top-level semicolons (quotes respected, incl. backslash-
-    * escaped quote chars inside strings). */
-  private[sql] def splitStatements(script: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    while (i < script.length) {
-      val ch = script(i)
-      if (quote != 0) {
-        if (ch == '\\' && i + 1 < script.length) { cur += ch; cur += script(i + 1); i += 1 }
-        else { cur += ch; if (ch == quote) quote = 0 }
-      } else ch match {
-        case '\'' | '"' => quote = ch; cur += ch
-        case ';' => out += cur.toString; cur.clear()
-        case c => cur += c
-      }
-      i += 1
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  /** Split a script into statements at every `;` outside literals and
+    * comments. */
+  private[sql] def splitStatements(script: String): Seq[String] =
+    SqlScanner.split(script)(_.is(';')).map(_.trim).filter(_.nonEmpty)
 }

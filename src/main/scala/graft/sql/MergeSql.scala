@@ -1,6 +1,11 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction,
+  LogicalPlan, MergeIntoTable, SubqueryAlias, UnresolvedWith, UpdateAction}
 import org.apache.spark.sql.functions.{col, expr}
 
 import graft.ops.Merge
@@ -14,16 +19,29 @@ import graft.store.TableStore
   * {{{
   *   MERGE INTO raw_item AS t USING stg_item_stream AS s
   *   ON t.item_id = s.item_id [AND t.k2 = s.k2 ...]
+  *   WHEN MATCHED [AND cond] THEN DELETE
   *   WHEN MATCHED THEN UPDATE SET t.c = <expr>, ...
   *   WHEN NOT MATCHED THEN INSERT (c1, c2, ...) VALUES (<expr>, ...)
   * }}}
   *
-  * The ON clause must be a conjunction of t.<col> = s.<col> equalities
-  * (the only shape the reference uses — its composite-key merge is four
-  * AND'ed equalities). UPDATE/INSERT value expressions are parsed by
-  * Spark's own expression parser (`expr`), with `t.`/`s.` qualifiers
+  * The statement is read by Spark's own parser (the session's
+  * `sqlParser`), and graft reads the `MergeIntoTable` plan it returns.
+  * Two Snowflake-only steps run first, on the [[SqlScanner]] tokens:
+  *  - a `USING (subquery)` source is cut out as text (it may use QUALIFY,
+  *    which Spark does not parse) and replaced by a placeholder name;
+  *  - the WHEN clauses are regrouped stably, MATCHED before NOT MATCHED:
+  *    Spark's grammar requires that order, Snowflake takes any, and the
+  *    two groups act on disjoint rows, so the meaning is unchanged.
+  *
+  * The ON clause must be a conjunction of equalities that join the same
+  * column on both sides (the only shape the reference uses — its
+  * composite-key merge is four AND'ed equalities). SET, VALUES and DELETE
+  * conditions are the parsed Catalyst expressions, with the target and
+  * source qualifiers (an alias, else the table name's last segment)
   * rewritten to the merge-internal aliases, so any Spark SQL scalar
-  * expression works (casts, current_timestamp(), arithmetic, …).
+  * expression works. A conditional UPDATE, `UPDATE SET *`, `INSERT *`, a
+  * conditional INSERT and `NOT MATCHED BY SOURCE` are rejected with
+  * `IllegalArgumentException`, as is text Spark cannot parse.
   *
   * Execution delegates to [[Merge.upsert]] (full-outer join rewrite) and
   * the store's bucket-pruned atomic commit ([[TableStore.merge]] handles
@@ -33,142 +51,128 @@ object MergeSql {
 
   final case class ParsedMerge(
       target: String, source: String,
-      targetAlias: String, sourceAlias: String,
       keys: Seq[String],
-      matchedSet: Option[Map[String, String]],     // col -> raw expr text
-      insertCols: Option[(Seq[String], Seq[String])], // (cols, raw expr texts)
-      matchedDelete: Option[String] = None,        // raw cond ("true" if bare)
-      sourceQuery: Option[String] = None)          // USING (subquery) text
+      matchedSet: Map[String, Column],          // empty: matched rows keep their values
+      insert: Option[Map[String, Column]],      // None: no WHEN NOT MATCHED
+      matchedDelete: Option[Column] = None,     // lit(true) when bare
+      sourceQuery: Option[String] = None)       // USING (subquery) text
 
   /** Placeholder source name substituted for a `USING (subquery)`. */
   val SubquerySource = "__merge_subquery_src"
 
-  // aliases are optional (the reference writes `MERGE INTO raw.raw_customer
-  // USING stg.stg_customer_stm ON raw_customer.customer_id = ...`,
-  // qualifying by the bare table name) — a missing alias defaults to the
-  // last dot-segment of the table/source name
-  private val MergePattern =
-    ("""(?is)^\s*MERGE\s+INTO\s+([\w.]+)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?\s+""" +
-      """USING\s+([\w.]+)(?:\s+(?:AS\s+)?(?!ON\b)(\w+))?\s+""" +
-      """ON\s+(.*?)\s*""" +
-      """(?:WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+(.*?)\s*)?""" +
-      """(?:WHEN\s+NOT\s+MATCHED\s+THEN\s*INSERT\s*\(([^)]*)\)\s*VALUES\s*\((.*)\)\s*;?\s*)?$""").r
+  /** Parse with the session's SQL parser; text it rejects is an
+    * `IllegalArgumentException`, like every other unsupported shape. */
+  private[sql] def parsePlan(sql: String): LogicalPlan =
+    try SparkSession.active.sessionState.sqlParser.parsePlan(sql)
+    catch { case e: ParseException => throw new IllegalArgumentException(e.getMessage, e) }
 
-  // the lazy condition group must not cross into another WHEN/THEN clause
-  // (otherwise `WHEN MATCHED AND c THEN UPDATE ... WHEN MATCHED THEN
-  // DELETE` would swallow the UPDATE branch as a garbage delete condition)
-  private val DeleteBranch =
-    """(?is)WHEN\s+MATCHED\s+(?:AND\s+((?:(?!\b(?:THEN|WHEN)\b).)+?)\s+)?THEN\s+DELETE""".r
-
-  /** The DELETE branch can appear anywhere among the WHEN clauses
-    * (Snowflake allows any order); pull it out first, then parse the
-    * remaining UPDATE/INSERT shape with the main pattern. A
-    * `USING (subquery) AS alias` source (the reference's item script
-    * dedups its stream with a row_number subquery, item-...sql:71-75) is
-    * extracted into [[ParsedMerge.sourceQuery]] before pattern matching. */
-  def parse(sql: String): ParsedMerge = {
-    val (sql1, subq) = extractUsingSubquery(sql)
-    val pm = DeleteBranch.findFirstMatchIn(sql1) match {
-      case Some(m) =>
-        val cond = Option(m.group(1)).map(_.trim).getOrElse("true")
-        val rest = sql1.substring(0, m.start) + sql1.substring(m.end)
-        parseNoDelete(rest).copy(matchedDelete = Some(cond))
-      case None => parseNoDelete(sql1)
-    }
-    pm.copy(sourceQuery = subq)
+  /** Flat name of a parsed table reference, and its qualifier in
+    * expressions (the alias, else the name's last segment). */
+  private[sql] def tableRef(plan: LogicalPlan): (String, String) = plan match {
+    case a @ SubqueryAlias(_, r: UnresolvedRelation) => (r.multipartIdentifier.mkString("."), a.alias)
+    case r: UnresolvedRelation => (r.multipartIdentifier.mkString("."), r.multipartIdentifier.last)
+    case other => throw new IllegalArgumentException(s"expected a table name, got:\n$other")
   }
 
-  /** Replace `USING ( … )` (balanced, quote-aware) with the placeholder
-    * source name; returns (rewritten sql, extracted subquery text). */
-  private def extractUsingSubquery(sql: String): (String, Option[String]) =
-    """(?is)\bUSING\s*\(""".r.findFirstMatchIn(sql) match {
-      case None => (sql, None)
-      case Some(m) =>
-        var depth = 1
-        var i = m.end
-        var quote: Char = 0
-        while (i < sql.length && depth > 0) {
-          val ch = sql(i)
-          if (quote != 0) { if (ch == quote) quote = 0 }
-          else ch match {
-            case '\'' | '"' => quote = ch
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        require(depth == 0, s"unbalanced parens in USING subquery:\n$sql")
-        val sub = sql.substring(m.end, i - 1).trim
-        (sql.substring(0, m.start) + s" USING $SubquerySource " + sql.substring(i), Some(sub))
+  def parse(sql: String): ParsedMerge = {
+    val (text, subquery) = extractUsingSubquery(sql.trim.stripSuffix(";"))
+    val m = parsePlan(regroupWhenClauses(text)) match {
+      case m: MergeIntoTable => m
+      case _ => throw new IllegalArgumentException(s"not a MERGE statement:\n$sql")
     }
+    val (target, tAlias) = tableRef(m.targetTable)
+    val (source, sAlias) = tableRef(m.sourceTable)
+    def column(a: UnresolvedAttribute): String = a.nameParts match {
+      case Seq(q, c) if q.equalsIgnoreCase(tAlias) || q.equalsIgnoreCase(sAlias) => c
+      case parts => parts.mkString(".")
+    }
+    def value(e: Expression): Column = GraftColumnBridge.column(e.transformUp {
+      case a: UnresolvedAttribute if a.nameParts.length > 1 =>
+        val q = a.nameParts.head
+        if (q.equalsIgnoreCase(tAlias)) UnresolvedAttribute(Merge.T +: a.nameParts.tail)
+        else if (q.equalsIgnoreCase(sAlias)) UnresolvedAttribute(Merge.S +: a.nameParts.tail)
+        else a
+    })
+    def assignments(as: Seq[Assignment]): Map[String, Column] = as.map {
+      case Assignment(k: UnresolvedAttribute, v) => column(k) -> value(v)
+      case other => throw new IllegalArgumentException(s"bad assignment: $other")
+    }.toMap
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val keys = conjuncts(m.mergeCondition).map {
+      case EqualTo(l: UnresolvedAttribute, r: UnresolvedAttribute) =>
+        require(column(l) == column(r),
+          s"ON equality must join the same column name on both sides, got ${l.name} = ${r.name}")
+        column(l)
+      case other => throw new IllegalArgumentException(s"ON clause must be equalities: $other")
+    }
+    val deletes = m.matchedActions.collect { case DeleteAction(c) => c.getOrElse(Literal.TrueLiteral) }
+    val updates = m.matchedActions.collect { case UpdateAction(None, as, false) => as }
+    val inserts = m.notMatchedActions.collect { case InsertAction(None, as) => as }
+    require(deletes.length <= 1 && deletes.length + updates.length == m.matchedActions.length &&
+      inserts.length == m.notMatchedActions.length && inserts.length <= 1 &&
+      m.notMatchedBySourceActions.isEmpty,
+      "unsupported MERGE shape: graft takes one WHEN MATCHED [AND cond] THEN DELETE, one " +
+        "unconditional UPDATE SET list and one unconditional INSERT (cols) VALUES, and no " +
+        s"NOT MATCHED BY SOURCE:\n$sql")
+    ParsedMerge(target, source, keys,
+      updates.headOption.map(assignments).getOrElse(Map.empty), inserts.headOption.map(assignments),
+      deletes.headOption.map(value), subquery)
+  }
 
-  private def parseNoDelete(sql: String): ParsedMerge = sql match {
-    case MergePattern(target, tAlias0, source, sAlias0, onClause, setClause, insCols, insVals) =>
-      val tAlias = Option(tAlias0).getOrElse(target.split("\\.").last)
-      val sAlias = Option(sAlias0).getOrElse(source.split("\\.").last)
-      val keys = onClause.split("(?i)\\s+AND\\s+").toIndexedSeq.map { eq =>
-        val sides = eq.split("=").map(_.trim)
-        require(sides.length == 2, s"ON clause must be equalities: $eq")
-        val (l, r) = (sides(0), sides(1))
-        val lcol = stripQualifier(l, tAlias, sAlias)
-        val rcol = stripQualifier(r, tAlias, sAlias)
-        require(lcol == rcol,
-          s"ON equality must join the same column name on both sides, got $l = $r")
-        lcol
-      }
-      val matched = Option(setClause).map(splitTopLevel(_, ',').map { a =>
-        val i = a.indexOf('=')
-        require(i > 0, s"bad SET assignment: $a")
-        stripQualifier(a.take(i).trim, tAlias, sAlias) -> a.drop(i + 1).trim
-      }.toMap)
-      val insert = (Option(insCols), Option(insVals)) match {
-        case (Some(cs), Some(vs)) =>
-          val cols = cs.split(",").toIndexedSeq.map(c => stripQualifier(c.trim, tAlias, sAlias))
-          val vals = splitTopLevel(vs, ',').map(_.trim)
-          require(cols.length == vals.length,
-            s"INSERT has ${cols.length} columns but ${vals.length} values")
-          Some((cols, vals))
+  /** Replace `USING ( … )` with the placeholder source name; returns the
+    * rewritten sql and the extracted subquery text. */
+  private def extractUsingSubquery(sql: String): (String, Option[String]) = {
+    val toks = SqlScanner.tokens(sql)
+    def opensParen(i: Int) = toks.lift(SqlScanner.next(toks, i)).exists(_.is('('))
+    toks.indices.find(i => toks(i).depth == 0 && toks(i).is("using") && opensParen(i)) match {
+      case None => (sql, None)
+      case Some(i) =>
+        val open = SqlScanner.next(toks, i)
+        val close = SqlScanner.closing(toks, open)
+        require(close >= 0, s"unbalanced parens in USING subquery:\n$sql")
+        (sql.substring(0, toks(open).start) + s" $SubquerySource " + sql.substring(toks(close).end),
+          Some(sql.substring(toks(open).end, toks(close).start).trim))
+    }
+  }
+
+  /** Reorder the WHEN clauses MATCHED, NOT MATCHED [BY TARGET], NOT
+    * MATCHED BY SOURCE, keeping their order within each group. A clause
+    * starts at a top-level `WHEN [NOT] MATCHED` outside any CASE. */
+  private def regroupWhenClauses(sql: String): String = {
+    val toks = SqlScanner.tokens(sql).filter(t => t.kind == SqlScanner.Word && t.depth == 0)
+    def word(i: Int) = toks.lift(i).map(_.text.toLowerCase).getOrElse("")
+    var caseDepth = 0
+    val starts = toks.indices.flatMap { i =>
+      if (toks(i).is("case")) caseDepth += 1
+      if (toks(i).is("end")) caseDepth -= 1
+      if (caseDepth != 0 || !toks(i).is("when")) None
+      else (word(i + 1), word(i + 2), word(i + 3), word(i + 4)) match {
+        case ("matched", _, _, _) => Some(toks(i).start -> 0)
+        case ("not", "matched", "by", "source") => Some(toks(i).start -> 2)
+        case ("not", "matched", _, _) => Some(toks(i).start -> 1)
         case _ => None
       }
-      ParsedMerge(target, source, tAlias, sAlias, keys, matched, insert)
-    case _ => throw new IllegalArgumentException(s"unsupported MERGE shape:\n$sql")
-  }
-
-  /** Split on `sep` ignoring separators inside parentheses or quotes. */
-  private[sql] def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { ch =>
-      if (quote != 0) { cur += ch; if (ch == quote) quote = 0 }
-      else ch match {
-        case '\'' | '"' => quote = ch; cur += ch
-        case '(' => depth += 1; cur += ch
-        case ')' => depth -= 1; cur += ch
-        case `sep` if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += ch
-      }
     }
-    if (cur.nonEmpty) out += cur.toString
-    out.result()
+    if (starts.isEmpty) sql
+    else {
+      val bounds = starts.map(_._1) :+ sql.length
+      val clauses = starts.indices.map(k => starts(k)._2 -> sql.substring(bounds(k), bounds(k + 1)).trim)
+      sql.substring(0, bounds.head) + clauses.sortBy(_._1).map(_._2).mkString("\n")
+    }
   }
 
-  private def stripQualifier(c: String, tAlias: String, sAlias: String): String = {
-    val p = c.split("\\.")
-    if (p.length == 2 && (p(0).equalsIgnoreCase(tAlias) || p(0).equalsIgnoreCase(sAlias))) p(1)
-    else if (p.length == 1) p(0)
-    else c
-  }
-
-  /** Rewrite t./s. qualifiers to the Merge-internal aliases and parse
-    * with Spark's expression parser. */
-  private def toColumn(raw: String, pm: ParsedMerge): Column = {
-    val rewritten = raw
-      .replaceAll(s"(?i)\\b${pm.targetAlias}\\.", s"${Merge.T}.")
-      .replaceAll(s"(?i)\\b${pm.sourceAlias}\\.", s"${Merge.S}.")
-    expr(rewritten)
+  /** Every table or view a query reads, including those read by its
+    * subquery expressions and CTE definitions (QUALIFY is rewritten
+    * first, so any query [[GraftSql]] runs can be read). */
+  private[sql] def relations(query: String): Seq[String] = {
+    def of(plan: LogicalPlan): Seq[String] = plan.collectWithSubqueries {
+      case r: UnresolvedRelation => Seq(r.multipartIdentifier.mkString("."))
+      case w: UnresolvedWith => w.cteRelations.flatMap(c => of(c._2))
+    }.flatten
+    of(parsePlan(GraftSql.rewriteQualify(query)))
   }
 
   /** Execute against DataFrames (target/source resolved by caller).
@@ -176,18 +180,16 @@ object MergeSql {
     * a missing WHEN MATCHED leaves matched target rows unchanged; a
     * missing WHEN NOT MATCHED drops source-only rows. */
   def execute(target: DataFrame, source: DataFrame, pm: ParsedMerge,
-      insertFallback: Map[String, Column] = Map.empty): DataFrame = {
-    val matchedSet = Some(pm.matchedSet
-      .map(_.map { case (c, raw) => c -> toColumn(raw, pm) })
-      .getOrElse(Map.empty[String, Column])) // no branch: keep target values
-    val insertSet = pm.insertCols.map { case (cols, vals) =>
-      cols.zip(vals.map(toColumn(_, pm))).toMap
-    }
-    val src = if (pm.insertCols.isDefined) source
-      else source.join(target.select(pm.keys.map(col): _*).distinct(), pm.keys, "left_semi")
-    Merge.upsert(target, src, pm.keys, matchedSet, insertSet,
-      pm.matchedDelete.map(toColumn(_, pm)), insertFallback)
-  }
+      insertFallback: Map[String, Column] = Map.empty): DataFrame =
+    Merge.upsert(target, insertable(pm, source, target), pm.keys, Some(pm.matchedSet), pm.insert,
+      pm.matchedDelete, insertFallback)
+
+  /** Without a WHEN NOT MATCHED branch, source-only rows are dropped up
+    * front (they never reach the merge; the target scan is pruned to the
+    * key columns). */
+  private def insertable(pm: ParsedMerge, source: DataFrame, target: DataFrame): DataFrame =
+    if (pm.insert.isDefined) source
+    else source.join(target.select(pm.keys.map(col): _*).distinct(), pm.keys, "left_semi")
 
   /** Execute a MERGE INTO statement against store tables: target must be
     * a store table; source may be a store table or a registered temp
@@ -217,18 +219,8 @@ object MergeSql {
       source: DataFrame): Unit = {
     val storeKeys = if (store.exists(pm.target)) store.keysOf(pm.target) else Nil
     if (storeKeys.nonEmpty && storeKeys.toSet == pm.keys.toSet) {
-      val matchedSet = Some(pm.matchedSet
-        .map(_.map { case (c, raw) => c -> toColumn(raw, pm) })
-        .getOrElse(Map.empty[String, Column])) // no branch: keep target values
-      val insertSet = pm.insertCols.map { case (cols, vals) =>
-        cols.zip(vals.map(toColumn(_, pm))).toMap
-      }
-      // no WHEN NOT MATCHED branch: drop source-only rows up front (the
-      // anti-rows never reach the merge; scan is pruned to the key columns)
-      val src = if (pm.insertCols.isDefined) source
-        else source.join(store.read(pm.target).select(pm.keys.map(col): _*).distinct(), pm.keys, "left_semi")
-      store.merge(pm.target, src, matchedSet, insertSet, alignSource = false,
-        whenMatchedDelete = pm.matchedDelete.map(toColumn(_, pm)))
+      store.merge(pm.target, insertable(pm, source, store.read(pm.target)), Some(pm.matchedSet),
+        pm.insert, alignSource = false, whenMatchedDelete = pm.matchedDelete)
     } else {
       // keyless target: full compute-and-overwrite; column DEFAULTs still
       // apply to the insert branch (autoinc is filled by the store write)

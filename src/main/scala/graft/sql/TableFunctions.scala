@@ -212,30 +212,38 @@ import graft.store.TableStore
 object TableFunctions {
 
   private val viewCounter = new AtomicInteger(0)
-  private val CallStart = """(?i)\bTABLE\s*\(\s*(graft_\w+)\s*\(""".r
 
-  /** Rewrite every `TABLE(graft_*(…))` call in `sql` to a temp view over
-    * the evaluated operator; returns the statement with calls replaced.
-    * Statements without calls pass through untouched (single regex probe,
-    * no per-statement cost). */
+  /** Rewrite every `TABLE(graft_*(…))` call in `sql` (outside literals
+    * and comments) to a temp view over the evaluated operator; returns the
+    * statement with calls replaced. Statements without calls pass through
+    * untouched. */
   def rewrite(spark: SparkSession, store: TableStore,
-      session: Option[GraftSession], sql: String): String =
-    CallStart.findFirstMatchIn(sql) match {
+      session: Option[GraftSession], sql: String): String = {
+    val toks = SqlScanner.tokens(sql)
+    def after(i: Int) = SqlScanner.next(toks, i)
+    def tok(i: Int) = toks.lift(i)
+    // `TABLE ( graft_fn (`
+    def isCall(i: Int) = toks(i).is("table") && tok(after(i)).exists(_.is('(')) &&
+      tok(after(after(i))).exists(t => t.kind == SqlScanner.Word && t.text.toLowerCase.startsWith("graft_")) &&
+      tok(after(after(after(i)))).exists(_.is('('))
+    toks.indices.find(isCall) match {
       case None => sql
-      case Some(m) =>
-        val argsStart = m.end
-        val argsEnd = closingParen(sql, argsStart)
-        var j = argsEnd + 1
-        while (j < sql.length && sql(j).isWhitespace) j += 1
-        require(j < sql.length && sql(j) == ')',
-          s"malformed TABLE(${m.group(1)}(…)) call: missing closing paren")
-        val fn = m.group(1).toLowerCase
-        val args = MergeSql.splitTopLevel(sql.substring(argsStart, argsEnd), ',')
+      case Some(call) =>
+        val fnName = toks(after(after(call)))
+        val argsOpen = after(after(after(call)))
+        val argsClose = SqlScanner.closing(toks, argsOpen)
+        if (argsClose < 0) sys.error(s"malformed table-function call (unbalanced parens): $sql")
+        val callClose = after(argsClose)
+        require(tok(callClose).exists(_.is(')')),
+          s"malformed TABLE(${fnName.text}(…)) call: missing closing paren")
+        val fn = fnName.text.toLowerCase
+        val args = SqlScanner.splitTopLevel(
+          sql.substring(toks(argsOpen).end, toks(argsClose).start), ',')
           .map(_.trim).filter(_.nonEmpty)
         val df0 = eval(spark, store, session, fn, args)
         // temp views are SESSION-scoped: an op may hand back a frame
         // bound to a child session (the TinyLoop iteration sessions —
-        // pagerank, CC), and registering the view there would make the
+        // pagerank, BPE rounds), and registering the view there would make the
         // statement's own session unable to resolve it. Rebind such a
         // frame onto the statement's session through the Row API (the
         // results here are bounded op outputs).
@@ -244,28 +252,8 @@ object TableFunctions {
         val view = s"__tf_${fn}_${viewCounter.incrementAndGet()}"
         df.createOrReplaceTempView(view)
         rewrite(spark, store, session,
-          sql.substring(0, m.start) + view + sql.substring(j + 1))
+          sql.substring(0, toks(call).start) + view + sql.substring(toks(callClose).end))
     }
-
-  /** Index of the ')' closing the paren just before `from`, respecting
-    * single-quoted strings (with '' escapes) and nested parens. */
-  private def closingParen(sql: String, from: Int): Int = {
-    var depth = 1
-    var inStr = false
-    var i = from
-    while (i < sql.length) {
-      val c = sql(i)
-      if (inStr) {
-        if (c == '\'') inStr = false // a doubled '' re-enters on the next quote
-      } else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    sys.error(s"malformed table-function call (unbalanced parens): $sql")
   }
 
   private def eval(spark: SparkSession, store: TableStore,

@@ -1550,7 +1550,10 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * visible to custom `whenMatchedSet` / `whenNotMatchedInsert`
     * expressions (the SQL MERGE path, where value exprs may reference any
     * source column); key columns are still cast to the target types so the
-    * bucket hash matches the table's bucketing. */
+    * bucket hash matches the table's bucketing. Without `whenMatchedSet`,
+    * matched rows take the non-key columns the caller's source has;
+    * columns the alignment pads in (autoincrement keys, DEFAULTs) keep
+    * their target values and fill only inserted rows. */
   def merge(table: String, source: DataFrame,
       whenMatchedSet: Option[Map[String, org.apache.spark.sql.Column]] = None,
       whenNotMatchedInsert: Option[Map[String, org.apache.spark.sql.Column]] = None,
@@ -1566,6 +1569,9 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
           .filter(f => keys.contains(f.name)).map(f => f.name -> f.dataType).toMap
         keyTypes.foldLeft(source) { case (df, (k, dt)) => df.withColumn(k, col(k).cast(dt)) }
       }
+    val given = source.columns.toSet
+    val matchedSet = whenMatchedSet.orElse(Some(schemaOf(table).fieldNames
+      .filter(c => given(c) && !keys.contains(c)).map(c => c -> Merge.src(c)).toMap))
     // a lost commit race recomputes the WHOLE merge against the winner's
     // output (the upsert read the base version's bucket contents, which
     // the winner may have changed) — serializable, last writer rebases
@@ -1579,7 +1585,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     // column DEFAULTs act as the insert-branch fallback (autoinc cols stay
     // null through the merge and are filled below, past the global max)
     val insertDefaults = defaultsOf(table).map { case (c, e) => c -> expr(e) }
-    val merged = fillAutoInc(table, Merge.upsert(touched, alignedSrc, keys, whenMatchedSet,
+    val merged = fillAutoInc(table, Merge.upsert(touched, alignedSrc, keys, matchedSet,
       whenNotMatchedInsert, whenMatchedDelete, insertDefaults, emitAction = true), base)
 
     val newEntries = writeBatch(table, base + 1, merged)

@@ -904,4 +904,21 @@ class TableStoreSpec extends AnyFunSuite {
     assert(store.scanWhere("t", col("v") === 0.0).inputFiles.length <
       all.inputFiles.length, "sound double pruning must still prune")
   }
+
+  test("API merge with the default SET keeps matched rows' autoincrement key and DEFAULT") {
+    val store = freshStore()
+    val sch = StructType(Seq(StructField("sk", LongType), StructField("id", StringType),
+      StructField("v", StringType), StructField("added_ts", TimestampType)))
+    store.createTable("dh", sch, keys = Seq("id"),
+      defaults = Map("added_ts" -> "current_timestamp()"), autoInc = Seq("sk"))
+    store.merge("dh", Seq(("a", "1"), ("b", "2")).toDF("id", "v"))
+    def row(id: String) = store.read("dh").filter($"id" === id)
+      .select("sk", "v", "added_ts").as[(Long, String, java.sql.Timestamp)].head()
+    val a0 = row("a")
+    Thread.sleep(20) // a reset added_ts would differ
+    store.merge("dh", Seq(("a", "1b"), ("c", "3")).toDF("id", "v"))
+    assert(row("a") == ((a0._1, "1b", a0._3)), "matched row keeps its key and DEFAULT")
+    val c = row("c")
+    assert(c._1 == 3L && c._3 != null, "inserted row gets a fresh key and its DEFAULT")
+  }
 }
