@@ -8,7 +8,7 @@ object Bench {
     // partitions); rounds ≤11 ran the v0 stub default of 4 — the env
     // block in the JSON records sparkCpus per run, so cross-round
     // totals are comparable only at equal sparkCpus
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // min-of-3 by default: at 0.2–1 s query scale, min-of-2 showed ±8%
     // swings on untouched queries between rounds (r7→r8), which can mask
     // a real regression; a third sample cuts the drift to <3%.
@@ -17,17 +17,7 @@ object Bench {
     // report per-pass totals — the regression guard for cache-lifecycle
     // bugs (a leaked cache shows up as monotonic pass-over-pass growth)
     val soak = sys.env.getOrElse("SPARK_GRAFT_BENCH_SOAK", "1").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true") // explicit AQE posture
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.sparkSession(cpus)
     // noop sink: forces FULL materialization of every output column —
     // count() would let Catalyst prune the aggregate/projection work and
     // understate timings

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.CountDownLatch
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.cdc.ChangeStream
@@ -30,18 +29,8 @@ object ConcurrentScale {
     val sfDir = if (args.length > 0) args(0) else "/tmp/graft_sf1"
     val cycles = if (args.length > 1) args(1).toInt else 3
     val buckets = if (args.length > 2) args(2).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.sparkSession(cpus)
 
     val root = java.nio.file.Files.createTempDirectory("graft_conc_scale")
     val store = new TableStore(spark, root.resolve("store").toString, numBuckets = buckets)

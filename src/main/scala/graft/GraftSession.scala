@@ -246,4 +246,28 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16) 
 object GraftSession {
   def apply(spark: SparkSession, root: String, numBuckets: Int = 16): GraftSession =
     new GraftSession(spark, root, numBuckets)
+
+  /** The one place graft's Spark session shape is defined; every main and
+    * the test session start here. `local[cores]` with one shuffle
+    * partition per core, UTC session time (the reference warehouse's
+    * posture), AQE with skew-join splitting on, graft's Catalyst
+    * extensions ([[graft.spark.GraftExtensions]]: the native `graft_*`
+    * expressions and the pruning rules), `nanosAsLong` so the events
+    * table's nanosecond timestamps load (see [[Tables.events]]), no UI,
+    * WARN logging. Idempotent: `getOrCreate` returns the running session
+    * when there is one. */
+  def sparkSession(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Round-20 measurement harness (optimization guide §1): run named
   * queries with warm artifacts and report, per query, the per-stage
@@ -19,19 +18,9 @@ import org.apache.spark.sql.SparkSession
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROF_ITERS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.sparkSession(cpus)
 
     case class StageRow(id: Int, name: String, wallMs: Long, taskMs: Long,
         tasks: Int, maxTaskMs: Long, inputMB: Double, srMB: Double, swMB: Double)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bot-skew A/B for the per-user event operators (SCALE.md): a synthetic
@@ -22,16 +22,8 @@ object SkewScale {
   def main(args: Array[String]): Unit = {
     val users = if (args.length > 0) args(0).toInt else 200000
     val botEvents = if (args.length > 1) args(1).toInt else 1000000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.sparkSession(cpus)
 
     val types = array(lit("signup"), lit("click"), lit("purchase"),
       lit("view"), lit("search"))
@@ -47,7 +39,7 @@ object SkewScale {
         element_at(types, (pmod(xxhash64(col("id")), lit(3)) + 1).cast("int")).as("event_type"),
         timestamp_micros(lit(1700000000000000L) + col("id") * 1000L).as("ts"))
     val ev = normal.unionByName(bot)
-      .repartition(cpus.toInt).localCheckpoint(true) // fix the input out of the timing
+      .repartition(cpus).localCheckpoint(true) // fix the input out of the timing
     println(s"[skew] events=${ev.count()} users=${users + 1} bot=$botEvents")
 
     def time(label: String)(f: => Long): Unit = {
@@ -192,7 +184,7 @@ object SkewScale {
               col("id").cast("string")))
           .otherwise(concat(lit("http://host-"), (col("id") % 9973).cast("string"),
             lit(".example.org/p/"), col("id").cast("string"))).as("url"))
-      .repartition(cpus.toInt).localCheckpoint(true)
+      .repartition(cpus).localCheckpoint(true)
     def urlChecksum(df: DataFrame): (Long, Long) = {
       // modular sum: 1.2 M rows × (hash mod 1e9+7) stays < 2^63 (a raw
       // sum(xxhash64) overflows LongType under ANSI)

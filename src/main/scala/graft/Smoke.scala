@@ -1,22 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Replicates the driver's t1 smoke: SparkEntry.entry must return >0 rows
   * on sf0.001. Run: sbt "runMain graft.Smoke" */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true") // explicit AQE posture
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.sparkSession(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"ENTRY_ROWS=$n COLS=${df.columns.mkString(",")}")

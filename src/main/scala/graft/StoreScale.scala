@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.store.TableStore
@@ -21,15 +20,7 @@ object StoreScale {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf5")
     val root = sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store_scale")
     val buckets = sys.env.getOrElse("SPARK_GRAFT_STORE_BUCKETS", "512").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.sparkSession(32)
 
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)

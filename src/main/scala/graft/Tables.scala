@@ -60,14 +60,15 @@ object Tables {
 
   /** events.parquet's `ts` physical type has varied across harness data
     * generations: TIMESTAMP(NANOS) (readable only as int64 via
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set by all graft
-    * sessions), naive TIMESTAMP(MICROS) (isAdjustedToUTC=false, which
-    * Spark 4 infers as TIMESTAMP_NTZ — a type `unix_micros`/`window`
-    * reject), and UTC-adjusted micros (plain TimestampType). This loader
-    * normalizes all three to session-local TimestampType at microsecond
-    * precision. All graft sessions pin the session timezone to UTC, so
-    * the NTZ→LTZ cast reinterprets the same wall-clock digits DuckDB's
-    * naive reader sees — epoch micros agree bit-for-bit in the oracle. */
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, which
+    * [[GraftSession.sparkSession]] sets), naive TIMESTAMP(MICROS)
+    * (isAdjustedToUTC=false, which Spark 4 infers as TIMESTAMP_NTZ — a
+    * type `unix_micros`/`window` reject), and UTC-adjusted micros (plain
+    * TimestampType). This loader normalizes all three to session-local
+    * TimestampType at microsecond precision. That factory also pins the
+    * session timezone to UTC, so the NTZ→LTZ cast reinterprets the same
+    * wall-clock digits DuckDB's naive reader sees — epoch micros agree
+    * bit-for-bit in the oracle. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val df = load(spark, dir, "events")
     df.schema("ts").dataType match {

@@ -41,17 +41,35 @@ object TinyLoop {
 
   private val sessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
 
+  /** The child session of `spark`, synced to the parent's CURRENT
+    * runtime confs on every bind. `newSession()` copies only build-time
+    * options and the child is memoized, so without the sync a conf set
+    * on the parent later (`spark.graft.reliableCheckpoint`, the session
+    * time zone, ANSI) would never reach the loop. Synced: every
+    * modifiable SQL conf plus every `spark.graft.*` key (graft's own
+    * keys are not registered with Spark, so `isModifiable` is false for
+    * them); keys the parent no longer has are unset; [[Overrides]] win
+    * over the parent's values. */
   private[graft] def session(spark: SparkSession): SparkSession =
     sessions.synchronized {
       var s = sessions.get(spark)
       if (s == null) {
         s = spark.newSession()
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        s.conf.set("spark.sql.shuffle.partitions", "1")
         sessions.put(spark, s)
       }
+      def synced(conf: Map[String, String]) = conf.filter { case (k, _) =>
+        k.startsWith("spark.graft.") || spark.conf.isModifiable(k)
+      }
+      val want = synced(spark.conf.getAll) ++ Overrides
+      for ((k, v) <- want if !s.conf.getOption(k).contains(v)) s.conf.set(k, v)
+      for (k <- synced(s.conf.getAll).keys if !want.contains(k)) s.conf.unset(k)
       s
     }
+
+  /** The loop's execution settings: AQE off, one shuffle partition. */
+  private val Overrides = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "1")
 
   /** Rebind an (already materialized, lineage-cut) frame to the
     * tiny-loop session iff it is observed tiny; otherwise return it

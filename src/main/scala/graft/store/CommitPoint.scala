@@ -25,12 +25,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    hard fence coordinate through the JVM-level striped locks the
   *    store already takes; the cross-JVM specs intentionally exercise
   *    the unfenced window.
-  *  - '''Object stores (S3A and friends), default creator''': plain
-  *    `create(false)` is check-then-create (a HEAD then a PUT), NOT
-  *    atomic. The token read-back closes most of the window — two
-  *    interleaved creators each verify against the LAST content
-  *    written, so at most one (possibly zero) sees its own bytes and
-  *    wins; a zero-winner version is an mtime-quiet corpse both
+  *  - '''Object stores without a conditional write''': the
+  *    [[AtomicCreate]] fallback's `create(false)` is check-then-create
+  *    (a HEAD then a PUT), NOT atomic. The token read-back closes most
+  *    of the window — two interleaved creators each verify against the
+  *    LAST content written, so at most one (possibly zero) sees its own
+  *    bytes and wins; a zero-winner version is an mtime-quiet corpse both
   *    protocols already break ([[TableStore.awaitBaseAdvance]],
   *    [[Artifacts.publish]]'s stale-claim break). The residual —
   *    reader A read-back-verifies BEFORE writer B's overwriting PUT
@@ -38,8 +38,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    store-side fence to close fully (CommitPointSpec's
   *    overwrite-after-read-back arm demonstrates the residual is
   *    real).
-  *  - '''Object stores, [[ConditionalCreate]]''': the store-side fence
-  *    — the create carries the filesystem's conditional-write option
+  *  - '''Object stores with a conditional write''': the store-side
+  *    fence — [[ConditionalCreate]], the one creator, makes the create
+  *    carry the filesystem's conditional-write option
   *    (`fs.option.create.conditional.overwrite`, Hadoop 3.4.2+
   *    `Options.CreateFileOptionKeys`; S3A maps it to an
   *    `If-None-Match: *` PUT, native on S3 since 2024 and on
@@ -47,13 +48,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    the store, not by a stale HEAD. A late overwriting PUT is
   *    rejected by the store itself; the read-back stays as a cheap
   *    invariant check. Filesystems that don't understand the option
-  *    fall back to [[AtomicCreate]] (correct on HDFS/POSIX, where
-  *    `create(false)` is already `O_EXCL`). Select with
-  *    `spark.graft.store.conditionalCreate=true` (read at
-  *    [[TableStore]] construction) or install directly via
-  *    [[CommitPoint.install]]; an external coordinator
-  *    (DynamoDB-style, as S3-era Delta used) remains the alternative
-  *    for stores with no conditional write at all.
+  *    (the local filesystem among them) fall back to [[AtomicCreate]]
+  *    on each create; an external coordinator (DynamoDB-style, as
+  *    S3-era Delta used) remains the alternative for stores with no
+  *    conditional write at all.
   *
   * The `creator` seam is also how the protocol is TESTED: specs inject
   * a deliberately non-atomic check-then-create ([[withCreator]]) and
@@ -71,9 +69,10 @@ object CommitPoint {
     def createIfAbsent(fs: FileSystem, p: Path, bytes: Array[Byte]): Boolean
   }
 
-  /** Production creator: `create(overwrite = false)` — atomic on
+  /** Exclusive create: `create(overwrite = false)` — atomic on
     * HDFS/POSIX, check-then-create on S3A (see the object scaladoc for
-    * why the read-back still bounds that). */
+    * why the read-back still bounds that). [[ConditionalCreate]]'s
+    * fallback. */
   object AtomicCreate extends Creator {
     override def createIfAbsent(fs: FileSystem, p: Path,
         bytes: Array[Byte]): Boolean =
@@ -94,9 +93,11 @@ object CommitPoint {
     * is conditional (exclusivity decided by the store at PUT time — the
     * fence), on HDFS/POSIX the exclusive create is already atomic, and
     * a filesystem that rejects the option falls back to
-    * [[AtomicCreate]]. An IOException from the conditional build/write/
-    * close path is a LOST RACE (the store refused the PUT because the
-    * object exists), exactly like a failed exclusive create. */
+    * [[AtomicCreate]]. The create is recursive (missing parent dirs are
+    * made), as the fallback's is. An IOException from the conditional
+    * build/write/close path is a LOST RACE (the store refused the PUT
+    * because the object exists), exactly like a failed exclusive
+    * create. Every commit goes through it. */
   object ConditionalCreate extends Creator {
     // Options.CreateFileOptionKeys lives in hadoop-common 3.4.2+; keep
     // the literal in sync with the constant (binding to the interface
@@ -109,7 +110,7 @@ object CommitPoint {
         bytes: Array[Byte]): Boolean = {
       val built =
         try {
-          val b = fs.createFile(p).overwrite(false)
+          val b = fs.createFile(p).overwrite(false).recursive()
           b.must(ConditionalOverwriteKey, true)
           Some(b.build())
         } catch {
@@ -130,16 +131,7 @@ object CommitPoint {
     }
   }
 
-  private val creator = new AtomicReference[Creator](AtomicCreate)
-
-  /** Install a creator process-wide — the production switch for
-    * object-store deployments (`install(ConditionalCreate)`;
-    * [[TableStore]] does this when
-    * `spark.graft.store.conditionalCreate=true`). Both protocols
-    * (manifest commit, claim lease) go through it. */
-  def install(c: Creator): Unit = creator.set(c)
-
-  private[graft] def installed: Creator = creator.get()
+  private val creator = new AtomicReference[Creator](ConditionalCreate)
 
   /** Swap the creator for the duration of `body` — test-only seam for
     * injecting non-atomic creates. Global (both protocols see it),

@@ -37,11 +37,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * `spark.graft.joinPrune.minFactBytes` (default 32 MiB — the probe is
   * a driver-side job paid at plan time, so it only fires where pruning
   * a large scan can repay it; set 0 to probe unconditionally); the
-  * build side must be deterministic, estimated under
-  * `spark.graft.joinPrune.maxBuildBytes` (default 8 MiB), and yield at
-  * most `maxKeys` distinct keys (one column-pruned distinct-limit job,
-  * memoized per canonicalized build plan — AQE re-optimizations and
-  * repeated queries of the same dim pay once per session). A build side
+  * build side must be deterministic, estimated under [[MaxBuildBytes]]
+  * (8 MiB), and yield at most `maxKeys` distinct keys (one
+  * column-pruned distinct-limit job, memoized per canonicalized build
+  * plan — AQE re-optimizations and repeated queries of the same dim pay
+  * once per session). A build side
   * OVER the `maxKeys` budget degrades to a [[Span]] probe — the key's
   * [min, max] from one more small agg — so mid-cardinality dims with a
   * selective key RANGE (a date-restricted surrogate range, a tenant's
@@ -54,7 +54,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
 
   val EnabledConf = "spark.graft.joinPrune.enabled"
-  val MaxBuildBytesConf = "spark.graft.joinPrune.maxBuildBytes"
+  /** Largest estimated build side the rule will probe. */
+  val MaxBuildBytes = BigInt(8L * 1024 * 1024)
   val MaxKeysConf = "spark.graft.joinPrune.maxKeys"
   val MinFactBytesConf = "spark.graft.joinPrune.minFactBytes"
 
@@ -121,8 +122,6 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def tryPrune(j: Join): Option[LogicalPlan] = {
-    val maxBuildBytes = BigInt(
-      conf.getConfString(MaxBuildBytesConf, (8L * 1024 * 1024).toString).toLong)
     // benefit gate: the probe is a driver-side job paid at PLAN time, so
     // it must only fire when the prunable scan is large enough that
     // skipping files can repay it — a fact under a few tens of MiB costs
@@ -137,7 +136,7 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
       for {
         rel <- storeScanOf(fact)
         if prunablePosition(j, factOnLeft)
-        if build.stats.sizeInBytes <= maxBuildBytes
+        if build.stats.sizeInBytes <= MaxBuildBytes
         if build.deterministic
         hfs = rel.relation.asInstanceOf[HadoopFsRelation]
         if BigInt(hfs.location.sizeInBytes) >= minFactBytes
@@ -234,7 +233,7 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
         else if (!spanSafe(attr.dataType)) Unknown
         else {
           // over the IN-list budget: fall back to the key's span — one
-          // more small agg on the same ≤ maxBuildBytes side (min/max
+          // more small agg on the same ≤ MaxBuildBytes side (min/max
           // aggs skip nulls, and null build keys never equi-match)
           import org.apache.spark.sql.functions.{max => fmax, min => fmin}
           val c = d.col(d.columns.head)

@@ -67,13 +67,6 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
 
-  // object-store deployments opt into the store-side commit fence
-  // (conditional PUT; falls back to the exclusive create elsewhere) —
-  // process-wide by design: the commit point is one seam, not per-table
-  if (spark.conf.get("spark.graft.store.conditionalCreate", "false").toBoolean) {
-    CommitPoint.install(CommitPoint.ConditionalCreate)
-  }
-
   private def tdir(t: String) = new Path(root, t)
   private def latestPtr(t: String) = new Path(tdir(t), "_latest")
   private def manifestPath(t: String, v: Long) = new Path(new Path(tdir(t), "_versions"), f"v$v%08d")
@@ -1290,23 +1283,19 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * [[org.apache.spark.sql.catalyst.expressions.aggregate
     * .BloomFilterAggregate]] (the same sketch runtime join filtering
     * uses; codegen'd hash, no UDF). Probe side hashes its literal with
-    * the identical expression ([[StatsPruning]]). Sizing: bits for
-    * `spark.graft.store.bloomFpp` (default 1%) at the batch's largest
-    * file's row count, capped by `spark.graft.store.bloomMaxBits`
-    * (default 2^22 ≈ 512 KiB per file-column). */
+    * the identical expression ([[StatsPruning]]). Sizing: bits for a 1%
+    * false-positive rate at the batch's largest file's row count, capped
+    * at 2^22 bits (512 KiB per file-column). */
   private def bloomLines(schema: StructType, bucketDirs: Seq[String],
       lookups: Seq[String], maxRowsPerFile: Long): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val fpp = spark.conf.getOption("spark.graft.store.bloomFpp")
-      .map(_.toDouble).getOrElse(0.01)
-    val maxBits = spark.conf.getOption("spark.graft.store.bloomMaxBits")
-      .map(_.toLong).getOrElse(1L << 22)
+    val fpp = 0.01
+    val maxBits = 1L << 22
     val est = math.min(4000000L, math.max(1024L, maxRowsPerFile))
     val ln2sq = math.log(2) * math.log(2)
     val numBits = math.max(64L,
-      math.min(math.min(maxBits, 67108864L),
-        math.ceil(est * math.log(1 / fpp) / ln2sq).toLong))
+      math.min(maxBits, math.ceil(est * math.log(1 / fpp) / ln2sq).toLong))
     val fields = StructType(schema.fields
       .filter(f => lookups.exists(_.equalsIgnoreCase(f.name))))
     def bloomAgg(c: String): org.apache.spark.sql.Column =

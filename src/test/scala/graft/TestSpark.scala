@@ -3,17 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (guide: one per suite via lazy
-  * val; sharing across suites is fine since config is identical). */
+  * val; sharing across suites is fine since config is identical), built
+  * by the same factory as every main. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true") // explicit AQE posture
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.sparkSession(4)
 }

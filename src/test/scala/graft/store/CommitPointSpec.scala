@@ -215,24 +215,6 @@ class CommitPointSpec extends AnyFunSuite {
     }
   }
 
-  test("spark.graft.store.conditionalCreate=true installs the conditional creator at store construction") {
-    val prev = CommitPoint.installed
-    try {
-      spark.conf.set("spark.graft.store.conditionalCreate", "true")
-      val root = Files.createTempDirectory("graft_cp_conf").toString
-      val st = new TableStore(spark, root, numBuckets = 2)
-      assert(CommitPoint.installed eq CommitPoint.ConditionalCreate)
-      // the store still commits end-to-end through it
-      st.createTable("t", StructType(Seq(StructField("id", LongType))),
-        keys = Seq("id"))
-      st.append("t", Seq(1L, 2L, 3L).toDF("id"))
-      assert(st.read("t").count() == 3L)
-    } finally {
-      spark.conf.unset("spark.graft.store.conditionalCreate")
-      CommitPoint.install(prev)
-    }
-  }
-
   test("claim lease: two interleaved non-atomic claimers never both hold the lease") {
     val root = Files.createTempDirectory("graft_cp_claim").toString
     val fs = fsOf(root)
