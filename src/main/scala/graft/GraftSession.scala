@@ -141,6 +141,8 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16) 
 
   def createStream(onTable: String, name: String): ChangeStream = {
     val flat = recordName(name)
+    // CREATE OR REPLACE: the replaced stream's offset goes with it
+    streamsReg.get(flat).foreach(_.drop())
     val s = ChangeStream.create(store, recordName(onTable), flat)
     streamsReg(flat) = s
     s
@@ -148,7 +150,7 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16) 
 
   def stream(name: String): ChangeStream = streamsReg(recordName(name))
   def streamOpt(name: String): Option[ChangeStream] = streamsReg.get(recordName(name))
-  def dropStream(name: String): Unit = streamsReg.remove(recordName(name))
+  def dropStream(name: String): Unit = streamsReg.remove(recordName(name)).foreach(_.drop())
   private[graft] def allStreams: Seq[ChangeStream] = streamsReg.values.toSeq
 
   /** SHOW STREAMS (F7): name, source table, consumed-through version,

@@ -15,13 +15,20 @@ import graft.store.TableStore
   * consuming body completes (SURVEY.md §7 hard parts — a failed merge must
   * not consume the stream).
   *
+  * A version's change rows live where its commit wrote them once
+  * ([[TableStore.changeSourcesOf]]): an APPEND, UPDATE or DELETE writes
+  * a `_changes` batch; a MERGE or INSERT OVERWRITE marks the rows of its
+  * own data batch instead (a MERGE's deleted rows still go to a
+  * `_changes` batch).
+  *
   * Scale: hasData short-circuits on the version counter (pure pointer
-  * read); only when versions are pending does it look at the pending
-  * change batches, and then only at their parquet footers' row counts,
-  * read without a Spark job (a gate runs every scheduler tick). A
-  * footer it cannot read falls back to a limit-1 Spark probe (isEmpty ⇒
-  * take(1), not a full scan). read unions only the pending change
-  * batches, never the base table.
+  * read); only when versions are pending does it look at their change
+  * sources, and then only at parquet footers — row counts, minus the
+  * marker's null count in a marked batch — read without a Spark job (a
+  * gate runs every scheduler tick). A footer it cannot read falls back
+  * to a limit-1 Spark probe (isEmpty ⇒ take(1), not a full scan). read
+  * scans only the pending versions' change sources, never the base
+  * table's other batches.
   */
 class ChangeStream(store: TableStore, val table: String, val name: String) {
 
@@ -29,7 +36,7 @@ class ChangeStream(store: TableStore, val table: String, val name: String) {
   def offset: Long = store.readOffset(table, name)
 
   /** system$stream_has_data (F4): non-consuming emptiness check, answered
-    * from the pending change batches' footers (see the class notes). */
+    * from the pending change sources' footers (see the class notes). */
   def hasData: Boolean = {
     val cur = store.currentVersion(table)
     val off = offset
@@ -60,6 +67,10 @@ class ChangeStream(store: TableStore, val table: String, val name: String) {
     * subtlety"). */
   def markConsumed(): Unit =
     store.writeOffset(table, name, store.currentVersion(table))
+
+  /** DROP STREAM: delete the offset, so the table's change sources are no
+    * longer retained for this stream. */
+  def drop(): Unit = store.dropOffset(table, name)
 }
 
 object ChangeStream {

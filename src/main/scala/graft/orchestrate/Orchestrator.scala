@@ -137,7 +137,9 @@ class Orchestrator(spark: SparkSession, store: TableStore, runLogTable: String =
     } finally {
       if (logRows.nonEmpty) {
         import scala.jdk.CollectionConverters._
-        store.append(runLogTable, spark.createDataFrame(logRows.asJava, runLogSchema))
+        // one partition: the few rows commit from one write task
+        store.append(runLogTable,
+          spark.createDataFrame(logRows.asJava, runLogSchema).coalesce(1))
       }
     }
     states.toMap

@@ -3,7 +3,7 @@ package graft.store
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.ops.Merge
 
@@ -20,12 +20,19 @@ import graft.ops.Merge
   *                                                 table's merge keys (or round-robin)
   *   <root>/<table>/_versions/v<version>           manifest: one "bucket\tpath" per line
   *   <root>/<table>/_latest                        pointer file, atomically replaced
-  *   <root>/<table>/_changes/v<version>/           CDC batch (rows + __action)
+  *   <root>/<table>/_changes/c_<token>/            CDC batch (rows + __action) of a version
+  *                                                 whose change rows are not in its data
+  *                                                 batch: APPEND, UPDATE, DELETE, MERGE's
+  *                                                 deleted rows (legacy: _changes/v<version>)
   *   <root>/<table>/_streams/<name>.offset         per-stream consumed version
   * }}}
   *
   * Scale design:
   *  - APPEND writes only the new batch and a new manifest — no data copy.
+  *  - a MERGE or INSERT OVERWRITE writes its rows once: the batch files
+  *    carry each row's action (`__graft_action`, null on carried rows)
+  *    and the manifest names the batch as the version's change source
+  *    ([[changeSourcesOf]]), so no `_changes` copy is written for them.
   *  - MERGE rewrites only the hash buckets the source batch touches;
   *    untouched buckets carry over at manifest level. With B buckets and a
   *    source hitting k of them, a merge costs O(tableSize · k/B) IO instead
@@ -70,7 +77,8 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   private def tdir(t: String) = new Path(root, t)
   private def latestPtr(t: String) = new Path(tdir(t), "_latest")
   private def manifestPath(t: String, v: Long) = new Path(new Path(tdir(t), "_versions"), f"v$v%08d")
-  private def changesDir(t: String, v: Long) = new Path(new Path(tdir(t), "_changes"), f"v$v%08d")
+  private def changesRoot(t: String) = new Path(tdir(t), "_changes")
+  private def changesDir(t: String, v: Long) = new Path(changesRoot(t), f"v$v%08d")
 
   // ---- small-file helpers -------------------------------------------------
 
@@ -280,7 +288,8 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   /** ALTER TABLE RENAME COLUMN: rewrites the table once (read → rename →
     * new bucketed batch, committed as a new version with no change batch).
     * O(table) IO — a column-mapping layer (Iceberg field ids) would make
-    * this metadata-only; documented trade-off, rename is rare. */
+    * this metadata-only; documented trade-off, rename is rare. Change rows
+    * a stream has pending are rewritten under the new name too. */
   def renameColumn(table: String, from: String, to: String): Unit = synchronized {
     val schema = schemaOf(table)
     require(schema.fieldNames.exists(_.equalsIgnoreCase(from)), s"no column $from on $table")
@@ -301,25 +310,26 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     // rename is maintenance and replaces the whole table, so a write
     // landing mid-rename is superseded exactly as before the protocol
     val entries = writeBatch(table, currentVersion(table) + 1, renamed)
-    commitLoop(table)(_ => (entries, None, -1))
+    commitLoop(table)(_ => Commit(entries))
     // rewrite pending change batches: [[readChanges]] selects by NAME
     // against the NEW schema, so an un-rewritten batch from before the
     // rename would silently surface null for the renamed column to any
     // stream that hasn't consumed it yet
-    val chRoot = new Path(tdir(table), "_changes")
+    val chRoot = changesRoot(table)
+    val batchName = "v\\d+|c_[0-9a-f]+|b\\d+_[0-9a-f]+"
     if (fs.exists(chRoot)) {
       // leftovers from a crashed earlier rewrite: restore the original
       // batch from .bak (a .tmp may be incomplete — never promote it) and
       // discard stale .tmp dirs; the loop below then redoes the rewrite
       fs.listStatus(chRoot).foreach { st =>
         val name = st.getPath.getName
-        if (name.matches("(v\\d+|c_[0-9a-f]+)\\.bak")) {
+        if (name.matches(s"($batchName)\\.bak")) {
           val orig = new Path(chRoot, name.stripSuffix(".bak"))
           if (fs.exists(orig)) fs.delete(st.getPath, true) else fs.rename(st.getPath, orig)
           ()
-        } else if (name.matches("(v\\d+|c_[0-9a-f]+)\\.tmp")) { fs.delete(st.getPath, true); () }
+        } else if (name.matches(s"($batchName)\\.tmp")) { fs.delete(st.getPath, true); () }
       }
-      fs.listStatus(chRoot).filter(_.getPath.getName.matches("v\\d+|c_[0-9a-f]+")).foreach { st =>
+      fs.listStatus(chRoot).filter(_.getPath.getName.matches(batchName)).foreach { st =>
         val df = spark.read.parquet(st.getPath.toString)
         if (df.columns.exists(_.equalsIgnoreCase(from))) {
           // tmp → bak → swap: the original batch survives any crash point
@@ -333,6 +343,19 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
           ()
         }
       }
+    }
+    // pending marked batches: their files keep the old name, so each one's
+    // change rows become the plain batch `_changes/<batch dir name>` (which
+    // [[changeSourcesOf]] then prefers), written as .tmp and renamed in
+    minStreamOffset(table).foreach { off =>
+      (off + 1 to currentVersion(table)).map(v => changeSourcesOf(table, v).marked)
+        .filter(_.nonEmpty).foreach { marked =>
+          val dst = new Path(chRoot, marked.head.getParent.getName)
+          val tmp = new Path(chRoot, dst.getName + ".tmp")
+          markedRows(schema, marked).withColumnRenamed(from, to)
+            .write.mode("overwrite").parquet(tmp.toString)
+          fs.rename(tmp, dst)
+        }
     }
   }
 
@@ -484,7 +507,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
           math.max(1, math.min(4096, math.ceil(bytes / (256.0 * 1024 * 1024)).toInt))
         }
       lastBatch = writeBatch(table, base + 1, readVersion(table, base), target)
-      (lastBatch, None, target)
+      Commit(lastBatch, buckets = target)
     }
     // best-effort hint for pre-header readers; authoritative copy is the
     // manifest header committed above
@@ -538,16 +561,19 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   /** Manifest text: `#commit\t<token>` header, `#buckets\tN` (the bucket
     * count as per-version metadata, committed atomically with the file
     * list it describes), an optional `#changes\t<dir>` pointer to the
-    * version's CDC batch (token-named — see [[commitLoop]]), one
-    * `bucket\tpath` line per data dir, and an `#end\t<token>` trailer.
+    * version's CDC batch (token-named — see [[commitLoop]]), an optional
+    * `#marked\t<batch dir>` naming the version's own data batch as a
+    * change source (see [[changeSourcesOf]]), one `bucket\tpath` line per
+    * data dir, and an `#end\t<token>` trailer.
     * The token pair is the cross-JVM commit sentinel: a manifest is
     * COMMITTED only when its trailer token matches its header token
     * (see [[manifestCommitted]]) — a partially-written file from a
     * writer that died mid-commit never enters the version chain. */
   private def manifestText(buckets: Int, entries: Seq[(Int, String)],
-      token: String, changesName: Option[String] = None): String =
+      token: String, changesName: Option[String] = None,
+      markedDir: Option[String] = None): String =
     ((s"#commit\t$token" +: s"#buckets\t$buckets" +:
-      changesName.map(c => s"#changes\t$c").toSeq) ++
+      (changesName.map(c => s"#changes\t$c").toSeq ++ markedDir.map(d => s"#marked\t$d"))) ++
       entries.map { case (b, p) => s"$b\t$p" } :+ s"#end\t$token")
       .mkString("\n")
 
@@ -566,13 +592,23 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     else lines.last == "#end\t" + lines.head.stripPrefix("#commit\t")
   }
 
-  private[graft] def readManifest(table: String, v: Long): Seq[(Int, String)] = {
-    val txt = readFile(manifestPath(table, v))
+  private[graft] def readManifest(table: String, v: Long): Seq[(Int, String)] =
+    manifestEntries(readFile(manifestPath(table, v)))
+
+  private def manifestEntries(txt: String): Seq[(Int, String)] =
     txt.split("\n").toIndexedSeq.filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
       val Array(b, p) = line.split("\t", 2)
       (b.toInt, p)
     }
-  }
+
+  /** The value of manifest header line `#<key>\t<value>`, if present. */
+  private def manifestHeader(txt: String, key: String): Option[String] =
+    txt.split("\n").find(_.startsWith(s"#$key\t")).map(_.stripPrefix(s"#$key\t").trim)
+
+  /** Version v's manifest text; None when it is missing or unreadable. */
+  private def manifestTextOf(table: String, v: Long): Option[String] =
+    try Some(readFile(manifestPath(table, v)))
+    catch { case _: java.io.IOException => None }
 
   /** The `#buckets` header of version v's manifest, if present (manifests
     * written before the header existed have none). */
@@ -585,6 +621,15 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
   // ---- optimistic cross-JVM commit ----------------------------------------
 
+  /** What one commit attempt publishes as version base+1: its manifest
+    * `entries`; the rows to write as its `_changes` batch; `marked`, the
+    * entries of a data batch the body wrote whose rows with a non-null
+    * [[Merge.ActionCol]] are change rows too (recorded as the manifest's
+    * `#marked` header); and the bucket count (`-1` = carry base's
+    * forward). */
+  private case class Commit(entries: Seq[(Int, String)], changes: Option[DataFrame] = None,
+      marked: Seq[(Int, String)] = Nil, buckets: Int = -1)
+
   /** How long an UNCOMMITTED manifest (a competing writer's in-flight
     * commit claim) may sit mtime-quiet before waiters break it as a dead
     * writer's leftover. Mirrors the artifact store's claim timeout. */
@@ -593,8 +638,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
       .map(_.toLong).getOrElse(60000L)
 
   /** Optimistic cross-JVM commit driver: run `body(base)` to produce the
-    * next version's (manifest entries, CDC batch, bucket count `-1` =
-    * carry base's forward), then race to publish it as `base+1`. On a
+    * next version's [[Commit]], then race to publish it as `base+1`. On a
     * lost race the loop REBASES — waits out (or breaks) the competing
     * writer, re-reads the new committed version, and recomputes `body`
     * against it — so no writer's batch is ever silently orphaned by a
@@ -607,23 +651,23 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * a committed manifest always implies its CDC batch is fully present
     * (stream consumers can never see a committed version whose changes
     * are still being written), and concurrent attempts never clobber
-    * each other's batches. A losing attempt deletes its own. */
-  private def commitLoop(table: String)(
-      body: Long => (Seq[(Int, String)], Option[DataFrame], Int)): Long = {
+    * each other's batches. A losing attempt deletes its own. A marked
+    * data batch needs no second write: the manifest's `#marked` header
+    * names the batch the body already wrote. */
+  private def commitLoop(table: String)(body: Long => Commit): Long = {
     var attempts = 0
     var base = currentVersion(table)
     while (true) {
-      val (entries, changes, buckets) = body(base)
-      val n = if (buckets > 0) buckets else bucketsOfVersion(table, base)
-      val chName = changes.map { ch =>
+      val c = body(base)
+      val n = if (c.buckets > 0) c.buckets else bucketsOfVersion(table, base)
+      val chName = c.changes.map { ch =>
         val name = s"c_${newToken()}"
-        ch.write.mode("overwrite")
-          .parquet(new Path(new Path(tdir(table), "_changes"), name).toString)
+        ch.write.mode("overwrite").parquet(new Path(changesRoot(table), name).toString)
         name
       }
-      if (tryCommit(table, base + 1, n, entries, chName)) return base + 1
-      chName.foreach(nm =>
-        fs.delete(new Path(new Path(tdir(table), "_changes"), nm), true))
+      val markedDir = c.marked.headOption.map(e => new Path(e._2).getParent.toString)
+      if (tryCommit(table, base + 1, n, c.entries, chName, markedDir)) return base + 1
+      chName.foreach(nm => fs.delete(new Path(changesRoot(table), nm), true))
       attempts += 1
       require(attempts <= 20,
         s"table $table: lost $attempts commit races in a row — giving up " +
@@ -644,10 +688,10 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * this protocol never yields two winners for one version. A
     * zero-winner attempt leaves an mtime-quiet corpse that
     * [[awaitBaseAdvance]] breaks. */
-  private def tryCommit(table: String, v: Long, buckets: Int,
-      entries: Seq[(Int, String)], changesName: Option[String]): Boolean = {
+  private def tryCommit(table: String, v: Long, buckets: Int, entries: Seq[(Int, String)],
+      changesName: Option[String], markedDir: Option[String]): Boolean = {
     val token = newToken()
-    val text = manifestText(buckets, entries, token, changesName)
+    val text = manifestText(buckets, entries, token, changesName, markedDir)
     val won = CommitPoint.publish(fs, manifestPath(table, v), text)
     if (won) advanceLatest(table, v)
     won
@@ -703,14 +747,46 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   /** The committed changes dir of version v: the manifest's `#changes`
     * header (token-named, optimistic-commit era) or the legacy
     * `_changes/v<v>` naming. None = no change batch for v. */
-  private[store] def changesDirOf(table: String, v: Long): Option[Path] = {
-    val header =
-      try readFile(manifestPath(table, v)).split("\n").toIndexedSeq
-        .find(_.startsWith("#changes\t")).map(_.stripPrefix("#changes\t").trim)
-      catch { case _: java.io.IOException => None }
-    header.map(nm => new Path(new Path(tdir(table), "_changes"), nm))
-      .orElse(Some(changesDir(table, v)))
+  private[store] def changesDirOf(table: String, v: Long): Option[Path] =
+    changesDirIn(table, v, manifestTextOf(table, v))
+
+  private def changesDirIn(table: String, v: Long, manifest: Option[String]): Option[Path] =
+    manifest.flatMap(manifestHeader(_, "changes")).map(nm => new Path(changesRoot(table), nm))
+      // only a pre-protocol manifest (or a vacuumed one) can have a legacy batch
+      .orElse(Some(changesDir(table, v)).filter(_ => manifest.forall(!_.startsWith("#commit\t"))))
       .filter(fs.exists(_))
+
+  /** Where version v's change rows live. `plain`: batches whose every row
+    * is a change row with its `__action` — the version's `_changes` batch
+    * ([[changesDirOf]]) and, once [[renameColumn]] has materialized it, its
+    * marked batch as `_changes/<batch dir name>`. `marked`: the bucket dirs
+    * of the data batch the manifest's `#marked` header names (MERGE,
+    * INSERT OVERWRITE), whose rows with a non-null [[Merge.ActionCol]] are
+    * change rows. */
+  private[store] case class ChangeSources(plain: Seq[Path], marked: Seq[Path])
+
+  private[store] def changeSourcesOf(table: String, v: Long): ChangeSources = {
+    val manifest = manifestTextOf(table, v)
+    val plain = changesDirIn(table, v, manifest).toSeq
+    manifest.flatMap(m => manifestHeader(m, "marked").map(m -> _)) match {
+      case None => ChangeSources(plain, Nil)
+      case Some((m, dir)) =>
+        val materialized = new Path(changesRoot(table), new Path(dir).getName)
+        if (fs.exists(materialized)) ChangeSources(plain :+ materialized, Nil)
+        else ChangeSources(plain, manifestEntries(m).map(e => new Path(e._2))
+          .filter(_.getParent.toString == dir))
+    }
+  }
+
+  /** Offset of the stream that has consumed the least of `table`; None
+    * without streams. Versions past it are pending for some stream. */
+  private def minStreamOffset(table: String): Option[Long] = {
+    val streamsRoot = new Path(tdir(table), "_streams")
+    if (!fs.exists(streamsRoot)) None
+    else fs.listStatus(streamsRoot).toIndexedSeq
+      .filter(_.getPath.getName.endsWith(".offset"))
+      .map(st => readFile(st.getPath).trim.toLong)
+      .minOption
   }
 
   // ---- read ---------------------------------------------------------------
@@ -846,7 +922,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     commitLoop(table) { base =>
       if (lastBatch != null) dropBatchDirs(lastBatch) // rebased attempt
       lastBatch = writeBatch(table, base + 1, readVersion(table, base))
-      (lastBatch, None, -1)
+      Commit(lastBatch)
     }
   }
 
@@ -1068,7 +1144,9 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
   /** Garbage-collect: drop manifests, change batches, and data-batch dirs
     * not referenced by the `keepVersions` most recent versions. Readers
-    * of retained versions are unaffected (their files are untouched). */
+    * of retained versions are unaffected (their files are untouched).
+    * Change sources outlive that window while a stream has their version
+    * pending — a marked data batch ([[changeSourcesOf]]) included. */
   def vacuum(table: String, keepVersions: Int = 1): Unit = synchronized {
     require(keepVersions >= 1)
     val cur = currentVersion(table)
@@ -1082,9 +1160,16 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
       trashedTables() // incl. same-named: a trashed manifest's paths live under the ORIGINAL root
         .flatMap(t => trashedManifestEntries(t).map(e => new Path(e._2).getParent.toString)))
       .toSet
+    // change sources are retained while ANY stream still has them pending
+    // (offset < v means version v is unconsumed by that stream); their
+    // MANIFESTS are retained just as long — the `#changes` and `#marked`
+    // headers are the only pointers to them
+    val minConsumed = minStreamOffset(table).getOrElse(cur)
     val keptDirs: Set[String] = (keepFrom to cur)
       .flatMap(v => readManifest(table, v).map(e => new Path(e._2).getParent.toString))
-      .toSet ++ externallyReferenced
+      .toSet ++ (minConsumed + 1 until keepFrom)
+        .flatMap(v => changeSourcesOf(table, v).marked.map(_.getParent.toString)) ++
+      externallyReferenced
     // freshness grace: an unreferenced batch dir can be a CONCURRENT
     // writer's in-flight attempt (written before its manifest commits) —
     // only dirs mtime-quiet past the grace are orphans (losing rebases,
@@ -1103,38 +1188,26 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
         if (!keptDirs.contains(st.getPath.toString) && quietPast(st.getPath))
           fs.delete(st.getPath, true)
       }
-    // change batches are retained while ANY stream still has them pending
-    // (offset < v means version v is unconsumed by that stream); their
-    // MANIFESTS are retained just as long — the `#changes` header is the
-    // only pointer to a token-named change batch
-    val streamsRoot = new Path(tdir(table), "_streams")
-    val minConsumed: Long =
-      if (!fs.exists(streamsRoot)) cur
-      else {
-        val offs = fs.listStatus(streamsRoot).toIndexedSeq
-          .filter(_.getPath.getName.endsWith(".offset"))
-          .map(st => readFile(st.getPath).trim.toLong)
-        if (offs.isEmpty) cur else offs.min
-      }
     val verRoot = new Path(tdir(table), "_versions")
     if (fs.exists(verRoot))
       fs.listStatus(verRoot).foreach { st =>
         val v = st.getPath.getName.stripPrefix("v").toLong
         if (v < keepFrom && v <= minConsumed) {
-          // resolve the change batch BEFORE dropping its manifest pointer
-          changesDirOf(table, v).foreach(d => fs.delete(d, true))
+          // resolve the change batches BEFORE dropping their manifest pointer
+          changeSourcesOf(table, v).plain.foreach(d => fs.delete(d, true))
           fs.delete(st.getPath, false)
         }
       }
     val chRoot = new Path(tdir(table), "_changes")
     if (fs.exists(chRoot)) {
-      // token-named batches still referenced by a surviving manifest
+      // token-named batches (and materialized marked batches) still
+      // referenced by a surviving manifest
       val referenced: Set[String] =
         if (!fs.exists(verRoot)) Set.empty
         else fs.listStatus(verRoot).toIndexedSeq.flatMap { st =>
-          try readFile(st.getPath).split("\n").toIndexedSeq
-            .find(_.startsWith("#changes\t")).map(_.stripPrefix("#changes\t").trim)
-          catch { case _: java.io.IOException => None }
+          val m = try Some(readFile(st.getPath)) catch { case _: java.io.IOException => None }
+          m.toSeq.flatMap(t => manifestHeader(t, "changes").toSeq ++
+            manifestHeader(t, "marked").map(d => new Path(d).getName))
         }.toSet
       fs.listStatus(chRoot).foreach { st =>
         val name = st.getPath.getName
@@ -1142,7 +1215,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
           // legacy version-named batch whose manifest may already be gone
           val v = name.stripPrefix("v").toLong
           if (v < keepFrom && v <= minConsumed) fs.delete(st.getPath, true)
-        } else if (name.matches("c_[0-9a-f]+") && !referenced(name) &&
+        } else if (name.matches("c_[0-9a-f]+|b\\d+_[0-9a-f]+") && !referenced(name) &&
             quietPast(st.getPath)) {
           fs.delete(st.getPath, true) // losing writer's orphaned attempt
         }
@@ -1340,8 +1413,8 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
         if (batch != null) dropBatchDirs(batch) // rebased autoinc attempt
         batch = writeBatch(table, base + 1, fillAutoInc(table, align(table, df), base))
       }
-      (readManifest(table, base) ++ batch,
-        Some(withAction(readBack(table, batch), "insert")), -1)
+      Commit(readManifest(table, base) ++ batch,
+        Some(withAction(readBack(table, batch), "insert")))
     }
     // write-time auto-compaction (opt-in): bound small-file accretion
     // from continuous micro-batch appends. The TABLE property (ALTER
@@ -1356,35 +1429,39 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     }
   }
 
-  /** INSERT OVERWRITE (S6): full replace; change batch = new contents.
-    * The batch is reused across rebases — a full replace is insensitive
-    * to what the lost-race winner committed. */
+  /** INSERT OVERWRITE (S6): full replace; the change rows are the new
+    * contents, labeled `insert`. The batch is their change source: every
+    * row carries [[Merge.ActionCol]] `= 'insert'`, written in the same job
+    * as the data, so the commit writes the rows once. The batch is reused
+    * across rebases — a full replace is insensitive to what the lost-race
+    * winner committed. */
   def overwrite(table: String, df: DataFrame): Unit = synchronized {
     var batch: Seq[(Int, String)] = null
     commitLoop(table) { base =>
       if (batch == null)
-        batch = writeBatch(table, base + 1, fillAutoInc(table, align(table, df), base))
-      (batch, Some(withAction(readBack(table, batch), "insert")), -1)
+        batch = writeBatch(table, base + 1, fillAutoInc(table, align(table, df), base)
+          .withColumn(Merge.ActionCol, lit("insert")))
+      Commit(batch, marked = batch)
     }
   }
 
-  /** Full replace committed with NO change batch — the write shape for
+  /** Full replace committed with NO change rows — the write shape for
     * derived ARTIFACT tables ([[Artifacts]]): a per-corpus-version
     * artifact is a pure function of its inputs, so CDC consumers have
-    * nothing to see (no phantom changes) and the write costs exactly one
-    * parquet copy (append/overwrite also write a change batch). */
+    * nothing to see (no phantom changes) and the files carry no action
+    * marker. */
   def overwriteSnapshot(table: String, df: DataFrame): Unit = synchronized {
     var batch: Seq[(Int, String)] = null
     commitLoop(table) { base =>
       if (batch == null)
         batch = writeBatch(table, base + 1, fillAutoInc(table, align(table, df), base))
-      (batch, None, -1)
+      Commit(batch)
     }
   }
 
   /** TRUNCATE (S7): empty manifest, no data IO at all. */
   def truncate(table: String): Unit = synchronized {
-    commitLoop(table)(_ => (Nil, None, -1))
+    commitLoop(table)(_ => Commit(Nil))
     ()
   }
 
@@ -1408,7 +1485,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
         .getOrElse(Nil)
       val changed = graft.ops.TableOps.update(
         readVersion(table, base, touchedBuckets).filter(pred), pred, set)
-      (untouched ++ lastBatch, Some(withAction(changed, "update")), -1)
+      Commit(untouched ++ lastBatch, Some(withAction(changed, "update")))
     }
   }
 
@@ -1429,7 +1506,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
         .map(bs => readManifest(table, base).filterNot(e => bs(e._1)))
         .getOrElse(Nil)
       val deleted = readVersion(table, base, touchedBuckets).filter(pred)
-      (untouched ++ lastBatch, Some(withAction(deleted, "delete")), -1)
+      Commit(untouched ++ lastBatch, Some(withAction(deleted, "delete")))
     }
   }
 
@@ -1520,20 +1597,22 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * source keys are rewritten; the rest of the table carries over at
     * manifest level.
     *
-    * Change batch = the committed rows of the keys the MERGE touched,
-    * labeled `update` (matched) or `insert` (source-only), in one pass:
+    * Change rows = the committed rows of the keys the MERGE touched,
+    * labeled `update` (matched) or `insert` (source-only), written once:
     * [[Merge.upsert]] emits the action its join already decided as the
     * hidden [[Merge.ActionCol]] column, the batch files carry it (like
-    * `__graft_z` and the `__graft_day_*` companions), and the change batch
-    * is a filtered read of the files just written. Every store read uses
-    * the declared schema, so the marker never surfaces in [[read]],
-    * [[readVersion]], views or copies. Reading the written files back,
-    * rather than re-evaluating the merge plan, also makes the change rows
-    * show exactly the committed values (custom SET expressions,
+    * `__graft_z` and the `__graft_day_*` companions; carried rows hold
+    * null), and the manifest names the batch as the version's change
+    * source, so [[readChanges]] serves the marked rows straight from the
+    * data files. Every store read uses the declared schema, so the marker
+    * never surfaces in [[read]], [[readVersion]], views or copies. The
+    * change rows are the written files, not a re-evaluated merge plan, so
+    * they show exactly the committed values (custom SET expressions,
     * autoincrement keys, `current_timestamp()` defaults). Rows removed by
     * a `WHEN MATCHED … DELETE` branch are not in the new files: they come
     * from an anti-join of the touched buckets against the written keys,
-    * with their pre-merge values and `__action = 'delete'`.
+    * with their pre-merge values and `__action = 'delete'`, as the
+    * version's `_changes` batch.
     *
     * `alignSource = false` keeps extra (non-target-schema) source columns
     * visible to custom `whenMatchedSet` / `whenNotMatchedInsert`
@@ -1581,36 +1660,23 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     lastBatch = newEntries
     val untouched = readManifest(table, base).filterNot(e => srcBuckets(e._1))
 
-    val upserts = readBackActions(table, newEntries)
-    val changes = whenMatchedDelete match {
-      case None => upserts
-      case Some(_) =>
-        val survivors = readBack(table, newEntries).select(keys.map(col): _*)
-        val deletedRows = touched.join(survivors, keys, "left_anti")
-        upserts.unionByName(withAction(align(table, deletedRows), "delete"))
+    val deletes = whenMatchedDelete.map { _ =>
+      val survivors = readBack(table, newEntries).select(keys.map(col): _*)
+      withAction(align(table, touched.join(survivors, keys, "left_anti")), "delete")
     }
-    (untouched ++ newEntries, Some(changes), -1)
+    Commit(untouched ++ newEntries, deletes, marked = newEntries)
     } // commitLoop
     ()
   }
 
   // ---- helpers ------------------------------------------------------------
 
-  private def readBack(table: String, entries: Seq[(Int, String)],
-      schema: StructType = null): DataFrame = {
-    val s = Option(schema).getOrElse(schemaOf(table))
+  private def readBack(table: String, entries: Seq[(Int, String)]): DataFrame = {
+    val s = schemaOf(table)
     if (entries.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
     else spark.read.schema(s).parquet(entries.map(_._2): _*)
   }
-
-  /** The rows of a MERGE's freshly written batch that the merge inserted
-    * or updated, with their [[Merge.ActionCol]] marker surfaced as the
-    * change batch's `__action` column. */
-  private def readBackActions(table: String, entries: Seq[(Int, String)]): DataFrame =
-    readBack(table, entries,
-      schemaOf(table).add(Merge.ActionCol, org.apache.spark.sql.types.StringType))
-      .filter(col(Merge.ActionCol).isNotNull).withColumnRenamed(Merge.ActionCol, "__action")
 
   /** Align df to the table schema by name with casts (the permissive,
     * schema-on-write landing behavior: missing cols → their declared
@@ -1673,33 +1739,59 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   private[store] def offsetPath(table: String, stream: String) =
     new Path(new Path(tdir(table), "_streams"), s"$stream.offset")
 
+  /** The change rows of versions (fromExclusive, toInclusive] (see
+    * [[changeSourcesOf]]): one scan of the plain change batches, one of
+    * the marked data batches keeping rows whose marker is set (surfaced
+    * as `__action`), unioned when both exist. */
   private[graft] def readChanges(table: String, fromExclusive: Long, toInclusive: Long): DataFrame = {
-    val dirs = (fromExclusive + 1 to toInclusive)
-      .flatMap(v => changesDirOf(table, v))
-      .map(_.toString)
-    val schema = schemaOf(table).add("__action", org.apache.spark.sql.types.StringType)
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
+    val sources = (fromExclusive + 1 to toInclusive).map(v => changeSourcesOf(table, v))
+    val schema = schemaOf(table)
+    val plain = sources.flatMap(_.plain).map(_.toString)
+    val marked = sources.flatMap(_.marked)
+    val scans =
+      (if (plain.isEmpty) Nil
+       else Seq(spark.read.schema(schema.add("__action", StringType)).parquet(plain: _*))) ++
+      (if (marked.isEmpty) Nil else Seq(markedRows(schema, marked)))
+    scans.reduceOption(_ unionByName _).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.add("__action", StringType)))
   }
 
-  /** Row count of the change batches of versions (fromExclusive,
-    * toInclusive], summed from their parquet footers without a Spark job.
-    * None when a data file's footer can't be read (truncated,
-    * corrupt): the caller then asks Spark. */
+  /** The change rows of marked bucket dirs read under `schema`: the rows
+    * whose [[Merge.ActionCol]] is set, the marker surfaced as `__action`. */
+  private def markedRows(schema: StructType, dirs: Seq[Path]): DataFrame =
+    spark.read.schema(schema.add(Merge.ActionCol, StringType)).parquet(dirs.map(_.toString): _*)
+      .filter(col(Merge.ActionCol).isNotNull).withColumnRenamed(Merge.ActionCol, "__action")
+
+  /** Row count of the change rows of versions (fromExclusive,
+    * toInclusive], summed from parquet footers without a Spark job: every
+    * row of a plain change batch, and the rows of a marked batch minus
+    * its marker column's null count. None when a file's footer can't be
+    * read (truncated, corrupt) or lacks the marker's null count: the
+    * caller then asks Spark. */
   private[graft] def changeRowCount(table: String, fromExclusive: Long,
       toInclusive: Long): Option[Long] = {
     import scala.jdk.CollectionConverters._
-    val files = (fromExclusive + 1 to toInclusive).flatMap(v => changesDirOf(table, v))
-      .flatMap(d => fs.listStatus(d).toIndexedSeq)
+    def dataFiles(dir: Path) = fs.listStatus(dir).toIndexedSeq
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
-    val counts = files.map(st => scala.util.Try {
+    def footerCount(file: org.apache.hadoop.fs.FileStatus, marked: Boolean): Long = {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
-      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, hconf))
+      try reader.getFooter.getBlocks.asScala.map { bg =>
+        if (!marked) bg.getRowCount
+        else bg.getColumns.asScala.find(_.getPath.toDotString == Merge.ActionCol).map { cm =>
+          val stats = cm.getStatistics
+          require(stats != null && stats.isNumNullsSet, s"no null count for ${Merge.ActionCol}")
+          bg.getRowCount - stats.getNumNulls
+        }.getOrElse(0L) // no marker column: every row reads back unmarked
+      }.sum
       finally reader.close()
-    })
+    }
+    val sources = (fromExclusive + 1 to toInclusive).map(v => changeSourcesOf(table, v))
+    val counts = sources.flatMap(s => s.plain.map(_ -> false) ++ s.marked.map(_ -> true))
+      .map { case (dir, marked) =>
+        scala.util.Try(dataFiles(dir).map(footerCount(_, marked)).sum)
+      }
     if (counts.exists(_.isFailure)) None else Some(counts.map(_.get).sum)
   }
 
@@ -1710,6 +1802,13 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
   private[graft] def writeOffset(table: String, stream: String, v: Long): Unit =
     writeFile(offsetPath(table, stream), v.toString)
+
+  /** Forget a dropped stream's offset, so [[vacuum]] no longer keeps the
+    * table's change sources for it. */
+  private[graft] def dropOffset(table: String, stream: String): Unit = {
+    fs.delete(offsetPath(table, stream), false)
+    ()
+  }
 }
 
 /** Statistics-kind mapping and parquet footer decoding for the store's

@@ -2,6 +2,7 @@ package graft.orchestrate
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -48,6 +49,25 @@ class RunLogSpec extends AnyFunSuite {
     orch.runCycle("root")
     assert(store.currentVersion("task_history") == v0 + 2)
     assert(store.read("task_history").count() == 8)
+  }
+
+  test("a cycle's run log commits from one task: its batch is one data file") {
+    val (store, orch) = fresh()
+    Seq("root", "a", "b", "c").foreach { n =>
+      orch.createTask(Task(n, () => (), after = if (n == "root") Nil else Seq("root")))
+      orch.resume(n)
+    }
+    orch.runCycle("root")
+    val v = store.currentVersion("task_history")
+    // the append's own batch: the manifest entries written for version v
+    val batch = store.readManifest("task_history", v).map(e => new Path(e._2))
+      .filter(_.getParent.getName.startsWith(f"b$v%08d_"))
+    assert(batch.nonEmpty)
+    val fs = batch.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = batch.flatMap(d => fs.listStatus(d).toSeq)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    assert(files.size == 1, s"run-log batch has ${files.size} data files")
+    assert(store.read("task_history").count() == 4)
   }
 
   test("a gate that throws fails its task, its children don't run, the cycle goes on") {

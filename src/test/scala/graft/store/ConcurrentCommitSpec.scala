@@ -112,6 +112,55 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     assert(a.currentVersion("t") == v0 + 4)
   }
 
+  test("racing merges: a stream sees each committed merge's change rows exactly once") {
+    val root = freshRoot()
+    val a = new TableStore(spark, root, numBuckets = 4)
+    val b = new TableStore(spark, root, numBuckets = 4)
+    a.createTable("t", schema, keys = Seq("id"))
+    a.append("t", (1L to 40L).map(i => (i, "seed")).toDF("id", "v"))
+    val stream = ChangeStream.create(a, "t", "s1")
+    val v0 = a.currentVersion("t")
+
+    // per round the writers' keys are disjoint; across rounds they repeat,
+    // so B's new keys are inserts in round 1 and updates after
+    val rounds = 3
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    (1 to rounds).foreach { r =>
+      val t1 = inThread(s"merge-a$r")(
+        try a.merge("t", (1L to 10L).map(i => (i, s"A$r")).toDF("id", "v"))
+        catch { case e: Throwable => errs.add(e) })
+      val t2 = inThread(s"merge-b$r")(
+        try b.merge("t", (35L to 45L).map(i => (i, s"B$r")).toDF("id", "v"))
+        catch { case e: Throwable => errs.add(e) })
+      t1.join(300000); t2.join(300000)
+    }
+    assert(errs.isEmpty, s"merge failed: ${Option(errs.peek()).map(_.toString)}")
+    assert(a.currentVersion("t") == v0 + 2 * rounds, "every merge must commit")
+
+    // each committed version's manifest names its own batch as the change
+    // source, never a losing attempt's (rebased attempts drop theirs)
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (v0 + 1 to v0 + 2 * rounds).foreach { v =>
+      val manifest = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(root, "t", "_versions", f"v$v%08d")), "UTF-8")
+      val named = manifest.split("\n").find(_.startsWith("#marked\t")).map(_.stripPrefix("#marked\t"))
+      assert(named.isDefined, s"v$v names no change source")
+      val marked = a.changeSourcesOf("t", v).marked
+      assert(marked.nonEmpty && marked.forall(_.getParent.toString == named.get),
+        s"v$v names a batch its manifest does not hold")
+      assert(marked.forall(fs.exists(_)), s"v$v's change source is gone")
+    }
+
+    val want = (1 to rounds).flatMap { r =>
+      (1L to 10L).map(i => s"$i|A$r|update") ++
+        (35L to 45L).map(i => s"$i|B$r|${if (r == 1 && i > 40) "insert" else "update"}")
+    }.sorted
+    val got = stream.consume(_.collect().map(row =>
+      s"${row.getLong(0)}|${row.getString(1)}|${row.getString(2)}").toSeq.sorted)
+    assert(got == want, "CDC lost or duplicated a racing merge's changes")
+    assert(!stream.hasData)
+  }
+
   test("a dead writer's uncommitted manifest is broken after the commit timeout") {
     val root = freshRoot()
     val st = new TableStore(spark, root, numBuckets = 2)
