@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.StructType
 import graft.cdc.ChangeStream
 import graft.ingest.{CsvFormat, Pipe}
 import graft.orchestrate.{Orchestrator, Task}
+import graft.spark.GraftCatalog
 import graft.sql.GraftSql
 import graft.store.TableStore
 
@@ -35,10 +36,13 @@ import graft.store.TableStore
   * flat namespace), recorded in [[nameMap]] so later statements can use
   * either form — the reference's own scripts mix both.
   */
-class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16) {
+class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
+    extends GraftCatalog.Names {
 
   val store = new TableStore(spark, root, numBuckets)
   lazy val tasks = new Orchestrator(spark, store)
+
+  GraftCatalog.attach(this)
 
   private var checkpointSeq = 0
 
@@ -149,9 +153,11 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16) 
   }
 
   def stream(name: String): ChangeStream = streamsReg(recordName(name))
-  def streamOpt(name: String): Option[ChangeStream] = streamsReg.get(recordName(name))
+  def streamOpt(name: String): Option[ChangeStream] = {
+    val flat = recordName(name)
+    streamsReg.find(_._1.equalsIgnoreCase(flat)).map(_._2)
+  }
   def dropStream(name: String): Unit = streamsReg.remove(recordName(name)).foreach(_.drop())
-  private[graft] def allStreams: Seq[ChangeStream] = streamsReg.values.toSeq
 
   /** SHOW STREAMS (F7): name, source table, consumed-through version,
     * pending version count (cheap — no data IO). */
@@ -182,15 +188,29 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16) 
 
   private val viewsReg = mutable.LinkedHashMap.empty[String, String]
 
-  /** CREATE VIEW: the defining SQL is re-evaluated against current table
-    * snapshots whenever the session registers views (so a view always
-    * reflects the latest committed table versions, like Snowflake's). */
+  /** CREATE VIEW: each statement naming the view analyzes its SQL afresh
+    * ([[relation]]), so it reflects the latest commits, like Snowflake's,
+    * and a broken view fails only the statements that name it. */
   def createView(name: String, sql: String): Unit =
     viewsReg(recordName(name)) = sql
 
   def dropView(name: String): Unit = viewsReg.remove(recordName(name))
-  private[graft] def allViews: Seq[(String, String)] = viewsReg.toSeq
   def listViews(): Seq[String] = viewsReg.keys.toSeq
+
+  // the graft views being expanded on this thread, innermost first
+  private val expanding = ThreadLocal.withInitial[List[String]](() => Nil)
+
+  /** SQL name resolution ([[GraftCatalog]]) after temp views and catalog
+    * tables: a view, else a stream, else a table of [[store]]. */
+  def relation(name: String): Option[DataFrame] =
+    viewsReg.find(_._1.equalsIgnoreCase(name)).map { case (n, q) =>
+      val outer = expanding.get
+      require(!outer.exists(_.equalsIgnoreCase(n)),
+        s"view $n references itself: ${(n :: outer).reverse.mkString(" -> ")}")
+      expanding.set(n :: outer)
+      try spark.sql(q) finally expanding.set(outer)
+    }.orElse(streamOpt(name).map(_.relation))
+      .orElse(store.relation(name))
 
   /** CREATE STAGE name URL='dir' — a named external location; `@name/sub`
     * in COPY INTO resolves against it (reference: `@landing/landing/

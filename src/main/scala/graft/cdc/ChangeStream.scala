@@ -13,7 +13,8 @@ import graft.store.TableStore
   * (insert/update) — the analogue of METADATA$ACTION. Consumption is
   * transactional the way Snowflake's is: the offset only advances when the
   * consuming body completes (SURVEY.md §7 hard parts — a failed merge must
-  * not consume the stream).
+  * not consume the stream). SQL reads a session's stream by name
+  * ([[relation]]) unless a temp view or catalog table has that name.
   *
   * A version's change rows live where its commit wrote them once
   * ([[TableStore.changeSourcesOf]]): an APPEND, UPDATE or DELETE writes
@@ -46,18 +47,19 @@ class ChangeStream(store: TableStore, val table: String, val name: String) {
   /** Non-consuming read of pending changes (base columns + __action). */
   def read: DataFrame = store.readChanges(table, offset, store.currentVersion(table))
 
-  /** Register the pending slice as temp view `name`, rebuilt only when
-    * the offset or the table's committed version changed (the store's
-    * view memo, [[TableStore.viewKey]]). */
-  def registerView(): Unit =
-    store.memoView(name, s"$offset\u0000${store.viewKey(table)}")(read)
+  private val consuming = new ThreadLocal[DataFrame]
+
+  /** What SQL reads under the stream's name: inside [[consume]], the
+    * slice being consumed; elsewhere the pending changes. */
+  def relation: DataFrame = Option(consuming.get).getOrElse(read)
 
   /** Consume: run `body` on the pending slice; advance the offset only if
     * it succeeds. Returns body's result. */
   def consume[A](body: DataFrame => A): A = {
     val upTo = store.currentVersion(table)
     val slice = store.readChanges(table, offset, upTo)
-    val result = body(slice) // throws => offset untouched
+    consuming.set(slice)
+    val result = try body(slice) finally consuming.remove() // throws => offset untouched
     store.writeOffset(table, name, upTo)
     result
   }

@@ -40,8 +40,8 @@ object Merge {
   val S = "__merge_s"
 
   /** Hidden column [[upsert]] appends when asked to label its rows:
-    * `update` for matched keys, `insert` for source-only keys, null for
-    * target-only rows the merge carries unchanged. */
+    * `update` for matched keys a SET applies to, `insert` for source-only
+    * keys, null for rows the merge carries unchanged. */
   val ActionCol = "__graft_action"
 
   /** Reference a target column inside whenMatchedSet. */
@@ -87,14 +87,13 @@ object Merge {
     val cond = keys.map(k => tgt(k) === src(k)).reduce(_ && _)
     val joined0 = t.join(s, cond, "full_outer")
 
-    val matchedPred = col(s"$T.__t_exists").isNotNull && col(s"$S.__s_exists").isNotNull
+    val matched = col(s"$T.__t_exists").isNotNull && col(s"$S.__s_exists").isNotNull
     // the DELETE branch is a plain filter over the same join — no extra
     // shuffle; null-valued conditions don't delete (SQL three-valued logic)
     val joined = whenMatchedDelete match {
-      case Some(d) => joined0.filter(!(matchedPred && coalesce(d, lit(false))))
+      case Some(d) => joined0.filter(!(matched && coalesce(d, lit(false))))
       case None => joined0
     }
-    val matched = matchedPred
     val insertOnly = col(s"$T.__t_exists").isNull
 
     val matchedSet: Map[String, Column] = whenMatchedSet.getOrElse {
@@ -117,7 +116,8 @@ object Merge {
     }
     val action =
       if (!emitAction) Nil
-      else Seq(when(matched, lit("update")).when(insertOnly, lit("insert")).as(ActionCol))
+      else Seq(when(matched && lit(matchedSet.nonEmpty), lit("update"))
+        .when(insertOnly, lit("insert")).as(ActionCol))
     joined.select((out.toIndexedSeq ++ action): _*)
   }
 }

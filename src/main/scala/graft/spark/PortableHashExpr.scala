@@ -69,7 +69,8 @@ case class PortableHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Session extension registering graft's native SQL functions.
+/** Session extension registering graft's native SQL functions, its
+  * name-resolution rule ([[ResolveGraftNames]]) and its optimizer rules.
   * Activate with `.config("spark.sql.extensions", "graft.spark.GraftExtensions")`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -109,6 +110,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_bpe_apply"),
       new ExpressionInfo(classOf[BpeApplyMerges].getName, "graft_bpe_apply"),
       (children: Seq[Expression]) => BpeApplyMerges(children(0), children(1))))
+    // store tables, streams and graft views resolve by name in any SQL
+    ext.injectResolutionRule(ResolveGraftNames)
     // NTZ clustering keys prune through their derived day column
     ext.injectOptimizerRule(_ => NtzDayPrune)
     // passthrough-column predicates commute with a graft_fence Project

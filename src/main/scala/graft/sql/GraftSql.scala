@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.GraftSession
 import graft.orchestrate.Task
+import graft.spark.GraftCatalog
 import graft.store.TableStore
 
 /** SQL statement surface over a [[TableStore]] (+ optional
@@ -42,10 +43,9 @@ import graft.store.TableStore
   *    consumed transactionally — offset advances only if the merge
   *    commits, the reference's exactly-once contract)
   *  - `USE ...` → no-op; `--` and block comments are stripped
-  *  - any other statement → registered-view `spark.sql` passthrough
-  *    (SELECT monitoring queries, E3), with
-  *    `table(information_schema.task_history())` rewritten to the
-  *    orchestrator's run-log table and streams readable as views
+  *  - any other statement → `spark.sql` passthrough (SELECT monitoring
+  *    queries, E3), with `table(information_schema.task_history())`
+  *    rewritten to the orchestrator's run-log table
   *  - `TABLE(graft_*(…))` table functions in queries / CTAS / INSERT
   *    bodies expose the flagship LLM-pipeline operators (near-dup
   *    filter, decontamination, BM25, kmeans-IVF ANN, token-budget mix)
@@ -53,9 +53,11 @@ import graft.store.TableStore
   *
   * Snowflake-style qualified names (`stg.stg_customer`) are normalized to
   * their flat last segment via the session's name map. SELECT subqueries
-  * run through Spark's full SQL stack against snapshot views of the store
-  * tables, so all of Catalyst's SQL surface is available inside INSERT
-  * bodies.
+  * run through Spark's full SQL stack, so all of Catalyst's SQL surface is
+  * available inside INSERT bodies. Names resolve in Spark's analyzer: a
+  * temp view, then a Spark catalog table, then the session's views,
+  * streams and store tables ([[graft.spark.GraftCatalog]]); each statement
+  * puts its own session first among the graft names.
   *
   * How the text is read: MERGE, UPDATE and DELETE go through Spark's own
   * parser (the session's `sqlParser`), and graft reads the plans it
@@ -137,19 +139,9 @@ object GraftSql {
     import sp.implicits._
     def sess: GraftSession =
       session.getOrElse(sys.error(s"statement needs a GraftSession (streams/pipes/tasks): $sql"))
-    def registerViews(): Unit = {
-      store.registerAllViews()
-      session.foreach { se =>
-        se.allStreams.foreach(_.registerView())
-        // views re-evaluate over the snapshots just registered; creation
-        // order lets later views reference earlier ones. A view broken by
-        // later DDL must not poison statements that never touch it.
-        se.allViews.foreach { case (n, q) =>
-          try spark.sql(q).createOrReplaceTempView(n)
-          catch { case _: Exception => spark.catalog.dropTempView(n) }
-        }
-      }
-    }
+    session.orElse(Option(store)).foreach(GraftCatalog.attach)
+    def query(q: String): DataFrame = spark.sql(rewriteQualify(
+      TableFunctions.rewrite(spark, store, session, timeTravel(spark, store, session, q)), spark))
     val stmt = norm(SqlScanner.stripComments(sql), session)
     stmt match {
       case UseRe() => None
@@ -254,10 +246,8 @@ object GraftSql {
         None
 
       case CreateTableAsRe(replace, name, keys, body) =>
-        registerViews()
         val flat = session.map(_.recordCreate(name)).getOrElse(name)
-        val rows = spark.sql(rewriteQualify(TableFunctions.rewrite(spark, store,
-          session, timeTravel(spark, store, session, stripOuterParens(body))), spark))
+        val rows = query(stripOuterParens(body))
         val keyCols = Option(keys).map(_.split(",").toIndexedSeq.map(_.trim)).getOrElse(Nil)
         if (store.exists(flat)) {
           if (replace == null) sys.error(s"table $flat already exists (use CREATE OR REPLACE)")
@@ -280,7 +270,6 @@ object GraftSql {
         None
 
       case CreateViewRe(name, body) =>
-        registerViews() // so the QUALIFY probe can resolve the view's tables
         sess.createView(name, rewriteQualify(body, spark))
         None
 
@@ -438,10 +427,8 @@ object GraftSql {
         None
 
       case InsertRe(mode, name, colList, body) =>
-        registerViews()
         val flat = session.map(_.recordName(name)).getOrElse(name)
-        val rows = spark.sql(rewriteQualify(TableFunctions.rewrite(spark, store,
-          session, timeTravel(spark, store, session, body)), spark))
+        val rows = query(body)
         // INSERT ... SELECT is POSITIONAL (Snowflake semantics): rename
         // the query's columns to the target names by position before the
         // store's by-name align. An explicit column list narrows the
@@ -457,39 +444,15 @@ object GraftSql {
         None
 
       case MergeRe() =>
-        registerViews()
         val pm = MergeSql.parse(stmt)
-        val directStream = session.flatMap(_.streamOpt(pm.source))
-        // a USING (subquery) that reads a stream (the reference's item
-        // script dedups its stream inside the subquery) also consumes it
-        val subqueryStream = for {
-          se <- session
-          q <- pm.sourceQuery
-          stm <- MergeSql.relations(q).flatMap(se.streamOpt).headOption
-        } yield stm
-        (directStream, subqueryStream) match {
-          case (Some(stm), _) =>
-            // stream source: transactional consume — the offset advances
-            // only if the merge commits (reference exactly-once contract,
-            // SURVEY.md §7 hard parts). __action stays visible so branch
-            // conditions can gate on it (WHEN MATCHED AND
-            // s.__action = 'delete' THEN DELETE); it is an extra source
-            // column, never written to the target.
-            stm.consume { changes =>
-              MergeSql.runWith(spark, store, pm, changes)
-            }
-          case (_, Some(stm)) =>
-            stm.consume { changes =>
-              changes.createOrReplaceTempView(stm.name) // snapshot the slice
-              MergeSql.runWith(spark, store, pm, spark.sql(rewriteQualify(pm.sourceQuery.get, spark)))
-            }
-          case _ =>
-            val src = pm.sourceQuery.map(q => spark.sql(rewriteQualify(q, spark))).getOrElse {
-              if (store.exists(pm.source)) store.read(pm.source)
-              else spark.table(pm.source)
-            }
-            MergeSql.runWith(spark, store, pm, src)
-        }
+        def merge(): Unit = MergeSql.runWith(spark, store, pm, pm.sourceQuery
+          .map(q => spark.sql(rewriteQualify(q, spark))).getOrElse(spark.table(pm.source)))
+        // a stream named directly or inside a USING (subquery), as the
+        // reference's item script does, is consumed; __action stays
+        // visible to branch conditions and is never written
+        val stream = session.flatMap(se =>
+          pm.sourceQuery.map(MergeSql.relations).getOrElse(Seq(pm.source)).flatMap(se.streamOpt).headOption)
+        stream.fold(merge())(_.consume(_ => merge()))
         None
 
       case other =>
@@ -499,10 +462,7 @@ object GraftSql {
         if ("""(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TRANSIENT\s+|TEMP(?:ORARY)?\s+)?TABLE\b""".r
             .findFirstIn(other).isDefined)
           sys.error(s"unsupported CREATE TABLE form (not columns/CTAS/CLONE): ${other.take(200)}")
-        registerViews()
-        Some(spark.sql(rewriteQualify(TableFunctions.rewrite(spark, store, session,
-          timeTravel(spark, store, session,
-            SqlScanner.mapCode(other)(_.replaceAll(TaskHistoryFnRe, "task_history")))), spark)))
+        Some(query(SqlScanner.mapCode(other)(_.replaceAll(TaskHistoryFnRe, "task_history"))))
     }
   }
 

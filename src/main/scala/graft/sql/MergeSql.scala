@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, In
 import org.apache.spark.sql.functions.{col, expr}
 
 import graft.ops.Merge
+import graft.spark.GraftCatalog
 import graft.store.TableStore
 
 /** SQL surface for the reference's MERGE INTO dialect (SURVEY.md §7
@@ -192,8 +193,9 @@ object MergeSql {
     else source.join(target.select(pm.keys.map(col): _*).distinct(), pm.keys, "left_semi")
 
   /** Execute a MERGE INTO statement against store tables: target must be
-    * a store table; source may be a store table or a registered temp
-    * view/table resolvable by `spark.table`. Commits atomically.
+    * a store table; source is any name or query Spark SQL resolves, the
+    * store's own tables included ([[graft.spark.GraftCatalog]]). Commits
+    * atomically.
     *
     * When the ON keys are exactly the target's declared bucket keys (the
     * reference's invariant — every MERGE joins on the table's key), the
@@ -205,12 +207,8 @@ object MergeSql {
     * keys (a shape the reference never produces). */
   def run(spark: SparkSession, store: TableStore, sql: String): Unit = {
     val pm = parse(sql)
-    val source = pm.sourceQuery match {
-      case Some(q) => spark.sql(q)
-      case None =>
-        if (store.exists(pm.source)) store.read(pm.source) else spark.table(pm.source)
-    }
-    runWith(spark, store, pm, source)
+    GraftCatalog.attach(store)
+    runWith(spark, store, pm, pm.sourceQuery.map(spark.sql).getOrElse(spark.table(pm.source)))
   }
 
   /** As [[run]] but with a caller-resolved source (the stream-consume

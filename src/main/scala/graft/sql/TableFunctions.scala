@@ -82,7 +82,7 @@ import graft.store.TableStore
   *    detect + cut in one call, re-emitting cleaned text row-for-row
   *  - `TABLE(graft_artifacts())` → [[graft.store.Artifacts.listing]]:
   *    the (artifact_table, version) catalog of this session's durable
-  *    artifact store; each listed table is itself a registered view
+  *    artifact store; each listed table is itself queryable by name
   *  - `TABLE(graft_clustering_info(t))` →
   *    [[graft.store.TableStore.clusteringInfo]]: per-row-group min/max
   *    audit of a CLUSTER BY table (footer-only reads — the
@@ -197,8 +197,9 @@ import graft.store.TableStore
   *    batch_k]))` → [[CorpusOps.bpeFertility]]: per-language mean
   *    subwords-per-word under the corpus-trained merge table
   *
-  * Table arguments name store tables (schema-qualified names normalize
-  * through the session, same as every other statement) or temp views;
+  * Table arguments are names Spark SQL resolves: temp views, then store
+  * tables, streams and graft views (schema-qualified names normalize
+  * through the session, same as every other statement);
   * string arguments are single-quoted literals; numbers are unquoted.
   * The call is evaluated ONCE per statement at rewrite time — Snowflake
   * lateral-join semantics (per-row arguments) are out of scope, matching
@@ -258,11 +259,7 @@ object TableFunctions {
 
   private def eval(spark: SparkSession, store: TableStore,
       session: Option[GraftSession], fn: String, args: Seq[String]): DataFrame = {
-    def rel(a: String): DataFrame = {
-      val flat = session.map(_.recordName(a)).getOrElse(a)
-      if (store != null && store.exists(flat)) store.read(flat)
-      else spark.table(a)
-    }
+    def rel(a: String): DataFrame = spark.table(session.map(_.recordName(a)).getOrElse(a))
     def str(a: String): String = {
       require(a.length >= 2 && a.head == '\'' && a.last == '\'',
         s"$fn: expected a quoted string literal, got $a")

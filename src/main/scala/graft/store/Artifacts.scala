@@ -90,6 +90,11 @@ object Artifacts {
   private def store(s: SparkSession): TableStore =
     new TableStore(s, root(s), numBuckets = 8)
 
+  /** SQL name resolution ([[graft.spark.GraftCatalog]]) of every committed
+    * artifact, by prefix: the per-call stores here are not kept attached. */
+  def relation(s: SparkSession, name: String): Option[DataFrame] =
+    if (name.toLowerCase.startsWith("artifact_")) store(s).relation(name) else None
+
   // intra-JVM build/append serialization: a FIXED stripe array (never
   // grows, unlike a per-table lock map) — collisions just coarsen the
   // lock, correctness comes from the claim protocol anyway
@@ -453,9 +458,6 @@ object Artifacts {
       }
     }
     served.add(s"$r|$t")
-    // every artifact is immediately SQL-visible under its table name
-    // (write-once per key, so the snapshot view never goes stale)
-    st.registerView(t)
     st.read(t)
   }
 
@@ -469,8 +471,8 @@ object Artifacts {
     * `rowLocal = true` — appending a delta to a corpus-global artifact
     * (kNN truth, cluster labels, codebooks) would silently corrupt it;
     * those re-key per corpus version instead. The append commits a new
-    * store version (time travel keeps the pre-batch artifact readable)
-    * and refreshes the SQL view. Single-writer (one maintainer job per
+    * store version (time travel keeps the pre-batch artifact readable);
+    * SQL naming the table reads it. Single-writer (one maintainer job per
     * artifact), like any external-table writer. */
   def appendDelta(s: SparkSession, name: String, key: String,
       delta: DataFrame): Unit = {
@@ -490,7 +492,6 @@ object Artifacts {
       st.append(t, delta)
     }
     served.add(s"$r|$t")
-    st.registerView(t)
   }
 
   /** Catalog of this session's artifact-store root — the SQL surface
@@ -498,8 +499,7 @@ object Artifacts {
     * artifact table (in-flight `_b_` temp builds are excluded) with its
     * sidecar metadata (logical name, full parameter key, format version,
     * row-local marker) and committed store version. Each listed table is
-    * itself registered as a queryable view the moment it is built or
-    * first read. */
+    * itself queryable by name in SQL ([[relation]]). */
   def listing(s: SparkSession): DataFrame = {
     val st = store(s)
     val r = root(s)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
 /** TRANSPARENT micro-partition pruning — the optimizer rule that makes
   * [[TableStore.scanWhere]]'s metadata tier the engine's DEFAULT
   * behavior, not an opt-in: any `Filter` sitting over a store-table scan
-  * (a plain `store.read(t).filter(...)`, SQL over a registered view, a
+  * (a plain `store.read(t).filter(...)`, SQL naming a store table, a
   * join arm — anything that optimizes to Filter-over-parquet-scan of
   * store files) is rewritten to read only the data FILES whose
   * `_graft_stats` sidecar intervals can hold matching rows. This is how

@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.ops.Merge
+import graft.spark.GraftCatalog
 
 /** Versioned, hash-bucketed parquet table store — the mutable-table
   * substrate the reference gets from Snowflake (SURVEY.md §7 hard parts:
   * update-in-place / truncate on immutable storage, stream-consumption
-  * transactionality).
+  * transactionality). SQL reads a table by name at its committed version
+  * unless a temp view or catalog table has that name ([[GraftCatalog]]).
   *
   * Layout per table (all paths via Hadoop FileSystem, so the same code
   * runs on file://, hdfs:// or s3a://):
@@ -69,10 +71,12 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     // parquet row-group size: the pruning granularity for CLUSTER BY
     // tables (smaller groups = tighter min/max spans = more skipping,
     // at more footer overhead). Default = parquet's 128 MiB.
-    val parquetBlockSize: Long = 128L * 1024 * 1024) {
+    val parquetBlockSize: Long = 128L * 1024 * 1024) extends GraftCatalog.Names {
 
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
+
+  GraftCatalog.attach(this)
 
   private def tdir(t: String) = new Path(root, t)
   private def latestPtr(t: String) = new Path(tdir(t), "_latest")
@@ -106,6 +110,10 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   // ---- catalog ------------------------------------------------------------
 
   def exists(table: String): Boolean = fs.exists(latestPtr(table))
+
+  /** SQL name resolution ([[GraftCatalog]]): table `name`, in any case, now. */
+  def relation(name: String): Option[DataFrame] =
+    (if (exists(name)) Some(name) else listTables().find(_.equalsIgnoreCase(name))).map(read(_))
 
   def listTables(): Seq[String] =
     if (!fs.exists(new Path(root))) Nil
@@ -514,48 +522,6 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     writeFile(new Path(tdir(table), "_buckets"), target.toString)
   }
 
-  /** Register the CURRENT version of `table` as a temp view so `spark.sql`
-    * can query it (a snapshot, like reading a version: re-register after
-    * mutations to see newer commits). The snapshot is rebuilt only when
-    * [[viewKey]] changed since this store last registered it, or when the
-    * session no longer holds the view it registered (see [[memoView]]). */
-  def registerView(table: String, viewName: String = null): Unit =
-    memoView(Option(viewName).getOrElse(table), viewKey(table))(read(table))
-
-  /** Register snapshots of every table (SQL-surface catalog listing). */
-  def registerAllViews(): Unit = listTables().foreach(t => registerView(t))
-
-  /** What a snapshot view of `table` depends on: the text of its current
-    * committed manifest (whose `#commit` token is unique per commit, so a
-    * dropped and recreated table reaching the same version number still
-    * differs), its `_schema.json` (ALTER TABLE ADD/DROP COLUMN change the
-    * read schema without a new version) and its clustering keys (they
-    * decide the hidden day companions a read scans). */
-  private[graft] def viewKey(table: String): String =
-    Seq(table, readFile(manifestPath(table, currentVersion(table))),
-      readFile(new Path(tdir(table), "_schema.json")), clusterByOf(table).mkString(","))
-      .mkString("\u0000")
-
-  // view name -> (key it was built for, the temp view relation registered)
-  private val viewMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, AnyRef)]()
-
-  /** Register `build` as temp view `viewName` unless this store already
-    * registered it for `key` AND the session still holds that exact
-    * registration (`getRawTempView` identity): a view replaced or dropped
-    * by anyone else — `spark.sql`, another store on the same session — is
-    * rebuilt. Compute `key` before `build` so a commit racing in between
-    * can only make the view newer than its key. */
-  private[graft] def memoView(viewName: String, key: String)(build: => DataFrame): Unit = {
-    val catalog = spark.sessionState.catalog
-    val live = catalog.getRawTempView(viewName)
-    val memo = Option(viewMemo.get(viewName))
-    if (!memo.exists { case (k, rel) => k == key && live.exists(_ eq rel) }) {
-      build.createOrReplaceTempView(viewName)
-      catalog.getRawTempView(viewName).foreach(rel => viewMemo.put(viewName, (key, rel)))
-    }
-  }
-
   // ---- manifests ----------------------------------------------------------
 
   /** Manifest text: `#commit\t<token>` header, `#buckets\tN` (the bucket
@@ -850,7 +816,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     *
     * Since the [[SidecarPrune]] optimizer rule landed, the same prune
     * fires TRANSPARENTLY on any `Filter` over a plain [[read]] (and on
-    * SQL over registered views), so calling scanWhere is no longer
+    * SQL over store names), so calling scanWhere is no longer
     * required to get the metadata tier — it remains the explicit API
     * for pre-resolved `Column` predicates and for callers that want
     * the pruned file list reflected in `Dataset.inputFiles` (the rule
@@ -1598,7 +1564,8 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * manifest level.
     *
     * Change rows = the committed rows of the keys the MERGE touched,
-    * labeled `update` (matched) or `insert` (source-only), written once:
+    * labeled `update` (matched, when the MERGE sets a column) or `insert`
+    * (source-only), written once:
     * [[Merge.upsert]] emits the action its join already decided as the
     * hidden [[Merge.ActionCol]] column, the batch files carry it (like
     * `__graft_z` and the `__graft_day_*` companions; carried rows hold
@@ -1610,9 +1577,10 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * they show exactly the committed values (custom SET expressions,
     * autoincrement keys, `current_timestamp()` defaults). Rows removed by
     * a `WHEN MATCHED … DELETE` branch are not in the new files: they come
-    * from an anti-join of the touched buckets against the written keys,
-    * with their pre-merge values and `__action = 'delete'`, as the
-    * version's `_changes` batch.
+    * from a null-safe anti-join of the touched buckets against the
+    * written keys (a NULL key is never matched, so never deleted), with
+    * their pre-merge values and `__action = 'delete'`, as the version's
+    * `_changes` batch.
     *
     * `alignSource = false` keeps extra (non-target-schema) source columns
     * visible to custom `whenMatchedSet` / `whenNotMatchedInsert`
@@ -1662,7 +1630,8 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
     val deletes = whenMatchedDelete.map { _ =>
       val survivors = readBack(table, newEntries).select(keys.map(col): _*)
-      withAction(align(table, touched.join(survivors, keys, "left_anti")), "delete")
+      val survives = keys.map(k => touched(k) <=> survivors(k)).reduce(_ && _)
+      withAction(align(table, touched.join(survivors, survives, "left_anti")), "delete")
     }
     Commit(untouched ++ newEntries, deletes, marked = newEntries)
     } // commitLoop

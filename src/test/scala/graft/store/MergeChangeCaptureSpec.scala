@@ -184,8 +184,7 @@ class MergeChangeCaptureSpec extends AnyFunSuite {
     hidden("read", st.read("mk"))
     hidden("readVersion", st.readVersion("mk", st.currentVersion("mk")))
     hidden("scanWhere", st.scanWhere("mk", col("id") > 0L))
-    st.registerView("mk", "mcc_mk_view")
-    hidden("select * over a view", spark.sql("select * from mcc_mk_view"))
+    hidden("select * by name", spark.sql("select * from mk"))
 
     GraftSql.execute(spark, st, "create table mk_ctas as select * from mk")
     hidden("CTAS", st.read("mk_ctas"))
@@ -218,5 +217,43 @@ class MergeChangeCaptureSpec extends AnyFunSuite {
         |WHEN MATCHED THEN UPDATE SET t.v = s.v""".stripMargin)
     assert(st.readChanges("e", base, st.currentVersion("e")).isEmpty)
     assert(st.read("e").count() == 12)
+  }
+
+  private def changesSince(st: TableStore, table: String, base: Long): Seq[String] =
+    rows(st, table, st.readChanges(table, base, st.currentVersion(table)))
+
+  test("a DELETE-branch MERGE streams no NULL-key row") {
+    // one bucket, so the NULL-key row is in every touched bucket
+    val st = new TableStore(spark, Files.createTempDirectory("graft_mcc").toString, numBuckets = 1)
+    st.createTable("nk", kv, keys = Seq("id"))
+    st.append("nk", Seq((Some(1L), "a", 1), (None, "n", 2), (Some(2L), "b", 3)).toDF("id", "v", "n"))
+    def deleteKey(id: Long): Seq[String] = {
+      val base = st.currentVersion("nk")
+      MergeSql.run(spark, st,
+        s"MERGE INTO nk t USING (SELECT $id AS id) s ON t.id = s.id WHEN MATCHED THEN DELETE")
+      changesSince(st, "nk", base)
+    }
+    assert(deleteKey(1L) == Seq("1|a|1|delete"))
+    assert(deleteKey(2L) == Seq("2|b|3|delete"))
+    assert(st.read("nk").collect().map(_.toSeq.mkString("|")).toSeq == Seq("null|n|2"))
+  }
+
+  test("matched rows no SET applies to stream nothing") {
+    val st = freshStore()
+    kvTable(st, "ns")
+    // the only MATCHED clause is a conditional DELETE: key 2 is spared
+    var base = st.currentVersion("ns")
+    MergeSql.run(spark, st,
+      """MERGE INTO ns t USING (SELECT * FROM VALUES (1L, 'drop'), (2L, 'keep') AS s(id, v)) s
+        |ON t.id = s.id WHEN MATCHED AND s.v = 'drop' THEN DELETE""".stripMargin)
+    assert(changesSince(st, "ns", base) == Seq("1|v1|1|delete"))
+    // insert-only: the matched key 3 keeps its row
+    base = st.currentVersion("ns")
+    MergeSql.run(spark, st,
+      """MERGE INTO ns t USING (SELECT * FROM VALUES (3L, 'x', 0), (40L, 'new', 4) AS s(id, v, n)) s
+        |ON t.id = s.id WHEN NOT MATCHED THEN INSERT (id, v, n) VALUES (s.id, s.v, s.n)""".stripMargin)
+    assert(changesSince(st, "ns", base) == Seq("40|new|4|insert"))
+    assert(st.read("ns").filter($"id" <= 3L).orderBy("id").as[(Long, String, Int)].collect().toSeq ==
+      Seq((2L, "v2", 2), (3L, "v3", 3)))
   }
 }

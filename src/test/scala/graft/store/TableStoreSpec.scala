@@ -397,10 +397,8 @@ class TableStoreSpec extends AnyFunSuite {
     val st = freshStore()
     st.createTable("accounts", schema, keys = Seq("id"))
     st.append("accounts", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    st.registerAllViews()
     assert(spark.sql("SELECT v FROM accounts WHERE id = 2").head().getString(0) == "b")
     st.merge("accounts", Seq((2L, "B!")).toDF("id", "v"))
-    st.registerView("accounts") // refresh the snapshot
     assert(spark.sql("SELECT v FROM accounts WHERE id = 2").head().getString(0) == "B!")
   }
 
