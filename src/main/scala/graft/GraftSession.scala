@@ -143,8 +143,16 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
 
   // ---- CDC / ingestion ----------------------------------------------------
 
-  def createStream(onTable: String, name: String): ChangeStream = {
+  /** The key `name` has in `reg`, matched in any case (Snowflake's
+    * unquoted identifiers), else its flat name as written. Every registry
+    * lookup below goes through it. */
+  private def key(reg: mutable.Map[String, _], name: String): String = {
     val flat = recordName(name)
+    reg.keys.find(_.equalsIgnoreCase(flat)).getOrElse(flat)
+  }
+
+  def createStream(onTable: String, name: String): ChangeStream = {
+    val flat = key(streamsReg, name)
     // CREATE OR REPLACE: the replaced stream's offset goes with it
     streamsReg.get(flat).foreach(_.drop())
     val s = ChangeStream.create(store, recordName(onTable), flat)
@@ -152,12 +160,9 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
     s
   }
 
-  def stream(name: String): ChangeStream = streamsReg(recordName(name))
-  def streamOpt(name: String): Option[ChangeStream] = {
-    val flat = recordName(name)
-    streamsReg.find(_._1.equalsIgnoreCase(flat)).map(_._2)
-  }
-  def dropStream(name: String): Unit = streamsReg.remove(recordName(name)).foreach(_.drop())
+  def stream(name: String): ChangeStream = streamsReg(key(streamsReg, name))
+  def streamOpt(name: String): Option[ChangeStream] = streamsReg.get(key(streamsReg, name))
+  def dropStream(name: String): Unit = streamsReg.remove(key(streamsReg, name)).foreach(_.drop())
 
   /** SHOW STREAMS (F7): name, source table, consumed-through version,
     * pending version count (cheap — no data IO). */
@@ -169,18 +174,15 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
   def createPipe(name: String, landingDir: String, stageTable: String,
       schema: StructType, fmt: CsvFormat = CsvFormat(), format: String = "csv"): Pipe = {
     checkpointSeq += 1
-    val flat = recordName(name)
+    val flat = key(pipesReg, name)
     val p = new Pipe(spark, flat, landingDir, recordName(stageTable), schema, store,
       s"$root/_checkpoints/pipe_${flat}_$checkpointSeq", fmt, format)
     pipesReg(flat) = p
     p
   }
 
-  def pipe(name: String): Pipe = pipesReg(recordName(name))
-  def pipeOpt(name: String): Option[Pipe] = pipesReg.get(recordName(name))
-  def dropPipe(name: String): Unit = {
-    pipesReg.remove(recordName(name)).foreach(_.pause())
-  }
+  def pipe(name: String): Pipe = pipesReg(key(pipesReg, name))
+  def dropPipe(name: String): Unit = pipesReg.remove(key(pipesReg, name)).foreach(_.pause())
 
   /** SHOW PIPES (F7): name, status. */
   def listPipes(): Seq[(String, String)] =
@@ -188,13 +190,14 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
 
   private val viewsReg = mutable.LinkedHashMap.empty[String, String]
 
-  /** CREATE VIEW: each statement naming the view analyzes its SQL afresh
-    * ([[relation]]), so it reflects the latest commits, like Snowflake's,
-    * and a broken view fails only the statements that name it. */
+  /** CREATE VIEW: each statement naming the view reads its SQL afresh
+    * ([[relation]], the way [[GraftSql]] reads a query body), so it
+    * reflects the latest commits, like Snowflake's, and a broken view
+    * fails only the statements that name it. */
   def createView(name: String, sql: String): Unit =
-    viewsReg(recordName(name)) = sql
+    viewsReg(key(viewsReg, name)) = sql
 
-  def dropView(name: String): Unit = viewsReg.remove(recordName(name))
+  def dropView(name: String): Unit = viewsReg.remove(key(viewsReg, name))
   def listViews(): Seq[String] = viewsReg.keys.toSeq
 
   // the graft views being expanded on this thread, innermost first
@@ -208,7 +211,7 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
       require(!outer.exists(_.equalsIgnoreCase(n)),
         s"view $n references itself: ${(n :: outer).reverse.mkString(" -> ")}")
       expanding.set(n :: outer)
-      try spark.sql(q) finally expanding.set(outer)
+      try GraftSql.query(spark, store, Some(this), q) finally expanding.set(outer)
     }.orElse(streamOpt(name).map(_.relation))
       .orElse(store.relation(name))
 
@@ -216,7 +219,7 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
     * in COPY INTO resolves against it (reference: `@landing/landing/
     * customer`, customer-...sql:54). */
   def createStage(name: String, dir: String): Unit =
-    stagesReg(recordName(name)) = dir.stripSuffix("/")
+    stagesReg(key(stagesReg, name)) = dir.stripSuffix("/")
 
   /** Catalog containers (CREATE WAREHOUSE / DATABASE / SCHEMA / STORAGE
     * INTEGRATION — reference README.md:19-45): recorded no-ops. The store
@@ -245,7 +248,7 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
   def listFileFormats(): Seq[(String, String)] =
     fileFormatsReg.toSeq.map { case (n, o) => (n, o.getOrElse("type", "csv")) }
 
-  def stageDir(name: String): String = stagesReg(recordName(name))
+  def stageDir(name: String): String = stagesReg(key(stagesReg, name))
   def listStages(): Seq[(String, String)] = stagesReg.toSeq
 
   // ---- SQL ----------------------------------------------------------------

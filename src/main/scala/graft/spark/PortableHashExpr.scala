@@ -70,7 +70,8 @@ case class PortableHash(child: Expression) extends UnaryExpression {
 }
 
 /** Session extension registering graft's native SQL functions, its
-  * name-resolution rule ([[ResolveGraftNames]]) and its optimizer rules.
+  * parser ([[GraftParser]]), its name-resolution rule
+  * ([[ResolveGraftNames]]) and its optimizer rules.
   * Activate with `.config("spark.sql.extensions", "graft.spark.GraftExtensions")`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -110,7 +111,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_bpe_apply"),
       new ExpressionInfo(classOf[BpeApplyMerges].getName, "graft_bpe_apply"),
       (children: Seq[Expression]) => BpeApplyMerges(children(0), children(1))))
-    // store tables, streams and graft views resolve by name in any SQL
+    // TABLE(graft_*(…)) and task_history() parse to plan nodes, and store
+    // tables (at any version), streams and graft views resolve by name, in
+    // any SQL
+    ext.injectParser((_, parser) => new GraftParser(parser))
     ext.injectResolutionRule(ResolveGraftNames)
     // NTZ clustering keys prune through their derived day column
     ext.injectOptimizerRule(_ => NtzDayPrune)

@@ -44,12 +44,12 @@ import graft.store.TableStore
   *    commits, the reference's exactly-once contract)
   *  - `USE ...` → no-op; `--` and block comments are stripped
   *  - any other statement → `spark.sql` passthrough (SELECT monitoring
-  *    queries, E3), with `table(information_schema.task_history())`
-  *    rewritten to the orchestrator's run-log table
-  *  - `TABLE(graft_*(…))` table functions in queries / CTAS / INSERT
-  *    bodies expose the flagship LLM-pipeline operators (near-dup
-  *    filter, decontamination, BM25, kmeans-IVF ANN, token-budget mix)
-  *    to SQL — see [[TableFunctions]]
+  *    queries, E3); `table(information_schema.task_history())` reads the
+  *    orchestrator's run-log table
+  *  - `TABLE(graft_*(…))` table functions expose the flagship
+  *    LLM-pipeline operators (near-dup filter, decontamination, BM25,
+  *    kmeans-IVF ANN, token-budget mix) to SQL — see [[TableFunctions]]
+  *  - `t AT (VERSION => n)` / `t AT (OFFSET => -k)` time travel
   *
   * Snowflake-style qualified names (`stg.stg_customer`) are normalized to
   * their flat last segment via the session's name map. SELECT subqueries
@@ -61,11 +61,15 @@ import graft.store.TableStore
   *
   * How the text is read: MERGE, UPDATE and DELETE go through Spark's own
   * parser (the session's `sqlParser`), and graft reads the plans it
-  * returns (see [[MergeSql]] for the MERGE clause regrouping). Every other
-  * quote-, comment- or paren-aware step — comment stripping, statement
-  * and list splitting, name normalization, QUALIFY, `AT (VERSION => n)`,
-  * `TABLE(graft_*(…))` and the `task_history()` rewrite — walks the tokens
-  * of [[SqlScanner]], the one lexing rule, so none of them looks inside a
+  * returns (see [[MergeSql]] for the MERGE clause regrouping). The same
+  * parser, wrapped by [[graft.spark.GraftParser]], reads every query, so
+  * `TABLE(graft_*(…))` and `task_history()` become plan nodes that
+  * [[graft.spark.ResolveGraftNames]] resolves, in a statement, a graft
+  * view, a MERGE source or plain `spark.sql` alike; no temp view is
+  * registered. Every other quote-, comment- or paren-aware step — comment
+  * stripping, statement and list splitting, name normalization, QUALIFY
+  * and the `AT (…)` to `VERSION AS OF` spelling — walks the tokens of
+  * [[SqlScanner]], the one lexing rule, so none of them looks inside a
   * string literal or a comment. The remaining regexes only classify a
   * statement by its leading keywords and pick out DDL names and options.
   */
@@ -129,8 +133,6 @@ object GraftSql {
   private val InsertRe =
     """(?is)^\s*INSERT\s+(INTO|OVERWRITE)(?:\s+INTO)?\s+(?:TABLE\s+)?([\w.]+)\s*(?:\(([\w\s,]+)\)\s*)?(SELECT.*|VALUES.*)$""".r
   private val MergeRe = """(?is)^\s*MERGE\s+INTO\s+.*$""".r
-  private val TaskHistoryFnRe =
-    """(?i)table\s*\(\s*information_schema\.task_history\s*\(\s*\)\s*\)"""
 
   /** Execute one statement; DDL/DML return None, queries return rows. */
   def execute(spark: SparkSession, store: TableStore, sql: String,
@@ -140,8 +142,13 @@ object GraftSql {
     def sess: GraftSession =
       session.getOrElse(sys.error(s"statement needs a GraftSession (streams/pipes/tasks): $sql"))
     session.orElse(Option(store)).foreach(GraftCatalog.attach)
-    def query(q: String): DataFrame = spark.sql(rewriteQualify(
-      TableFunctions.rewrite(spark, store, session, timeTravel(spark, store, session, q)), spark))
+    def flatName(name: String): String = session.map(_.recordName(name)).getOrElse(name)
+    // `@stage[/sub]` → the stage's directory
+    def stagePath(at: String): String = at.split("/", 2) match {
+      case Array(stage, sub) => sess.stageDir(stage) + "/" + sub
+      case Array(stage) => sess.stageDir(stage)
+    }
+    def query(q: String): DataFrame = GraftSql.query(spark, store, session, q)
     val stmt = norm(SqlScanner.stripComments(sql), session)
     stmt match {
       case UseRe() => None
@@ -158,17 +165,14 @@ object GraftSql {
 
       case CreateTableCloneRe(replace, name, src, atKind, atVal) =>
         val flat = session.map(_.recordCreate(name)).getOrElse(name)
-        val flatSrc = session.map(_.recordName(src)).getOrElse(src)
+        val flatSrc = flatName(src)
         // validate the source BEFORE any drop: a self-clone (src resolves
         // to dst) or a missing source must not leave the destination
         // dropped by the OR REPLACE path
         require(!flatSrc.equalsIgnoreCase(flat),
           s"cannot clone $src onto itself ($flat)")
         require(store.exists(flatSrc), s"table $flatSrc does not exist")
-        val version = Option(atKind).map { k =>
-          if (k.equalsIgnoreCase("VERSION")) atVal.toLong
-          else store.currentVersion(flatSrc) + atVal.toLong
-        }
+        val version = Option(atKind).map(atVersion(store, flatSrc, _, atVal.toLong))
         if (store.exists(flat)) {
           if (replace != null) store.dropTable(flat)
           else sys.error(s"table $flat already exists (use CREATE OR REPLACE)")
@@ -177,7 +181,7 @@ object GraftSql {
         None
 
       case UndropTableRe(name) =>
-        store.undropTable(session.map(_.recordName(name)).getOrElse(name))
+        store.undropTable(flatName(name))
         None
 
       // must precede ADD COLUMN: `ADD SEARCH OPTIMIZATION ...` would
@@ -186,24 +190,21 @@ object GraftSql {
         // Snowflake's search optimization service, as sidecar metadata:
         // subsequent batch writes carry per-file lookup blooms for these
         // columns; compact() backfills existing files
-        store.declareLookup(session.map(_.recordName(name)).getOrElse(name),
-          cols.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty))
+        store.declareLookup(flatName(name), cols.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty))
         None
 
       case AlterTableAutoCompactRe(name, n) =>
         // Snowflake-style table property: the write-time auto-compaction
         // policy travels WITH the table, so every writer applies it
-        store.setAutoCompact(session.map(_.recordName(name)).getOrElse(name),
-          Some(if (n.equalsIgnoreCase("OFF")) 0 else n.toInt))
+        store.setAutoCompact(flatName(name), Some(if (n.equalsIgnoreCase("OFF")) 0 else n.toInt))
         None
 
       case AlterTableUnsetAutoCompactRe(name) =>
-        store.setAutoCompact(
-          session.map(_.recordName(name)).getOrElse(name), None)
+        store.setAutoCompact(flatName(name), None)
         None
 
       case AlterTableAddColRe(name, colDdl) =>
-        val flat = session.map(_.recordName(name)).getOrElse(name)
+        val flat = flatName(name)
         val (schema, defaults, autoInc) = parseColumns(colDdl)
         require(schema.fields.length == 1, s"ADD COLUMN takes one column: $colDdl")
         require(autoInc.isEmpty, "adding an AUTOINCREMENT column is not supported")
@@ -212,23 +213,22 @@ object GraftSql {
         None
 
       case AlterTableDropColRe(name, colName) =>
-        store.dropColumn(session.map(_.recordName(name)).getOrElse(name), colName)
+        store.dropColumn(flatName(name), colName)
         None
 
       case AlterTableRenameColRe(name, from, to) =>
-        store.renameColumn(session.map(_.recordName(name)).getOrElse(name), from, to)
+        store.renameColumn(flatName(name), from, to)
         None
 
       case AlterTableClusterRe(name, zorder, cols) =>
         // ZORDER: multi-dimensional clustering (Delta's OPTIMIZE ZORDER
         // BY spelling grafted onto Snowflake's CLUSTER BY DDL)
-        store.recluster(session.map(_.recordName(name)).getOrElse(name),
-          cols.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty),
+        store.recluster(flatName(name), cols.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty),
           zorder = zorder != null)
         None
 
       case AlterTableDropClusterRe(name) =>
-        store.dropClusteringKey(session.map(_.recordName(name)).getOrElse(name))
+        store.dropClusteringKey(flatName(name))
         None
 
       case CreateTableRe(replace, name, colsDdl, cluster1, keys, cluster2) =>
@@ -270,7 +270,7 @@ object GraftSql {
         None
 
       case CreateViewRe(name, body) =>
-        sess.createView(name, rewriteQualify(body, spark))
+        sess.createView(name, body)
         None
 
       case CreateStreamRe(name, table) =>
@@ -281,7 +281,7 @@ object GraftSql {
         sess.createStage(name, dir)
         None
 
-      case CreatePipeRe(name, table, stagePath, fmtOpts, fmtName) =>
+      case CreatePipeRe(name, table, at, fmtOpts, fmtName) =>
         val inline = Option(fmtOpts).map(parseOptions).getOrElse(Map.empty)
         // FILE_FORMAT = (FORMAT_NAME='x') / FILE_FORMAT = x resolves the
         // named format (README's `create file format csv ...`); inline
@@ -300,11 +300,8 @@ object GraftSql {
           delimiter = opts.get("field_delimiter").map(unescapeOpt).getOrElse(","),
           quote = opts.get("field_optionally_enclosed_by").map(unescapeOpt).getOrElse("\""),
           nullValue = opts.get("null_if").map(unescapeOpt).getOrElse("\\N"))
-        val segs = stagePath.split("/", 2)
-        val landing = sess.stageDir(segs(0)) +
-          (if (segs.length > 1) "/" + segs(1) else "")
         val flatTable = sess.recordName(table)
-        sess.createPipe(name, landing, flatTable, store.schemaOf(flatTable), fmt, format)
+        sess.createPipe(name, stagePath(at), flatTable, store.schemaOf(flatTable), fmt, format)
         None
 
       case CreateTaskRe(name, optsBlob, body) =>
@@ -360,10 +357,8 @@ object GraftSql {
         case "file formats" => sess.listFileFormats().toDF("name", "type")
       })
 
-      case ListStageRe(stagePath) =>
-        val segs = stagePath.split("/", 2)
-        val dir = sess.stageDir(segs(0)) + (if (segs.length > 1) "/" + segs(1) else "")
-        val p = new org.apache.hadoop.fs.Path(dir)
+      case ListStageRe(at) =>
+        val p = new org.apache.hadoop.fs.Path(stagePath(at))
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val files =
           if (!fs.exists(p)) Seq.empty[(String, Long, java.sql.Timestamp)]
@@ -391,7 +386,7 @@ object GraftSql {
 
       case DropRe(kind, name) => kind.toLowerCase match {
         case "table" =>
-          val flat = session.map(_.recordName(name)).getOrElse(name)
+          val flat = flatName(name)
           store.dropTable(flat)
           session.foreach(_.recordDrop(flat))
           None
@@ -401,7 +396,7 @@ object GraftSql {
       }
 
       case TruncateRe(name) =>
-        val flat = session.map(_.recordName(name)).getOrElse(name)
+        val flat = flatName(name)
         if (store.exists(flat)) store.truncate(flat)
         else if (!stmt.toLowerCase.contains("if exists"))
           sys.error(s"table $flat does not exist")
@@ -409,10 +404,7 @@ object GraftSql {
 
       case UpdateOrDeleteRe() =>
         // read by Spark's parser, like MERGE
-        def flat(table: LogicalPlan) = {
-          val name = MergeSql.tableRef(table)._1
-          session.map(_.recordName(name)).getOrElse(name)
-        }
+        def flat(table: LogicalPlan) = flatName(MergeSql.tableRef(table)._1)
         def column(e: Expression) = GraftColumnBridge.column(e)
         MergeSql.parsePlan(stmt) match {
           case DeleteFromTable(table, cond) => store.delete(flat(table), column(cond))
@@ -427,7 +419,7 @@ object GraftSql {
         None
 
       case InsertRe(mode, name, colList, body) =>
-        val flat = session.map(_.recordName(name)).getOrElse(name)
+        val flat = flatName(name)
         val rows = query(body)
         // INSERT ... SELECT is POSITIONAL (Snowflake semantics): rename
         // the query's columns to the target names by position before the
@@ -444,9 +436,9 @@ object GraftSql {
         None
 
       case MergeRe() =>
-        val pm = MergeSql.parse(stmt)
+        val pm = MergeSql.parse(timeTravel(store, session, stmt))
         def merge(): Unit = MergeSql.runWith(spark, store, pm, pm.sourceQuery
-          .map(q => spark.sql(rewriteQualify(q, spark))).getOrElse(spark.table(pm.source)))
+          .map(rewriteQualify(_)(spark.sql)).getOrElse(spark.table(pm.source)))
         // a stream named directly or inside a USING (subquery), as the
         // reference's item script does, is consumed; __action stays
         // visible to branch conditions and is never written
@@ -462,29 +454,37 @@ object GraftSql {
         if ("""(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TRANSIENT\s+|TEMP(?:ORARY)?\s+)?TABLE\b""".r
             .findFirstIn(other).isDefined)
           sys.error(s"unsupported CREATE TABLE form (not columns/CTAS/CLONE): ${other.take(200)}")
-        Some(query(SqlScanner.mapCode(other)(_.replaceAll(TaskHistoryFnRe, "task_history"))))
+        Some(query(other))
     }
   }
+
+  /** A query body, read the one way every statement, graft view and MERGE
+    * source is: `AT (…)` respelled ([[timeTravel]]), QUALIFY rewritten
+    * ([[rewriteQualify]]), then analyzed by `spark`. */
+  private[graft] def query(spark: SparkSession, store: TableStore,
+      session: Option[GraftSession], q: String): DataFrame =
+    rewriteQualify(timeTravel(store, session, q))(spark.sql)
 
   private val AtRe =
     """(?i)([\w.]+)\s+AT\s*\(\s*(VERSION|OFFSET)\s*=>\s*(-?\d+)\s*\)""".r
 
-  /** Snowflake time travel: `t AT (VERSION => n)` reads version n of a
-    * store table, `t AT (OFFSET => -k)` reads k commits back. Each
-    * occurrence is registered as a snapshot view and substituted (the
-    * store's manifests are immutable, so any retained version is exactly
-    * reconstructable — [[TableStore.readVersion]]). */
-  private def timeTravel(spark: SparkSession, store: TableStore,
-      session: Option[GraftSession], sql: String): String =
+  /** Snowflake time travel, spelled the way Spark's parser reads it:
+    * `t AT (VERSION => n)` becomes `t VERSION AS OF n`, and
+    * `t AT (OFFSET => -k)` becomes the version k commits back.
+    * [[graft.spark.ResolveGraftNames]] reads that version of the store
+    * table (the store's manifests are immutable, so any retained version
+    * is exactly reconstructable — [[TableStore.readVersion]]). */
+  private def timeTravel(store: TableStore, session: Option[GraftSession], sql: String): String =
     SqlScanner.mapCode(sql)(AtRe.replaceAllIn(_, m => {
       val flat = session.map(_.recordName(m.group(1))).getOrElse(m.group(1))
-      val v =
-        if (m.group(2).equalsIgnoreCase("VERSION")) m.group(3).toLong
-        else store.currentVersion(flat) + m.group(3).toLong
-      val view = s"${flat}__at_$v"
-      store.readVersion(flat, v).createOrReplaceTempView(view)
-      java.util.regex.Matcher.quoteReplacement(view)
+      java.util.regex.Matcher.quoteReplacement(
+        s"$flat VERSION AS OF ${atVersion(store, flat, m.group(2), m.group(3).toLong)}")
     }))
+
+  /** `AT (VERSION => n)` is version n; `AT (OFFSET => -k)` is k commits
+    * before the current version. */
+  private def atVersion(store: TableStore, table: String, kind: String, n: Long): Long =
+    if (kind.equalsIgnoreCase("VERSION")) n else store.currentVersion(table) + n
 
   /** Execute a script of `;`-separated statements; returns the rows of
     * the final statement if it was a query. */
@@ -553,15 +553,15 @@ object GraftSql {
     *    when the predicate's OVER clause references a select-list alias
     *    (Spark rejects lateral aliases inside window specs,
     *    UNSUPPORTED_FEATURE.LATERAL_COLUMN_ALIAS_IN_WINDOW).
-    * With a `probe` session the injected form is analysis-checked and falls
-    * back to the wrapper ONLY on that specific error — any other analysis
-    * failure (e.g. an unregistered table at view-definition time) keeps the
-    * injected form and surfaces naturally at execution. */
-  private[graft] def rewriteQualify(sql: String, probe: SparkSession = null): String = {
+    * `analyze` takes the injected form first and gets the wrapper ONLY on
+    * that specific error; any other analysis failure surfaces as is. The
+    * caller keeps what `analyze` returns, so a query is analyzed once and
+    * the table functions in it run once. */
+  private[graft] def rewriteQualify[T](sql: String)(analyze: String => T): T = {
     val toks = SqlScanner.tokens(sql)
     def top(from: Int, until: Int)(words: String*) =
       (from until until).find(i => toks(i).depth == 0 && words.exists(w => toks(i).is(w)))
-    val q = top(0, toks.length)("qualify").getOrElse(return sql)
+    val q = top(0, toks.length)("qualify").getOrElse(return analyze(sql))
     val head = sql.substring(0, toks(q).start).trim
     // the predicate runs to a top-level ORDER BY / LIMIT or the end
     val (pred, tail) = top(q + 1, toks.length)("order", "limit") match {
@@ -588,19 +588,16 @@ object GraftSql {
         s"SELECT * EXCEPT(__qualify) FROM (${sql.substring(0, f).trim}, " +
           s"($pred) AS __qualify ${sql.substring(f, toks(q).start).trim}) " +
           s"WHERE __qualify" + tailSql
-      if (probe == null) injected
-      else
-        try { probe.sql(injected); injected } // eager analysis, no execution
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if Option(e.getCondition).getOrElse("").contains("LATERAL_COLUMN_ALIAS") ||
-                 e.getMessage.contains("LATERAL_COLUMN_ALIAS") =>
-            wrapper
-          case _: Throwable => injected
-        }
+      try analyze(injected)
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if Option(e.getCondition).getOrElse("").contains("LATERAL_COLUMN_ALIAS") ||
+               e.getMessage.contains("LATERAL_COLUMN_ALIAS") =>
+          analyze(wrapper)
+      }
     } else
       // no FROM / SELECT DISTINCT: the injected form cannot apply
-      wrapper
+      analyze(wrapper)
   }
 
   /** Strip one balanced outer paren pair (and a trailing `;`) from a CTAS

@@ -173,7 +173,7 @@ object MergeSql {
       case r: UnresolvedRelation => Seq(r.multipartIdentifier.mkString("."))
       case w: UnresolvedWith => w.cteRelations.flatMap(c => of(c._2))
     }.flatten
-    of(parsePlan(GraftSql.rewriteQualify(query)))
+    of(parsePlan(GraftSql.rewriteQualify(query)(identity)))
   }
 
   /** Execute against DataFrames (target/source resolved by caller).

@@ -1,20 +1,22 @@
 package graft.sql
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.types.{NumericType, StringType}
 
 import graft.GraftSession
 import graft.ops.{CorpusOps, Dedup, Retrieval, Similarity}
+import graft.spark.GraftCatalog
 import graft.store.TableStore
 
 /** SQL table-function surface for the flagship LLM-pipeline operators —
   * the warehouse user model of the reference (everything is SQL:
   * customer-end-to-end-pipeline-script.sql:62-179) extended to the ops
   * the Scala API added. A `TABLE(graft_*(…))` call anywhere in a query
-  * evaluates the named library operator and substitutes a temp view over
-  * its result, so the ops compose with ordinary SQL (joins, filters,
-  * CTAS, INSERT … SELECT) exactly like Snowflake table functions:
+  * evaluates the named library operator in the call's place, so the ops
+  * compose with ordinary SQL (joins, filters, CTAS, INSERT … SELECT)
+  * exactly like Snowflake table functions:
   *
   *  - `TABLE(graft_neardup_filter(t, 'id', 'text'[, min_jaccard[, k,
   *    bands, shingle_n]]))` → [[Dedup.nearDupFilter]]: the input rows
@@ -196,111 +198,93 @@ import graft.store.TableStore
   *  - `TABLE(graft_bpe_fertility(t, 'text', 'lang', num_merges[,
   *    batch_k]))` → [[CorpusOps.bpeFertility]]: per-language mean
   *    subwords-per-word under the corpus-trained merge table
+  *  - `TABLE(graft_temperature_mix(t, 'id', 'text', 'source',
+  *    total_budget))` → [[CorpusOps.temperatureMix]]
+  *  - `TABLE(graft_shuffle_shards(t, 'id', n_shards))` →
+  *    [[CorpusOps.shuffleShards]]
+  *  - `TABLE(graft_quality_retention(t, 'id', 'text', 'lang',
+  *    retention))` → [[CorpusOps.qualityRetention]]
+  *  - `TABLE(graft_curriculum(t, 'id', 'text', n_phases[, vocab_size]))`
+  *    → [[CorpusOps.curriculum]]
+  *  - `TABLE(graft_knn_graph(t, 'id', 'vec', k))` →
+  *    [[Similarity.knnGraph]]
+  *  - `TABLE(graft_join_prune_info())` → [[graft.store.JoinKeyPrune]]'s
+  *    recent decisions in this JVM: table, probe, files total and kept
+  *
+  * How a call is read: [[graft.spark.GraftParser]] turns each
+  * `TABLE(graft_*(…))` in a parsed plan into a
+  * [[graft.spark.GraftTableCall]], and [[graft.spark.ResolveGraftNames]]
+  * calls [[eval]] when the analyzer reaches it — in a graft statement, a
+  * graft view body, a MERGE source or plain `spark.sql` alike. No view is
+  * registered: the op's analyzed plan takes the call's place in the
+  * query, so Catalyst optimizes the enclosing query and the operator's
+  * plan as one tree (filters on the result push into the op where
+  * semantics allow, exactly as in the Scala API). A frame an op binds to
+  * the TinyLoop child session is inlined the same way; both sessions
+  * share one SparkContext.
   *
   * Table arguments are names Spark SQL resolves: temp views, then store
   * tables, streams and graft views (schema-qualified names normalize
-  * through the session, same as every other statement);
-  * string arguments are single-quoted literals; numbers are unquoted.
-  * The call is evaluated ONCE per statement at rewrite time — Snowflake
+  * through the session, same as every other statement); string arguments
+  * are single-quoted literals; numbers are unquoted. A call is evaluated
+  * once per analysis, so a view over it sees later commits. Snowflake
   * lateral-join semantics (per-row arguments) are out of scope, matching
   * the reference's usage where table functions take constant arguments
-  * (`table(information_schema.task_history())`).
-  *
-  * Scale: the rewrite adds nothing to the physical plan — the substituted
-  * view IS the operator's lazy frame, so Catalyst optimizes the enclosing
-  * query and the operator's plan as one tree (filters on the result push
-  * into the op where semantics allow, exactly as in the Scala API). */
+  * (`table(information_schema.task_history())`). */
 object TableFunctions {
 
-  private val viewCounter = new AtomicInteger(0)
-
-  /** Rewrite every `TABLE(graft_*(…))` call in `sql` (outside literals
-    * and comments) to a temp view over the evaluated operator; returns the
-    * statement with calls replaced. Statements without calls pass through
-    * untouched. */
-  def rewrite(spark: SparkSession, store: TableStore,
-      session: Option[GraftSession], sql: String): String = {
-    val toks = SqlScanner.tokens(sql)
-    def after(i: Int) = SqlScanner.next(toks, i)
-    def tok(i: Int) = toks.lift(i)
-    // `TABLE ( graft_fn (`
-    def isCall(i: Int) = toks(i).is("table") && tok(after(i)).exists(_.is('(')) &&
-      tok(after(after(i))).exists(t => t.kind == SqlScanner.Word && t.text.toLowerCase.startsWith("graft_")) &&
-      tok(after(after(after(i)))).exists(_.is('('))
-    toks.indices.find(isCall) match {
-      case None => sql
-      case Some(call) =>
-        val fnName = toks(after(after(call)))
-        val argsOpen = after(after(after(call)))
-        val argsClose = SqlScanner.closing(toks, argsOpen)
-        if (argsClose < 0) sys.error(s"malformed table-function call (unbalanced parens): $sql")
-        val callClose = after(argsClose)
-        require(tok(callClose).exists(_.is(')')),
-          s"malformed TABLE(${fnName.text}(…)) call: missing closing paren")
-        val fn = fnName.text.toLowerCase
-        val args = SqlScanner.splitTopLevel(
-          sql.substring(toks(argsOpen).end, toks(argsClose).start), ',')
-          .map(_.trim).filter(_.nonEmpty)
-        val df0 = eval(spark, store, session, fn, args)
-        // temp views are SESSION-scoped: an op may hand back a frame
-        // bound to a child session (the TinyLoop iteration sessions —
-        // pagerank, BPE rounds), and registering the view there would make the
-        // statement's own session unable to resolve it. Rebind such a
-        // frame onto the statement's session through the Row API (the
-        // results here are bounded op outputs).
-        val df = if (df0.sparkSession eq spark) df0
-          else spark.createDataFrame(df0.rdd, df0.schema)
-        val view = s"__tf_${fn}_${viewCounter.incrementAndGet()}"
-        df.createOrReplaceTempView(view)
-        rewrite(spark, store, session,
-          sql.substring(0, toks(call).start) + view + sql.substring(toks(callClose).end))
+  /** Evaluate `fn` on its parsed arguments: the names and literals of one
+    * `TABLE(graft_*(…))` call. Names resolve through the graft objects
+    * attached to `spark` ([[GraftCatalog]]), latest first. */
+  private[graft] def eval(spark: SparkSession, fn: String, args: Seq[Expression]): DataFrame = {
+    val attached = GraftCatalog.attachedTo(spark).toSeq
+    val session = attached.collectFirst { case g: GraftSession => g }
+    def flat(a: Expression): String = session.map(_.recordName(text(a))).getOrElse(text(a))
+    def rel(a: Expression): DataFrame = spark.table(flat(a))
+    // `f` over the store that holds table `a`, for the ops that read its metadata
+    def inStore(a: Expression)(f: (TableStore, String) => DataFrame): DataFrame = {
+      val t = flat(a)
+      f(attached.map(_.store).find(_.exists(t)).getOrElse(sys.error(s"$fn: table $t does not exist")), t)
     }
-  }
-
-  private def eval(spark: SparkSession, store: TableStore,
-      session: Option[GraftSession], fn: String, args: Seq[String]): DataFrame = {
-    def rel(a: String): DataFrame = spark.table(session.map(_.recordName(a)).getOrElse(a))
-    def str(a: String): String = {
-      require(a.length >= 2 && a.head == '\'' && a.last == '\'',
-        s"$fn: expected a quoted string literal, got $a")
-      a.substring(1, a.length - 1).replace("''", "'")
+    // a literal's text as written: numbers as digits, names as named,
+    // anything else (a string literal included) as SQL
+    def text(a: Expression): String = a match {
+      case Literal(v, _: NumericType) => v.toString
+      case UnresolvedAttribute(parts) => parts.mkString(".")
+      case other => other.sql
+    }
+    def str(a: Expression): String = a match {
+      case Literal(v, StringType) if v != null => v.toString
+      case other => throw new IllegalArgumentException(
+        s"$fn: expected a quoted string literal, got ${text(other)}")
     }
     def arity(ok: Boolean, want: String): Unit =
-      require(ok, s"$fn takes $want arguments, got ${args.length}: ${args.mkString(", ")}")
+      require(ok, s"$fn takes $want arguments, got ${args.length}: ${args.map(text).mkString(", ")}")
     // numeric literals get the same user-facing diagnostics as arity/str
     // violations — a bare toInt would surface a raw NumberFormatException
     // with no hint of which function or argument was at fault
-    def int(a: String): Int =
-      try a.trim.toInt catch {
+    def number[T](s: String, what: String)(parse: String => T): T =
+      try parse(s.trim) catch {
         case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$fn: expected an integer literal, got $a")
+          s"$fn: expected $what literal, got $s")
       }
-    def posInt(a: String, what: String): Int = {
-      val v = int(a)
-      require(v > 0, s"$fn: $what must be a positive integer, got $v")
+    def int(a: Expression): Int = number(text(a), "an integer")(_.toInt)
+    def long(a: Expression): Long = number(text(a), "an integer")(_.toLong)
+    def num(a: Expression): Double = number(text(a), "a numeric")(_.toDouble)
+    def positive[T](v: T, what: String)(implicit n: Numeric[T]): T = {
+      require(n.gt(v, n.zero), s"$fn: $what must be a positive integer, got $v")
       v
     }
-    def long(a: String): Long =
-      try a.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$fn: expected an integer literal, got $a")
-      }
-    def posLong(a: String, what: String): Long = {
-      val v = long(a)
-      require(v > 0, s"$fn: $what must be a positive integer, got $v")
-      v
-    }
-    def num(a: String): Double =
-      try a.trim.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$fn: expected a numeric literal, got $a")
-      }
-    def budgets(a: String): Map[String, Long] =
+    // 'k=v,…' lists; `entries` says what an entry is, for the error
+    def pairs(a: Expression, entries: String): Seq[(String, String)] =
       str(a).split(",").iterator.map(_.trim).filter(_.nonEmpty).map { kv =>
         val i = kv.lastIndexOf('=')
-        require(i > 0, s"$fn: budget entries are source=tokens, got '$kv'")
-        kv.take(i).trim -> long(kv.drop(i + 1))
-      }.toMap
+        require(i > 0, s"$fn: $entries, got '$kv'")
+        kv.take(i).trim -> kv.drop(i + 1).trim
+      }.toSeq
+    def budgets(a: Expression): Map[String, Long] =
+      pairs(a, "budget entries are source=tokens").map { case (k, v) =>
+        k -> number(v, "an integer")(_.toLong) }.toMap
 
     fn match {
       case "graft_neardup_filter" =>
@@ -429,12 +413,8 @@ object TableFunctions {
         arity(args.length == 2 || args.length == 3,
           "2 or 3 (t, 'id'[, 'name=weight,…'])")
         val splits =
-          if (args.length > 2)
-            str(args(2)).split(",").iterator.map(_.trim).filter(_.nonEmpty).map { kv =>
-              val i = kv.lastIndexOf('=')
-              require(i > 0, s"$fn: split entries are name=weight, got '$kv'")
-              kv.take(i).trim -> kv.drop(i + 1).trim.toInt
-            }.toSeq
+          if (args.length > 2) pairs(args(2), "split entries are name=weight").map { case (k, v) =>
+            k -> number(v, "an integer")(_.toInt) }
           else Seq(("train", 8), ("val", 1), ("test", 1))
         CorpusOps.hashSplit(rel(args(0)), str(args(1)), splits)
 
@@ -479,8 +459,7 @@ object TableFunctions {
 
       case "graft_clustering_info" =>
         arity(args.length == 1, "1 (store_table) — the table must declare CLUSTER BY")
-        store.clusteringInfo(
-          session.map(_.recordName(args(0))).getOrElse(args(0)))
+        inStore(args(0))(_.clusteringInfo(_))
 
       case "graft_join_prune_info" =>
         // operator visibility for the plan-time JoinKeyPrune rule: did
@@ -498,9 +477,7 @@ object TableFunctions {
 
       case "graft_scan_where" =>
         arity(args.length == 2, "2 (store_table, 'predicate sql')")
-        store.scanWhere(
-          session.map(_.recordName(args(0))).getOrElse(args(0)),
-          org.apache.spark.sql.functions.expr(str(args(1))))
+        inStore(args(0))(_.scanWhere(_, org.apache.spark.sql.functions.expr(str(args(1)))))
 
       case "graft_vocab_stats" =>
         arity(args.length == 3, "3 (t, 'text', 'source')")
@@ -591,7 +568,7 @@ object TableFunctions {
           str(args(4)).split(",").map(_.trim).filter(_.nonEmpty).toSeq,
           maxGapUs = if (args.length > 5) Some(long(args(5))) else None,
           maxEventsPerUser = if (args.length > 6)
-            Some(posInt(args(6), "max_events_per_user")) else None)
+            Some(positive(int(args(6)), "max_events_per_user")) else None)
 
       case "graft_funnel_gaps" =>
         arity(args.length >= 5 && args.length <= 7,
@@ -602,7 +579,7 @@ object TableFunctions {
           str(args(4)).split(",").map(_.trim).filter(_.nonEmpty).toSeq,
           maxGapUs = if (args.length > 5) Some(long(args(5))) else None,
           maxEventsPerUser = if (args.length > 6)
-            Some(posInt(args(6), "max_events_per_user")) else None)
+            Some(positive(int(args(6)), "max_events_per_user")) else None)
 
       case "graft_transitions" =>
         arity(args.length == 4 || args.length == 5,
@@ -610,7 +587,7 @@ object TableFunctions {
         graft.ops.EventAnalytics.eventTransitionMatrix(rel(args(0)),
           str(args(1)), str(args(2)), str(args(3)),
           chunkUs = if (args.length > 4)
-            Some(posLong(args(4), "chunk_us")) else None)
+            Some(positive(long(args(4)), "chunk_us")) else None)
 
       case "graft_event_paths" =>
         arity(args.length == 6,
@@ -628,14 +605,14 @@ object TableFunctions {
           "3 or 4 (events, 'user', 'ts'[, window_days])")
         graft.ops.EventAnalytics.dauMau(rel(args(0)), str(args(1)),
           str(args(2)),
-          window = if (args.length > 3) posInt(args(3), "window_days") else 30)
+          window = if (args.length > 3) positive(int(args(3)), "window_days") else 30)
 
       case "graft_dau_mau_hll" =>
         arity(args.length == 3 || args.length == 4,
           "3 or 4 (events, 'user', 'ts'[, window_days])")
         graft.ops.EventAnalytics.dauMauApprox(rel(args(0)), str(args(1)),
           str(args(2)),
-          window = if (args.length > 3) posInt(args(3), "window_days") else 30)
+          window = if (args.length > 3) positive(int(args(3)), "window_days") else 30)
 
       case "graft_hash_tfidf" =>
         arity(args.length == 4, "4 (t, 'id', 'text', dim)")
@@ -732,12 +709,7 @@ object TableFunctions {
         arity(args.length == 5 || args.length == 6,
           "5 or 6 (left, right, 'k1;k2;…', 'ts', 'rightcol=outname,…'[, 'forward'])")
         val keys = str(args(2)).split(";").map(_.trim).filter(_.nonEmpty).toSeq
-        val payload = str(args(4)).split(",").iterator.map(_.trim)
-          .filter(_.nonEmpty).map { kv =>
-            val i = kv.lastIndexOf('=')
-            require(i > 0, s"$fn: payload entries are rightcol=outname, got '$kv'")
-            kv.take(i).trim -> kv.drop(i + 1).trim
-          }.toMap
+        val payload = pairs(args(4), "payload entries are rightcol=outname").toMap
         val forward = args.length > 5 && str(args(5)).equalsIgnoreCase("forward")
         if (forward)
           graft.ops.TemporalJoins.asofForward(rel(args(0)), rel(args(1)),

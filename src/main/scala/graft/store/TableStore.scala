@@ -111,9 +111,16 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
   def exists(table: String): Boolean = fs.exists(latestPtr(table))
 
+  /** [[GraftCatalog.Names]]: the table store behind a bare store's names is itself. */
+  def store: TableStore = this
+
   /** SQL name resolution ([[GraftCatalog]]): table `name`, in any case, now. */
-  def relation(name: String): Option[DataFrame] =
-    (if (exists(name)) Some(name) else listTables().find(_.equalsIgnoreCase(name))).map(read(_))
+  def relation(name: String): Option[DataFrame] = relationAt(name, None)
+
+  /** Table `name`, in any case, at `version` (SQL time travel), else now. */
+  def relationAt(name: String, version: Option[Long]): Option[DataFrame] =
+    (if (exists(name)) Some(name) else listTables().find(_.equalsIgnoreCase(name)))
+      .map(t => readVersion(t, version.getOrElse(currentVersion(t))))
 
   def listTables(): Seq[String] =
     if (!fs.exists(new Path(root))) Nil

@@ -57,4 +57,31 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(g.tasks.runCycle("merge_customer")("merge_customer") == "SKIPPED")
     assert(g.listTables().toSet == Set("raw_customer", "stg_customer", "task_history"))
   }
+
+  test("stream, pipe, view and stage names match in any case") {
+    val root = Files.createTempDirectory("graft_case")
+    val landing = Files.createDirectory(root.resolve("landing"))
+    val g = GraftSession(spark, root.resolve("wh").toString, numBuckets = 2)
+    g.sqlScript(
+      s"""CREATE TABLE ct (id BIGINT, v STRING) KEYS (id);
+         |CREATE STAGE cst URL = '$landing';
+         |CREATE STREAM cs ON TABLE ct;
+         |CREATE PIPE cp AS COPY INTO ct FROM @cst FILE_FORMAT = (TYPE = 'CSV');
+         |CREATE VIEW cv AS SELECT id FROM ct""".stripMargin)
+    Files.writeString(landing.resolve("a.csv"), "1,a\n")
+    // each statement names an object in another case than it was created
+    // with, and must act on that object
+    val cases = Seq[(String, () => Boolean)](
+      "CREATE OR REPLACE STREAM CS ON TABLE ct" -> (() => g.listStreams().map(_._1) == Seq("cs")),
+      "LIST @CST" -> (() => true),
+      "ALTER PIPE CP REFRESH" -> (() => g.table("ct").count() == 1),
+      "SELECT SYSTEM$STREAM_HAS_DATA('CS')" -> (() => g.stream("Cs").hasData),
+      "DROP STREAM CS" -> (() => g.listStreams().isEmpty && g.streamOpt("cs").isEmpty),
+      "DROP PIPE CP" -> (() => g.listPipes().isEmpty),
+      "DROP VIEW CV" -> (() => g.listViews().isEmpty))
+    val failed = cases.filterNot { case (stmt, holds) =>
+      scala.util.Try(g.sql(stmt)).isSuccess && scala.util.Try(holds()).getOrElse(false)
+    }.map(_._1)
+    assert(failed.isEmpty, s"acted on nothing: ${failed.mkString("; ")}")
+  }
 }

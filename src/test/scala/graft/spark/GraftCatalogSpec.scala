@@ -13,7 +13,9 @@ import graft.store.TableStore
   * analyzer, at the state committed when the statement is analyzed: a
   * temp view first, then a catalog table, then the graft name. Every
   * change to what a name denotes is visible to the next statement, and a
-  * dropped name is gone. */
+  * dropped name is gone. `TABLE(graft_*(…))`, time travel, `task_history()`
+  * and DESCRIBE resolve on the same path, in graft SQL and plain
+  * `spark.sql` alike, and register no temp view. */
 class GraftCatalogSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -165,5 +167,74 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(ids(g, "nr_ct") == Seq((2L, "b")))
     assert(g.sql("select * from nr_cs_stm").get.isEmpty, "the MERGE consumed the stream")
     assert(spark.sessionState.catalog.getTempView("nr_cs_stm").isEmpty)
+  }
+
+  test("DESCRIBE reads a graft name's schema") {
+    val g = session()
+    g.sql("create table nr_desc (id bigint, v string)")
+    g.sql("create view nr_desc_v as select id from nr_desc")
+    Seq("describe table nr_desc", "describe nr_desc", "desc NR_DESC").foreach { stmt =>
+      val df = g.sql(stmt).get
+      assert(df.columns.toSeq == Seq("col_name", "data_type", "comment"), stmt)
+      assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+        Seq(("id", "bigint"), ("v", "string")), stmt)
+    }
+    assert(spark.sql("desc nr_desc_v").collect().map(_.getString(0)).toSeq == Seq("id"))
+  }
+
+  test("table functions and time travel register no temp view") {
+    val g = session()
+    g.sql("create table nr_tv (id bigint, v string) keys (id)")
+    g.sql("insert into nr_tv values (1, 'a')")
+    g.sql("insert into nr_tv values (2, 'b')")
+    def graftViews = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith("__tf_") || n.toLowerCase.startsWith("nr_tv")).toSet
+    val before = graftViews
+    g.sql("select * from TABLE(graft_artifacts())").get.collect()
+    assert(g.sql("select count(*) from nr_tv AT (VERSION => 1)").get.as[Long].head() == 1L)
+    // a graft view body reads the same dialect: time travel and QUALIFY
+    g.sql("create view nr_tv_v as select id from nr_tv AT (VERSION => 2) " +
+      "qualify row_number() over (order by id desc) = 1")
+    assert(g.sql("select id from nr_tv_v").get.as[Long].collect().toSeq == Seq(2L))
+    assert(graftViews == before)
+  }
+
+  test("a graft view over a table function answers and sees later commits") {
+    val g = session()
+    g.sql("create table nr_hs (id bigint, v string) keys (id)")
+    g.sql("insert into nr_hs values (1, 'a')")
+    g.sql("create view nr_split as select id, split from TABLE(graft_hash_split(nr_hs, 'id'))")
+    def n(q: String) = g.sql(q).get.as[Long].head()
+    assert(n("select count(*) from nr_split") == 1L)
+    g.sql("insert into nr_hs values (2, 'b')")
+    assert(n("select count(*) from nr_split") == 2L)
+    // inside a CTE body and a subquery too
+    assert(n("with c as (select * from TABLE(graft_hash_split(nr_hs, 'id'))) select count(*) from c") == 2L)
+    assert(n("select count(*) from nr_hs where id in " +
+      "(select id from TABLE(graft_hash_split(nr_hs, 'id')) where id > 1)") == 1L)
+  }
+
+  test("a MERGE source reads a time-travel version") {
+    val g = session()
+    g.sql("create table nr_ms (id bigint, v string) keys (id)")
+    g.sql("insert into nr_ms values (1, 'a')")
+    g.sql("insert into nr_ms values (2, 'b')")
+    g.sql("create table nr_mt (id bigint, v string) keys (id)")
+    g.sql("merge into nr_mt t using (select id, v from nr_ms AT (VERSION => 1)) s on t.id = s.id " +
+      "when not matched then insert (id, v) values (s.id, s.v)")
+    assert(ids(g, "nr_mt") == Seq((1L, "a")))
+  }
+
+  test("plain spark.sql reads store versions and the run log") {
+    val g = session()
+    g.sql("create table nr_vr (id bigint, v string) keys (id)")
+    g.sql("insert into nr_vr values (1, 'a')")
+    g.sql("insert into nr_vr values (2, 'b')")
+    assert(spark.sql("select count(*) from nr_vr version as of 1").as[Long].head() == 1L)
+    assert(spark.sql("select count(*) from nr_vr version as of 2").as[Long].head() == 2L)
+    g.sql("create table task_history (name string)")
+    g.sql("insert into task_history values ('t1')")
+    assert(spark.sql("select name from table(information_schema.task_history())")
+      .as[String].collect().toSeq == Seq("t1"))
   }
 }
