@@ -126,33 +126,24 @@ object ClusterScale {
     years.foreach { y => // yearly arrival batches — bounded count at any SF
       store.append("li_monthly", li.filter(year(col("l_shipday")) === y))
     }
-    // three arms: opt-in scanWhere; the same plain read(t).filter with
-    // the SidecarPrune optimizer rule ON (the new DEFAULT — must serve
-    // scanWhere's exact file set); and the rule disabled via its kill
-    // switch as the true unpruned baseline
+    // three arms: scanWhere; the same plain read(t).filter (the
+    // SidecarPrune optimizer rule prunes both to the same file set); and
+    // a plain parquet read of the manifest's bucket dirs, which the rule
+    // never touches, as the true unpruned baseline
     def scanMonthly(mode: String): (Long, Long, Double, Int) = {
       val cond = col("l_shipday") >= lo && col("l_shipday") < hi
-      if (mode == "off")
-        spark.conf.set(graft.store.SidecarPrune.EnabledConf, "false")
-      try {
-        val df = if (mode == "scanWhere") store.scanWhere("li_monthly", cond)
-                 else store.read("li_monthly").filter(cond)
-        var out = 0L; var took = 0.0
-        val read = readDuring {
-          val (o, t2) = timed(df.agg(count(lit(1))).head().getLong(0))
-          out = o; took = t2
-        }
-        // the transparent rewrite lives in the OPTIMIZED plan, which
-        // Dataset.inputFiles (analyzed plan) misses by design
-        val files = df.queryExecution.optimizedPlan.collect {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            l.relation
-              .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-              .location.inputFiles.length
-        }.sum
-        (read, out, took, files)
-      } finally
-        spark.conf.set(graft.store.SidecarPrune.EnabledConf, "true")
+      val df = mode match {
+        case "scanWhere" => store.scanWhere("li_monthly", cond)
+        case "off" => spark.read.schema(store.schemaOf("li_monthly")).parquet(store
+          .readManifest("li_monthly", store.currentVersion("li_monthly")).map(_._2): _*).filter(cond)
+        case _ => store.read("li_monthly").filter(cond)
+      }
+      var out = 0L; var took = 0.0
+      val read = readDuring {
+        val (o, t2) = timed(df.agg(count(lit(1))).head().getLong(0))
+        out = o; took = t2
+      }
+      (read, out, took, df.inputFiles.length)
     }
     scanMonthly("scanWhere"); scanMonthly("off") // warm
     val (mpRead, mpRows, mpSec, mpFiles) = scanMonthly("scanWhere")

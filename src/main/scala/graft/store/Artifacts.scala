@@ -88,10 +88,10 @@ object Artifacts {
   // signature-scan stage saved; at cluster scale the bucket count is a
   // per-root tuning knob, not a constant to inflate on a 32-core box.
   private def store(s: SparkSession): TableStore =
-    new TableStore(s, root(s), numBuckets = 8)
+    TableStore.unattached(s, root(s), numBuckets = 8)
 
   /** SQL name resolution ([[graft.spark.GraftCatalog]]) of every committed
-    * artifact, by prefix: the per-call stores here are not kept attached. */
+    * artifact, by prefix: the per-call stores here are not attached. */
   def relation(s: SparkSession, name: String): Option[DataFrame] =
     if (name.toLowerCase.startsWith("artifact_")) store(s).relation(name) else None
 

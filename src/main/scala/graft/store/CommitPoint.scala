@@ -2,7 +2,7 @@ package graft.store
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 
 /** The ONE cross-JVM commit point both graft coordination protocols
   * reduce to: atomically publish `content` at `path` iff nothing exists
@@ -19,12 +19,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    namenode serializes the namespace check and create) — the create
   *    alone decides, and the read-back is a cheap invariant check.
   *  - '''Local filesystem''': Hadoop's local create(false) is an
-  *    exists() probe followed by an open — a narrow check-then-create
-  *    window at the Hadoop layer (no `O_EXCL`), read-back-bounded the
-  *    same way object stores are. Single-host deployments that need a
-  *    hard fence coordinate through the JVM-level striped locks the
-  *    store already takes; the cross-JVM specs intentionally exercise
-  *    the unfenced window.
+  *    exists() probe followed by a truncating open (no `O_EXCL`), which
+  *    let two racers both win one path; [[AtomicCreate]] claims the path
+  *    with an `O_EXCL` create first, so the create alone decides, as on
+  *    HDFS. The injected-creator specs still exercise the unfenced
+  *    window.
   *  - '''Object stores without a conditional write''': the
   *    [[AtomicCreate]] fallback's `create(false)` is check-then-create
   *    (a HEAD then a PUT), NOT atomic. The token read-back closes most
@@ -69,15 +68,25 @@ object CommitPoint {
     def createIfAbsent(fs: FileSystem, p: Path, bytes: Array[Byte]): Boolean
   }
 
-  /** Exclusive create: `create(overwrite = false)` — atomic on
-    * HDFS/POSIX, check-then-create on S3A (see the object scaladoc for
-    * why the read-back still bounds that). [[ConditionalCreate]]'s
+  /** Exclusive create: `create(overwrite = false)` — atomic on HDFS,
+    * check-then-create on S3A (see the object scaladoc for why the
+    * read-back still bounds that). On the local filesystem Hadoop's
+    * `create(false)` is an `exists()` probe and then a truncating open,
+    * so a racer whose open lands after another racer wrote and read back
+    * its bytes truncates a version that racer already won; the path is
+    * therefore claimed with an `O_EXCL` create first. [[ConditionalCreate]]'s
     * fallback. */
   object AtomicCreate extends Creator {
     override def createIfAbsent(fs: FileSystem, p: Path,
         bytes: Array[Byte]): Boolean =
       try {
-        val out = fs.create(p, false) // throws if the path is taken
+        val out = fs match {
+          case local: LocalFileSystem =>
+            fs.mkdirs(p.getParent)
+            java.nio.file.Files.createFile(local.pathToFile(p).toPath) // throws if taken
+            fs.create(p, true)
+          case _ => fs.create(p, false) // throws if the path is taken
+        }
         try out.write(bytes) finally out.close()
         true
       } catch { case _: java.io.IOException => false }

@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * `spark.graft.joinPrune.maxKeys`, gated on the build side's estimated
   * size — the same "small enough to broadcast" judgement join planning
   * already makes) and prunes the fact's FILES through the same
-  * [[StatsPruning]] compiler + sidecar walk every other pruning
-  * consumer uses — Snowflake's join pruning / Spark's dynamic partition
+  * [[StatsPruning]] compiler and [[StoreFileIndex.prune]] every other
+  * pruning consumer uses — Snowflake's join pruning / Spark's dynamic partition
   * pruning, at sidecar-file granularity, for tables with no partition
   * columns at all.
   *
@@ -111,10 +111,7 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
     * projections and filters (shapes that preserve the scan's output
     * attributes, so join keys map straight to scan columns). */
   private def storeScanOf(p: LogicalPlan): Option[LogicalRelation] = p match {
-    case l: LogicalRelation => l.relation match {
-      case hfs: HadoopFsRelation if SidecarPrune.looksLikeStoreScan(hfs) => Some(l)
-      case _ => None
-    }
+    case l: LogicalRelation => StoreFileIndex.of(l).map(_ => l)
     case Project(list, ch) if list.forall(_.isInstanceOf[AttributeReference]) =>
       storeScanOf(ch)
     case Filter(_, ch) => storeScanOf(ch)
@@ -138,11 +135,11 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
         if prunablePosition(j, factOnLeft)
         if build.stats.sizeInBytes <= MaxBuildBytes
         if build.deterministic
-        hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-        if BigInt(hfs.location.sizeInBytes) >= minFactBytes
+        (hfs, idx) <- StoreFileIndex.of(rel)
+        if BigInt(idx.sizeInBytes) >= minFactBytes
         pairs = equiPairs(j.condition.get, rel, build)
         if pairs.nonEmpty
-        pruned <- pruneByBuildKeys(rel, hfs, build, pairs)
+        pruned <- pruneByBuildKeys(rel, hfs, idx, build, pairs)
       } yield replaceRelation(j, rel, pruned, factOnLeft)
     arm(j.left, j.right, factOnLeft = true)
       .orElse(arm(j.right, j.left, factOnLeft = false))
@@ -251,7 +248,7 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def pruneByBuildKeys(rel: LogicalRelation, hfs: HadoopFsRelation,
-      build: LogicalPlan,
+      idx: StoreFileIndex, build: LogicalPlan,
       pairs: Seq[(AttributeReference, AttributeReference)])
       : Option[LogicalRelation] = {
     val probes = pairs.map { case (factAttr, buildAttr) =>
@@ -276,10 +273,7 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
     }
     if (tests.isEmpty) None
     else {
-      val res = SidecarPrune.pruneWithTests(rel, hfs, tests, tag = "JoinKeyPrune")
-      val total = hfs.location.inputFiles.length
-      val kept = res.map(_.relation.asInstanceOf[HadoopFsRelation]
-        .location.inputFiles.length).getOrElse(total)
+      val res = idx.prune(tests)
       val desc = probes.map { case (factAttr, _, probe) =>
         probe match {
           case Keys(Nil) => s"empty(${factAttr.name})"
@@ -288,20 +282,10 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
           case Unknown => s"unknown(${factAttr.name})"
         }
       }.mkString("+")
-      record(PruneEvent(System.currentTimeMillis(), tableNameOf(hfs), desc,
-        total, kept))
-      res
+      record(PruneEvent(System.currentTimeMillis(), idx.table, desc,
+        idx.files.size, res.getOrElse(idx).files.size))
+      res.map(StoreFileIndex.serving(rel, _))
     }
-  }
-
-  /** The store table a scan serves, from its root paths' layout
-    * (`<root>/<table>/data/<batch>/__bucket=N/…`) — display only. */
-  private def tableNameOf(hfs: HadoopFsRelation): String = {
-    val p0 = hfs.location.rootPaths.headOption.orNull
-    var p = p0
-    while (p != null && p.getName != "data") p = p.getParent
-    if (p == null || p.getParent == null) String.valueOf(p0)
-    else p.getParent.getName
   }
 
   private def replaceRelation(j: Join, from: LogicalRelation,

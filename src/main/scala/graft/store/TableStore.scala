@@ -20,6 +20,8 @@ import graft.spark.GraftCatalog
   *   <root>/<table>/_schema.json                   table schema
   *   <root>/<table>/data/b<version>/__bucket=N/    parquet data, hash-bucketed on the
   *                                                 table's merge keys (or round-robin)
+  *   <root>/<table>/data/b<version>/_graft_stats   the batch's file inventory and per-file
+  *                                                 stats: what a read serves ([[StoreFileIndex]])
   *   <root>/<table>/_versions/v<version>           manifest: one "bucket\tpath" per line
   *   <root>/<table>/_latest                        pointer file, atomically replaced
   *   <root>/<table>/_changes/c_<token>/            CDC batch (rows + __action) of a version
@@ -66,17 +68,22 @@ import graft.spark.GraftCatalog
   *  - readers of version N are unaffected by concurrent commits (MVCC-ish:
   *    old files are never mutated).
   */
-class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int = 16,
-    val compression: String = "zstd",
-    // parquet row-group size: the pruning granularity for CLUSTER BY
-    // tables (smaller groups = tighter min/max spans = more skipping,
-    // at more footer overhead). Default = parquet's 128 MiB.
-    val parquetBlockSize: Long = 128L * 1024 * 1024) extends GraftCatalog.Names {
+class TableStore private (val spark: SparkSession, val root: String, val numBuckets: Int,
+    val compression: String, val parquetBlockSize: Long, attach: Boolean)
+    extends GraftCatalog.Names {
+
+  def this(spark: SparkSession, root: String, numBuckets: Int = 16,
+      compression: String = "zstd",
+      // parquet row-group size: the pruning granularity for CLUSTER BY
+      // tables (smaller groups = tighter min/max spans = more skipping,
+      // at more footer overhead). Default = parquet's 128 MiB.
+      parquetBlockSize: Long = 128L * 1024 * 1024) =
+    this(spark, root, numBuckets, compression, parquetBlockSize, attach = true)
 
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
 
-  GraftCatalog.attach(this)
+  if (attach) GraftCatalog.attach(this)
 
   private def tdir(t: String) = new Path(root, t)
   private def latestPtr(t: String) = new Path(tdir(t), "_latest")
@@ -367,7 +374,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
         .filter(_.nonEmpty).foreach { marked =>
           val dst = new Path(chRoot, marked.head.getParent.getName)
           val tmp = new Path(chRoot, dst.getName + ".tmp")
-          markedRows(schema, marked).withColumnRenamed(from, to)
+          markedRows(table, schema, marked).withColumnRenamed(from, to)
             .write.mode("overwrite").parquet(tmp.toString)
           fs.rename(tmp, dst)
         }
@@ -412,8 +419,9 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * intervals never can — a uniform id column spans nearly the full
     * range in every file, so interval pruning keeps 100% of them, while
     * the bloom keeps ~1 file + the false-positive tail. Both pruning
-    * consumers ([[scanWhere]] and the transparent [[SidecarPrune]]
-    * rule) inherit it through the shared [[StatsPruning]] compiler.
+    * rules ([[SidecarPrune]], which serves [[scanWhere]] too, and
+    * [[JoinKeyPrune]]) inherit it through the shared [[StatsPruning]]
+    * compiler.
     * Declared cost: one column-pruned read-back pass per batch write
     * plus the bloom bytes in the sidecar — opt-in per table. */
   def lookupOf(table: String): Seq[String] = {
@@ -553,10 +561,18 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   /** Whether version v's manifest exists and is COMMITTED: a protocol
     * manifest (leading `#commit` header) needs its matching `#end`
     * trailer; a legacy pre-protocol manifest (no `#commit`) was written
-    * via atomic tmp+rename and is committed by existence. */
-  private def manifestCommitted(table: String, v: Long): Boolean =
-    try manifestTextCommitted(readFile(manifestPath(table, v)))
+    * via atomic tmp+rename and is committed by existence. On a
+    * checksummed filesystem the checksum file must still be there after
+    * the read: `ChecksumFileSystem.delete` drops it before the data, so
+    * a read between the two gets a torn corpse's bytes unverified. */
+  private def manifestCommitted(table: String, v: Long): Boolean = {
+    val p = manifestPath(table, v)
+    try manifestTextCommitted(readFile(p)) && (fs match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.exists(c.getChecksumFile(p))
+      case _ => true
+    })
     catch { case _: java.io.IOException => false }
+  }
 
   private def manifestTextCommitted(txt: String): Boolean = {
     val lines = txt.split("\n")
@@ -673,12 +689,17 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   /** Advance the `_latest` cache monotonically (never regress it — a
     * slower winner of an OLDER version must not roll the pointer back
     * under a faster winner of a newer one; [[currentVersion]]'s forward
-    * probe heals any interleaving this best-effort check still loses). */
+    * probe heals any interleaving this best-effort check still loses).
+    * A missing pointer is left missing: the table may have been dropped
+    * since the caller read it, and writing would bring its dir back. */
   private def advanceLatest(table: String, v: Long): Unit =
     try {
       if (readFile(latestPtr(table)).trim.toLong < v)
         writeFile(latestPtr(table), v.toString)
-    } catch { case _: java.io.IOException => writeFile(latestPtr(table), v.toString) }
+    } catch {
+      case _: java.io.FileNotFoundException =>
+      case _: java.io.IOException => writeFile(latestPtr(table), v.toString)
+    }
 
   /** After a lost race for `base+1`: wait for the competing writer to
     * finish (returning the new base to rebase onto) or break its corpse
@@ -703,7 +724,12 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
             if System.currentTimeMillis() - s.getModificationTime > timeout =>
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"commit($table): breaking a dead writer's uncommitted manifest v${base + 1}")
-          fs.delete(p, false)
+          // renamed aside first: a checksummed rename moves the data
+          // before its checksum, so readers of `p` never see it half gone
+          val aside = new Path(tdir(table), s"_broken_${p.getName}_${newToken()}")
+          val moved = try fs.rename(p, aside)
+            catch { case _: java.io.FileNotFoundException => false } // another waiter broke it
+          if (moved) fs.delete(aside, false)
           return base
         case _ => Thread.sleep(25L)
       }
@@ -779,36 +805,54 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     readPaths(table, entries.map(_._2))
   }
 
-  /** Read a set of data paths (bucket dirs or individual files) under
-    * `table`'s declared schema, with the NTZ day-companion handling of
-    * [[readVersion]]. */
-  private def readPaths(table: String, paths: Seq[String]): DataFrame = {
+  /** Read bucket dirs of `table` under its declared schema, with the NTZ
+    * day-companion handling of [[readVersion]]. */
+  private def readPaths(table: String, dirs: Seq[String]): DataFrame = {
     val declared = schemaOf(table)
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], declared)
-    else {
-      val dayFields = ntzClusterKeys(declared, clusterByOf(table)).map(c =>
-        org.apache.spark.sql.types.StructField(dayColName(c),
-          org.apache.spark.sql.types.IntegerType))
-      if (dayFields.isEmpty)
-        spark.read.schema(declared).parquet(paths: _*)
-      else
-        spark.read.schema(StructType(declared.fields ++ dayFields))
-          .parquet(paths: _*)
-          .select(declared.fieldNames.toIndexedSeq.map(col): _*)
-    }
+    val dayFields = ntzClusterKeys(declared, clusterByOf(table)).map(c =>
+      org.apache.spark.sql.types.StructField(dayColName(c),
+        org.apache.spark.sql.types.IntegerType))
+    val df = fileIndex(table, dirs).read(spark, StructType(declared.fields ++ dayFields))
+    if (dayFields.isEmpty) df else df.select(declared.fieldNames.toIndexedSeq.map(col): _*)
   }
+
+  /** The data files of bucket dirs `dirs`, from each batch's trusted
+    * `_graft_stats` inventory (written from the exact post-write listing;
+    * batches are immutable after commit), with their statistics. The
+    * manifest may name only SOME of a batch's buckets (an update or merge
+    * rewrote the others into newer batches), so the inventory is filtered
+    * to the named dirs. A batch whose sidecar is missing, headerless or
+    * fails its integrity check is listed instead, and whatever stats its
+    * sidecar does hold still prune. */
+  private def fileIndex(table: String, dirs: Seq[String]): StoreFileIndex =
+    StoreFileIndex(table, dirs.map(new Path(_)).groupBy(_.getParent).toSeq.sortBy(_._1.toString).flatMap {
+      case (batchDir, bucketDirs) =>
+        val sc = readStatsSidecar(batchDir)
+        def file(rel: String, length: Long, mtime: Long) =
+          StoreFile(new Path(batchDir, rel).toString, length, mtime)(sc.files.getOrElse(rel, Map.empty))
+        if (sc.inventoryTrusted) {
+          val wanted = bucketDirs.map(_.getName).toSet
+          sc.sizes.toSeq.sortBy(_._1).collect {
+            case (rel, (length, mtime)) if wanted(rel.takeWhile(_ != '/')) => file(rel, length, mtime)
+          }
+        } else bucketDirs.sortBy(_.getName).flatMap { bd =>
+          fs.listStatus(bd).toSeq.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+            .sortBy(_.getPath.getName)
+            .map(st => file(s"${bd.getName}/${st.getPath.getName}", st.getLen, st.getModificationTime))
+        }
+    })
 
   /** Filtered read with MICRO-PARTITION PRUNING (the metadata tier
     * Snowflake's optimizer serves from its metadata service): every
     * batch write records per-FILE min/max/null statistics for all
     * supported columns in a `_graft_stats` sidecar next to the data
-    * ([[writeBatch]]); this read evaluates `cond`'s provable conjuncts
-    * against those intervals DRIVER-SIDE and opens only the files that
-    * can hold matching rows. Parquet row-group stats then prune further
-    * WITHIN each surviving file — but at 100 TB the sidecar tier is the
-    * one that matters: row-group pruning still costs a footer read per
-    * file (millions of GETs before the first data byte), while manifest
+    * ([[writeBatch]]); [[SidecarPrune]] evaluates `cond`'s provable
+    * conjuncts against those intervals DRIVER-SIDE and the read opens
+    * only the files that can hold matching rows. Parquet row-group
+    * stats then prune further WITHIN each surviving file — but at
+    * 100 TB the sidecar tier is the one that matters: row-group pruning
+    * still costs a footer read per file (millions of GETs before the
+    * first data byte), while manifest
     * stats cut the candidate set for the cost of reading metadata the
     * driver already holds.
     *
@@ -821,69 +865,13 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     * matching batches — clustering keys sharpen the same effect within
     * a batch.
     *
-    * Since the [[SidecarPrune]] optimizer rule landed, the same prune
-    * fires TRANSPARENTLY on any `Filter` over a plain [[read]] (and on
-    * SQL over store names), so calling scanWhere is no longer
-    * required to get the metadata tier — it remains the explicit API
-    * for pre-resolved `Column` predicates and for callers that want
-    * the pruned file list reflected in `Dataset.inputFiles` (the rule
-    * rewrites the optimized plan, which inputFiles doesn't read). */
+    * This is `readVersion(table, version).filter(cond)`: the same prune
+    * fires on any `Filter` over a plain [[read]] (and on SQL over store
+    * names). `Dataset.inputFiles` collects from the optimized plan, so it
+    * lists the pruned files of either form. */
   def scanWhere(table: String, cond: org.apache.spark.sql.Column,
-      version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version else currentVersion(table)
-    val condExpr = org.apache.spark.sql.GraftColumnBridge.converted(cond)
-    val tests = StatsPruning.compile(condExpr, schemaOf(table))
-    val entries = readManifest(table, v)
-    if (tests.isEmpty || entries.isEmpty)
-      return readPaths(table, entries.map(_._2)).filter(cond)
-    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-    var (total, pruned) = (0, 0)
-    entries.map(_._2).groupBy(p => new Path(p).getParent).foreach {
-      case (batchDir, bucketDirs) =>
-        val sc = readStatsSidecar(batchDir)
-        if (sc.inventoryTrusted && sc.files.nonEmpty) {
-          // a sentinel-verified sidecar IS the batch's file inventory
-          // (written from the exact post-write listing, batches immutable
-          // after commit), so the candidate list comes straight from
-          // metadata the driver just read — at millions of files the
-          // per-bucket listStatus loop below would be the GET storm this
-          // tier exists to avoid. The manifest may reference only SOME of
-          // the batch's buckets (update/merge rewrite touched buckets into
-          // newer batches), so filter the inventory to the referenced
-          // bucket dirs.
-          val wanted = bucketDirs.map(bd => new Path(bd).getName).toSet
-          sc.files.foreach { case (rel, colStats) =>
-            val slash = rel.indexOf('/')
-            if (slash > 0 && wanted.contains(rel.substring(0, slash))) {
-              total += 1
-              if (tests.forall(t => t(colStats)))
-                kept += new Path(batchDir, rel).toString
-              else pruned += 1
-            }
-          }
-        } else bucketDirs.foreach { bd =>
-          // legacy batch: no sidecar, or a headerless pre-sentinel one
-          // whose writer skipped stat-less files — either way the
-          // DIRECTORY LISTING is the inventory, and any per-file stats
-          // that do exist still prune (stats-only consumption)
-          val bdPath = new Path(bd)
-          if (fs.exists(bdPath)) fs.listStatus(bdPath).foreach { st =>
-            if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-              total += 1
-              val rel = s"${bdPath.getName}/${st.getPath.getName}"
-              sc.files.get(rel) match {
-                case Some(colStats) if !tests.forall(t => t(colStats)) =>
-                  pruned += 1
-                case _ => kept += st.getPath.toString
-              }
-            }
-          }
-        }
-    }
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"scanWhere($table): pruned $pruned of $total files from manifest stats")
-    readPaths(table, kept.toSeq).filter(cond)
-  }
+      version: Long = -1L): DataFrame =
+    readVersion(table, if (version >= 0) version else currentVersion(table)).filter(cond)
 
   /** Compaction (OPTIMIZE analogue): rewrite the current contents as one
     * fresh bucketed batch — after many small appends/merges a table
@@ -1261,25 +1249,30 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
 
   // ---- per-file column statistics (micro-partition metadata) --------------
   //
-  // Every batch write records min/max/null-presence for every supported
-  // column of every data FILE in `<batchDir>/_graft_stats` — the exact
-  // metadata Snowflake keeps per micro-partition. [[scanWhere]] consumes
-  // it to prune files without touching parquet footers; the underscore
-  // prefix keeps Spark's file listing from ever treating it as data.
+  // Every batch write records each data FILE's length and mtime, and
+  // min/max/null-presence for every supported column, in
+  // `<batchDir>/_graft_stats` — the exact metadata Snowflake keeps per
+  // micro-partition. The inventory is the read path's file list
+  // ([[fileIndex]]) and the stats prune it ([[SidecarPrune]]) without
+  // touching parquet footers; the underscore prefix keeps Spark's file
+  // listing from ever treating it as data.
 
-  /** One sidecar line per (file, column):
-    * `rel\tcol\tkind\tnulls\tmin\tmax` — string bounds base64'd (TSV-safe),
-    * numeric bounds in plain text, "" = unbounded on that side.
+  /** One sidecar line per file, `rel\t\tf\t\t<length>\t<mtime>`, and one
+    * per (file, column): `rel\tcol\tkind\tnulls\tmin\tmax` — string
+    * bounds base64'd (TSV-safe), numeric bounds in plain text, "" =
+    * unbounded on that side. Written for every batch, also when no
+    * column keeps stats.
     *
     * INTEGRITY SENTINEL: the first line is `#graft_stats files=<n>`
     * (distinct data files inventoried) and the last line is `#end`.
-    * [[scanWhere]] treats the sidecar as the batch's authoritative file
-    * inventory, so a sidecar that is present and parseable but
+    * Every store read takes the sidecar as the batch's authoritative
+    * file inventory, so a sidecar that is present and parseable but
     * INCOMPLETE (a non-atomic writer that flushed a prefix, truncation
     * exactly on a line boundary) would silently drop committed files
-    * from every scan. [[readStatsSidecar]] verifies both markers and
-    * the file count before trusting the inventory; any mismatch
-    * degrades to the conservative directory-listing path. */
+    * from every scan. [[readStatsSidecar]] verifies both markers, the
+    * file count and each file's length line before trusting the
+    * inventory; any mismatch degrades to the conservative
+    * directory-listing path. */
   private def writeStatsSidecar(table: String, batchDir: Path,
       bucketDirs: Seq[String]): Unit = {
     val schema = schemaOf(table)
@@ -1287,7 +1280,6 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
       .flatMap(f => TableStore.statKind(f.dataType).map(k => (f.name, k)))
     val lookups = lookupOf(table)
       .filter(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-    if (statFields.isEmpty && lookups.isEmpty) return
     val b64 = java.util.Base64.getEncoder
     def enc(kind: String, v: Option[Any]): String = v match {
       case None => ""
@@ -1304,11 +1296,12 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
         if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
           nFiles += 1
           val rel = s"${bdPath.getName}/${st.getPath.getName}"
+          // lookup columns are stat columns, so no stat field = no footer to read
           val (perCol, rows) =
-            TableStore.fileColumnStats(st.getPath, hconf, statFields)
+            if (statFields.isEmpty) (Nil, 0L)
+            else TableStore.fileColumnStats(st.getPath, hconf, statFields)
           maxRows = math.max(maxRows, rows)
-          if (perCol.isEmpty) // keep the inventory complete even when no
-            lines += s"$rel\t\t\t\t\t" // column produced a usable stat
+          lines += s"$rel\t\tf\t\t${st.getLen}\t${st.getModificationTime}"
           perCol.foreach { case (col, cs) =>
             val n = cs.hasNulls.map(h => if (h) "1" else "0").getOrElse("?")
             lines += s"$rel\t$col\t${cs.kind}\t$n\t${enc(cs.kind, cs.min)}\t${enc(cs.kind, cs.max)}"
@@ -1387,7 +1380,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
         batch = writeBatch(table, base + 1, fillAutoInc(table, align(table, df), base))
       }
       Commit(readManifest(table, base) ++ batch,
-        Some(withAction(readBack(table, batch), "insert")))
+        Some(withAction(readPaths(table, batch.map(_._2)), "insert")))
     }
     // write-time auto-compaction (opt-in): bound small-file accretion
     // from continuous micro-batch appends. The TABLE property (ALTER
@@ -1636,7 +1629,7 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     val untouched = readManifest(table, base).filterNot(e => srcBuckets(e._1))
 
     val deletes = whenMatchedDelete.map { _ =>
-      val survivors = readBack(table, newEntries).select(keys.map(col): _*)
+      val survivors = readPaths(table, newEntries.map(_._2)).select(keys.map(col): _*)
       val survives = keys.map(k => touched(k) <=> survivors(k)).reduce(_ && _)
       withAction(align(table, touched.join(survivors, survives, "left_anti")), "delete")
     }
@@ -1646,13 +1639,6 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   }
 
   // ---- helpers ------------------------------------------------------------
-
-  private def readBack(table: String, entries: Seq[(Int, String)]): DataFrame = {
-    val s = schemaOf(table)
-    if (entries.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    else spark.read.schema(s).parquet(entries.map(_._2): _*)
-  }
 
   /** Align df to the table schema by name with casts (the permissive,
     * schema-on-write landing behavior: missing cols → their declared
@@ -1727,15 +1713,15 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
     val scans =
       (if (plain.isEmpty) Nil
        else Seq(spark.read.schema(schema.add("__action", StringType)).parquet(plain: _*))) ++
-      (if (marked.isEmpty) Nil else Seq(markedRows(schema, marked)))
+      (if (marked.isEmpty) Nil else Seq(markedRows(table, schema, marked)))
     scans.reduceOption(_ unionByName _).getOrElse(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.add("__action", StringType)))
   }
 
   /** The change rows of marked bucket dirs read under `schema`: the rows
     * whose [[Merge.ActionCol]] is set, the marker surfaced as `__action`. */
-  private def markedRows(schema: StructType, dirs: Seq[Path]): DataFrame =
-    spark.read.schema(schema.add(Merge.ActionCol, StringType)).parquet(dirs.map(_.toString): _*)
+  private def markedRows(table: String, schema: StructType, dirs: Seq[Path]): DataFrame =
+    fileIndex(table, dirs.map(_.toString)).read(spark, schema.add(Merge.ActionCol, StringType))
       .filter(col(Merge.ActionCol).isNotNull).withColumnRenamed(Merge.ActionCol, "__action")
 
   /** Row count of the change rows of versions (fromExclusive,
@@ -1787,10 +1773,15 @@ class TableStore(val spark: SparkSession, val root: String, val numBuckets: Int 
   }
 }
 
-/** Statistics-kind mapping and parquet footer decoding for the store's
-  * micro-partition metadata ([[TableStore.scanWhere]]). Domains must
-  * match [[StatsPruning]]'s comparisons. */
+/** Statistics-kind mapping, parquet footer decoding and the sidecar
+  * parser for the store's micro-partition metadata ([[StoreFileIndex]]).
+  * Domains must match [[StatsPruning]]'s comparisons. */
 object TableStore {
+
+  /** A store that stays out of [[GraftCatalog]]'s name resolution: the
+    * per-call handles [[Artifacts]] builds, which resolve by prefix. */
+  private[store] def unattached(spark: SparkSession, root: String, numBuckets: Int): TableStore =
+    new TableStore(spark, root, numBuckets, "zstd", 128L * 1024 * 1024, attach = false)
 
   /** The stats value domain for a column type, if statistics are kept:
     * `l` long (integral / date-days / timestamp-micros), `d` double,
@@ -1810,35 +1801,55 @@ object TableStore {
     }
   }
 
-  /** A parsed batch sidecar. `inventoryTrusted` says whether `files`'
-    * KEY SET is the batch's complete data-file inventory: only sidecars
-    * carrying the integrity sentinel (`#graft_stats files=<n>` header +
-    * `#end` trailer, both verified) earn it. Headerless sidecars from
-    * pre-sentinel writers are STATS-ONLY — that writer also omitted
-    * files whose parquet footers yielded no usable column stats, so
-    * trusting its key set as the inventory would silently drop those
-    * files from every pruned scan; consumers must take the inventory
-    * from a directory listing and use `files` only to prune entries
-    * that are present. */
-  private[store] final case class Sidecar(
-      files: Map[String, StatsPruning.FileStats], inventoryTrusted: Boolean)
+  /** A parsed batch sidecar: relative file path → (column → interval),
+    * and → (length, mtime) in `sizes`. `inventoryTrusted` says whether
+    * `sizes`' KEY SET is the batch's complete data-file inventory: only
+    * sidecars carrying the integrity sentinel (`#graft_stats files=<n>`
+    * header + `#end` trailer, both verified) and a length line for every
+    * file earn it. Headerless sidecars from pre-sentinel writers are
+    * STATS-ONLY — that writer also omitted files whose parquet footers
+    * yielded no usable column stats, so trusting its key set as the
+    * inventory would silently drop those files from every read;
+    * consumers must take the inventory from a directory listing and use
+    * `files` only to prune entries that are present. */
+  private[store] final case class Sidecar(files: Map[String, StatsPruning.FileStats],
+      sizes: Map[String, (Long, Long)], inventoryTrusted: Boolean)
 
-  /** Parse a batch dir's stats sidecar (static form — also consumed by
-    * [[SidecarPrune]], which prunes arbitrary Filter-over-store-scan
-    * plans without a [[TableStore]] handle): relative file path →
-    * (column → interval), plus the inventory-trust flag (see
-    * [[Sidecar]]). Empty+untrusted when the sidecar is absent (legacy
-    * batch), unreadable, or FAILS ITS INTEGRITY SENTINEL (header
+  private val NoSidecar = Sidecar(Map.empty, Map.empty, inventoryTrusted = false)
+
+  // sidecar parse memo — batches are immutable after commit, so the
+  // (path, mtime, length) key only ever changes when a spec (or an
+  // out-of-band writer) rewrites the file in place, which then
+  // re-parses. A size-capped LRU: under sustained load cold entries
+  // evict one at a time instead of dumping the whole cache.
+  private val SidecarMemoCap = 4096
+  private val sidecars = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Long, Long), Sidecar](64, 0.75f, /*accessOrder=*/ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(String, Long, Long), Sidecar]): Boolean =
+        size() > SidecarMemoCap
+    })
+
+  /** Parse a batch dir's stats sidecar (see [[Sidecar]]), memoized per
+    * (path, mtime, length). Empty+untrusted when the sidecar is absent
+    * (legacy batch), unreadable, or FAILS ITS INTEGRITY SENTINEL (header
     * `#graft_stats files=<n>` present but the `#end` trailer or the
     * declared file count doesn't match — a partially-flushed or
     * truncated sidecar) — callers then keep every file via the
     * conservative directory-listing path instead of silently scanning
     * an incomplete inventory. Headerless sidecars from pre-sentinel
     * writers still parse, but stats-only (untrusted inventory). */
-  private[store] def readStatsSidecar(fs: FileSystem, batchDir: Path)
-      : Sidecar = {
+  private[store] def readStatsSidecar(fs: FileSystem, batchDir: Path): Sidecar = {
     val p = new Path(batchDir, "_graft_stats")
-    if (!fs.exists(p)) return Sidecar(Map.empty, inventoryTrusted = false)
+    val st = try fs.getFileStatus(p) catch { case _: java.io.FileNotFoundException => return NoSidecar }
+    val key = (p.toString, st.getModificationTime, st.getLen)
+    Option(sidecars.get(key)).getOrElse {
+      val parsed = parseStatsSidecar(fs, p)
+      sidecars.put(key, parsed)
+      parsed
+    }
+  }
+
+  private def parseStatsSidecar(fs: FileSystem, p: Path): Sidecar = {
     val b64 = java.util.Base64.getDecoder
     def dec(kind: String, s: String): Option[Any] =
       if (s.isEmpty) None
@@ -1888,10 +1899,13 @@ object TableStore {
             StatsPruning.ColStat("b", None, None, None)).copy(bloom = Some(bf)))
         }
       }
+      val sizes = split.collect {
+        case Array(rel, "", "f", _, length, mtime) => rel -> ((length.toLong, mtime.toLong))
+      }.toMap
       declared.foreach(n => require(parsed.size == n,
         s"sidecar inventories ${parsed.size} files but declares $n: $p"))
-      Sidecar(parsed, inventoryTrusted = declared.isDefined)
-    }.getOrElse(Sidecar(Map.empty, inventoryTrusted = false))
+      Sidecar(parsed, sizes, inventoryTrusted = declared.isDefined && parsed.keySet == sizes.keySet)
+    }.getOrElse(NoSidecar)
   }
 
   // string bounds above this length are truncated: a truncated MIN is

@@ -33,4 +33,10 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `schema` with every field nullable (the spark-private
+    * `StructType.asNullable`): the schema Spark gives a file relation
+    * read under a user schema, which [[graft.store.StoreFileIndex]]
+    * reads match. */
+  def nullable(schema: types.StructType): types.StructType = schema.asNullable
 }

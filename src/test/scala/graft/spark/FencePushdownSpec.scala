@@ -38,7 +38,8 @@ class FencePushdownSpec extends AnyFunSuite {
 
   /** File sets served by each parquet relation in the OPTIMIZED plan —
     * where SidecarPrune swaps the index (same helper as
-    * SidecarPruneSpec). */
+    * SidecarPruneSpec; `Dataset.inputFiles` reads the same plan but
+    * merges the relations' files into one set). */
   private def scanFiles(df: DataFrame): Seq[Set[String]] =
     df.queryExecution.optimizedPlan.collect {
       case l: LogicalRelation =>

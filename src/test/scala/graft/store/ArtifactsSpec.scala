@@ -541,4 +541,14 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(got.length == 2)
     assert(got(0).toSeq == books(0).toSeq && got(1).toSeq == books(1).toSeq)
   }
+
+  test("Artifacts' per-call stores do not attach to the session's graft names") {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.artifactDir", Files.createTempDirectory("graft_artifacts_attach").toString)
+    val before = graft.spark.GraftCatalog.attachedTo(s).toList
+    Artifacts.listing(s)
+    Artifacts.listing(s)
+    val added = graft.spark.GraftCatalog.attachedTo(s).filterNot(n => before.exists(_ eq n)).toList
+    assert(added.isEmpty, s"${added.size} artifact stores attached themselves")
+  }
 }

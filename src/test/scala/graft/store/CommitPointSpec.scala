@@ -202,17 +202,27 @@ class CommitPointSpec extends AnyFunSuite {
         finally in.close()
       }
       assert(served == "first")
-      // Deliberately NO concurrent-race assertion here: the local
-      // filesystem's builder create is itself check-then-create (no
-      // O_EXCL at the Hadoop layer), so a tight race through
-      // ConditionalCreate's fallback can legitimately land in the
-      // overwrite-after-read-back residual — the exact behavior the
-      // residual arm above demonstrates on purpose. Store-side
-      // conditional-PUT atomicity is a property of stores that honor
-      // the option (S3/GCS/ABFS), which the injected ConditionalPut
-      // model pins; local FS can only prove the sequential contract
-      // and the fallback path.
+      // The concurrent race on the local filesystem is the "racing
+      // publishes through the real creator" test below (AtomicCreate's
+      // O_EXCL claim). Store-side conditional-PUT atomicity is a
+      // property of stores that honor the option (S3/GCS/ABFS), which
+      // the injected ConditionalPut model pins.
     }
+  }
+
+  test("racing publishes through the real creator: exactly one winner per path") {
+    val root = Files.createTempDirectory("graft_cp_race").toString
+    val fs = fsOf(root)
+    val racers = 4
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(racers)
+    try (0 until 200).foreach { round =>
+      val p = new Path(root, f"race/v$round%05d")
+      val start = new CyclicBarrier(racers)
+      val wins = (0 until racers).map { w =>
+        pool.submit(() => { start.await(); CommitPoint.publish(fs, p, s"writer-$w-${"x" * (w * 7)}") })
+      }.map(_.get(60, TimeUnit.SECONDS)).count(identity)
+      assert(wins == 1, s"round $round: $wins winners")
+    } finally pool.shutdownNow()
   }
 
   test("claim lease: two interleaved non-atomic claimers never both hold the lease") {

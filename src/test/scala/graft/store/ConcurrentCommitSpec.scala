@@ -191,6 +191,29 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.store.commitTimeoutMs")
   }
 
+  test("a torn corpse caught mid-delete (checksum gone, data left) is not a committed version") {
+    val root = freshRoot()
+    val st = new TableStore(spark, root, numBuckets = 2)
+    st.createTable("t", schema, keys = Seq("id"))
+    st.append("t", Seq((1L, "a")).toDF("id", "v"))
+    val v = st.currentVersion("t")
+    // two interleaved non-atomic creators can leave a corpse whose bytes
+    // are one writer's whole manifest and whose checksum is the other's
+    val corpse = new org.apache.hadoop.fs.Path(root, f"t/_versions/v${v + 1}%08d")
+    val fs = corpse.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(corpse, false)
+    try out.write("#commit\tloser0\n#buckets\t2\n#end\tloser0".getBytes("UTF-8")) finally out.close()
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "t", "_versions", f"v${v + 1}%08d"),
+      "#commit\tfeedf00d\n#buckets\t2\n0\t/nowhere\n#end\tfeedf00d".getBytes("UTF-8"))
+    assert(st.currentVersion("t") == v, "a checksum mismatch is not a commit")
+    // the corpse breaker's delete has dropped the checksum, not yet the data
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "t", "_versions", f".v${v + 1}%08d.crc"))
+    assert(st.currentVersion("t") == v, "a manifest without its checksum is not a commit")
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "t", "_latest")), "UTF-8").trim == v.toString)
+    assert(st.read("t").count() == 1)
+  }
+
   test("currentVersion probes committed manifests past a stale or regressed _latest") {
     val root = freshRoot()
     val st = new TableStore(spark, root, numBuckets = 2)

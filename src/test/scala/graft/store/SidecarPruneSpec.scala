@@ -25,8 +25,8 @@ class SidecarPruneSpec extends AnyFunSuite {
 
   /** The (possibly pruned) file sets served by each parquet relation in
     * the OPTIMIZED logical plan — where [[SidecarPrune]] swaps the
-    * index. `Dataset.inputFiles` reads the analyzed plan and would miss
-    * the rewrite by design. */
+    * index. `Dataset.inputFiles` collects from the same optimized plan,
+    * but merges every relation's files into one set. */
   private def scanFiles(df: DataFrame): Seq[Set[String]] =
     df.queryExecution.optimizedPlan.collect {
       case l: LogicalRelation =>
@@ -68,7 +68,7 @@ class SidecarPruneSpec extends AnyFunSuite {
       case l: LogicalRelation =>
         l.relation.asInstanceOf[HadoopFsRelation].location
     }.head
-    assert(prunedIdx.isInstanceOf[SidecarPrunedFileIndex])
+    assert(prunedIdx.isInstanceOf[StoreFileIndex])
     assert(prunedIdx.sizeInBytes > 0)
     val fullSize = all.queryExecution.optimizedPlan.collect {
       case l: LogicalRelation =>
@@ -112,7 +112,7 @@ class SidecarPruneSpec extends AnyFunSuite {
       case l: LogicalRelation =>
         l.relation.asInstanceOf[HadoopFsRelation].location
     }.head
-    assert(!idx.isInstanceOf[SidecarPrunedFileIndex],
+    assert(!idx.isInstanceOf[StoreFileIndex],
       "external parquet must never enter the sidecar-prune path")
   }
 }

@@ -14,7 +14,7 @@ import graft.TestSpark
   * nulls, empty and non-BMP strings, Long extremes) and a generated
   * predicate population over every stats kind, `scanWhere(cond)` and the
   * transparent `read(t).filter(cond)` (SidecarPrune) must return
-  * EXACTLY the rows of the prune-disabled baseline read — pruning may
+  * EXACTLY the rows of an unpruned baseline read — pruning may
   * only ever drop files that provably hold no matches. A single lost
   * row here is the silent-data-loss class the r16 ±0.0/NaN fixes
   * closed; this property keeps the whole family pinned under predicate
@@ -82,11 +82,11 @@ class StatsPruningPropertySpec extends AnyFunSuite {
       df.orderBy("id").collect().map(_.toString).toSeq
     var exercised = 0
     preds.foreach { cond =>
-      // baseline: file pruning OFF on the same tree (parquet row-group
-      // evaluation inside Spark's reader is the trusted ground truth)
-      spark.conf.set(SidecarPrune.EnabledConf, "false")
-      val want = try rowsOf(store.read("t").filter(cond))
-      finally spark.conf.set(SidecarPrune.EnabledConf, "true")
+      // baseline: a plain parquet read of the same manifest files, which
+      // SidecarPrune never touches (parquet row-group evaluation inside
+      // Spark's reader is the trusted ground truth)
+      val want = rowsOf(spark.read.schema(store.schemaOf("t"))
+        .parquet(store.readManifest("t", store.currentVersion("t")).map(_._2): _*).filter(cond))
       val viaScanWhere = rowsOf(store.scanWhere("t", cond))
       val viaRule = rowsOf(store.read("t").filter(cond))
       assert(viaScanWhere == want,
