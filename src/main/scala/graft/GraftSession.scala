@@ -44,8 +44,6 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
 
   GraftCatalog.attach(this)
 
-  private var checkpointSeq = 0
-
   private val streamsReg = mutable.LinkedHashMap.empty[String, ChangeStream]
   private val pipesReg = mutable.LinkedHashMap.empty[String, Pipe]
   private val stagesReg = mutable.LinkedHashMap.empty[String, String]
@@ -173,11 +171,9 @@ class GraftSession(val spark: SparkSession, root: String, numBuckets: Int = 16)
 
   def createPipe(name: String, landingDir: String, stageTable: String,
       schema: StructType, fmt: CsvFormat = CsvFormat(), format: String = "csv"): Pipe = {
-    checkpointSeq += 1
     val flat = key(pipesReg, name)
-    val p = new Pipe(spark, flat, landingDir, recordName(stageTable), schema, store,
-      s"$root/_checkpoints/pipe_${flat}_$checkpointSeq", fmt, format)
-    pipesReg(flat) = p
+    val p = new Pipe(spark, flat, landingDir, recordName(stageTable), schema, store, fmt, format)
+    pipesReg.put(flat, p).foreach(_.pause()) // CREATE OR REPLACE stops the old poll
     p
   }
 

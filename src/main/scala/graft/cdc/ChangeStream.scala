@@ -17,9 +17,9 @@ import graft.store.TableStore
   * ([[relation]]) unless a temp view or catalog table has that name.
   *
   * A version's change rows live where its commit wrote them once
-  * ([[TableStore.changeSourcesOf]]): an APPEND, UPDATE or DELETE writes
-  * a `_changes` batch; a MERGE or INSERT OVERWRITE marks the rows of its
-  * own data batch instead (a MERGE's deleted rows still go to a
+  * ([[TableStore.changeSourcesOf]]): an UPDATE or DELETE writes a
+  * `_changes` batch; an APPEND, MERGE or INSERT OVERWRITE marks the rows
+  * of its own data batch instead (a MERGE's deleted rows still go to a
   * `_changes` batch).
   *
   * Scale: hasData short-circuits on the version counter (pure pointer

@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The reference's CSV file format (SURVEY.md §2.1 S1; reference:
@@ -21,8 +22,9 @@ import org.apache.spark.sql.types.StructType
   * null-padding).
   *
   * Scale: landing files are pipe micro-batches (small by construction);
-  * parsing is distributed one-file-per-task. For bulk historical loads of
-  * huge single CSVs, use `bulkRead` (native distributed scan, header=true).
+  * each file is read whole, one row per file, so the skip is per file and
+  * parsing is distributed one file per task. A huge single CSV is one
+  * task: split it before it lands.
   */
 final case class CsvFormat(
     skipHeaderLines: Int = 1,
@@ -33,47 +35,30 @@ final case class CsvFormat(
 
 object CsvIngest {
 
-  /** Parse whole CSV file contents (one string per file) with skip-line
-    * semantics. Used by the Pipe's binaryFile micro-batches. */
-  def parseFileContents(spark: SparkSession, contents: Dataset[(String, String)],
-      schema: StructType, fmt: CsvFormat = CsvFormat()): DataFrame = {
-    import spark.implicits._
-    val skip = fmt.skipHeaderLines
-    val lines: Dataset[String] = contents.flatMap { case (_, text) =>
-      text.split("\n", -1).iterator.drop(skip)
-        .map(_.stripSuffix("\r")).filter(_.trim.nonEmpty)
-    }
-    parseLines(spark, lines, schema, fmt)
-  }
-
-  /** Read CSV files under `paths` with reference semantics. */
+  /** Read the CSV files `paths` with reference semantics: each file's
+    * first `fmt.skipHeaderLines` physical lines are dropped, then blank
+    * lines. What [[Pipe]] parses its landed files with. */
   def read(spark: SparkSession, paths: Seq[String], schema: StructType,
       fmt: CsvFormat = CsvFormat()): DataFrame = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val perFile = paths.map { p =>
-      sc.textFile(p).mapPartitionsWithIndex { (i, it) =>
-        if (i == 0) it.drop(fmt.skipHeaderLines) else it
-      }
-    }
-    val lines = spark.createDataset(
-      if (perFile.isEmpty) sc.emptyRDD[String] else sc.union(perFile))
-      .filter((l: String) => l.trim.nonEmpty)
-    parseLines(spark, lines, schema, fmt)
-  }
-
-  private def parseLines(spark: SparkSession, lines: Dataset[String],
-      schema: StructType, fmt: CsvFormat): DataFrame = {
-    val parsed = spark.read
+    val skip = fmt.skipHeaderLines
+    val lines = fileTexts(spark, paths).flatMap((text: String) =>
+      text.split("\n", -1).iterator.drop(skip)
+        .map(_.stripSuffix("\r")).filter(_.trim.nonEmpty))(Encoders.STRING)
+    emptyToNull(spark.read
       .schema(schema)
       .option("delimiter", fmt.delimiter)
       .option("quote", fmt.quote)
       .option("nullValue", fmt.nullValue)
       .option("mode", "PERMISSIVE")
       .option("header", "false")
-      .csv(lines)
-    emptyToNull(parsed, fmt)
+      .csv(lines), fmt)
   }
+
+  /** The whole text of each file in `paths`, one row per file. */
+  private[ingest] def fileTexts(spark: SparkSession, paths: Seq[String]): Dataset[String] =
+    if (paths.isEmpty) spark.emptyDataset[String](Encoders.STRING)
+    else spark.read.format("binaryFile").load(paths: _*)
+      .select(col("content").cast("string")).as[String](Encoders.STRING)
 
   /** EMPTY_FIELD_AS_NULL (Snowflake COPY default): empty string fields →
     * NULL. Matters downstream: a varchar stage column holding '' would
@@ -81,26 +66,11 @@ object CsvIngest {
   private def emptyToNull(df: DataFrame, fmt: CsvFormat): DataFrame =
     if (!fmt.emptyFieldAsNull) df
     else {
-      import org.apache.spark.sql.functions.{col, lit, when}
+      import org.apache.spark.sql.functions.{lit, when}
       df.select(df.schema.fields.map { f =>
         if (f.dataType == org.apache.spark.sql.types.StringType)
           when(col(f.name) === "", lit(null)).otherwise(col(f.name)).as(f.name)
         else col(f.name)
       }.toIndexedSeq: _*)
     }
-
-  /** Bulk path for big well-formed CSVs: native distributed scan (the
-    * skip-header quirk only matters for tiny landing files). */
-  def bulkRead(spark: SparkSession, path: String, schema: StructType,
-      fmt: CsvFormat = CsvFormat()): DataFrame =
-    emptyToNull(
-      spark.read
-        .schema(schema)
-        .option("delimiter", fmt.delimiter)
-        .option("quote", fmt.quote)
-        .option("nullValue", fmt.nullValue)
-        .option("mode", "PERMISSIVE")
-        .option("header", fmt.skipHeaderLines > 0)
-        .csv(path),
-      fmt)
 }

@@ -341,7 +341,7 @@ object GraftSql {
         None
 
       case AlterPipeRefreshRe(name) =>
-        sess.pipe(name).runOnce()
+        sess.pipe(name).refresh()
         None
 
       case ShowRe(what) => Some(what.toLowerCase.replaceAll("\\s+", " ") match {

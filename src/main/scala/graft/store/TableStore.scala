@@ -22,19 +22,20 @@ import graft.spark.GraftCatalog
   *                                                 table's merge keys (or round-robin)
   *   <root>/<table>/data/b<version>/_graft_stats   the batch's file inventory and per-file
   *                                                 stats: what a read serves ([[StoreFileIndex]])
-  *   <root>/<table>/_versions/v<version>           manifest: one "bucket\tpath" per line
+  *   <root>/<table>/_versions/v<version>           manifest: one "bucket\tpath" per line, plus
+  *                                                 the load ledger ([[loadedFiles]])
   *   <root>/<table>/_latest                        pointer file, atomically replaced
   *   <root>/<table>/_changes/c_<token>/            CDC batch (rows + __action) of a version
   *                                                 whose change rows are not in its data
-  *                                                 batch: APPEND, UPDATE, DELETE, MERGE's
-  *                                                 deleted rows (legacy: _changes/v<version>)
+  *                                                 batch: UPDATE, DELETE, MERGE's deleted
+  *                                                 rows (legacy: _changes/v<version>)
   *   <root>/<table>/_streams/<name>.offset         per-stream consumed version
   * }}}
   *
   * Scale design:
   *  - APPEND writes only the new batch and a new manifest — no data copy.
-  *  - a MERGE or INSERT OVERWRITE writes its rows once: the batch files
-  *    carry each row's action (`__graft_action`, null on carried rows)
+  *  - an APPEND, MERGE or INSERT OVERWRITE writes its rows once: the batch
+  *    files carry each row's action (`__graft_action`, null on carried rows)
   *    and the manifest names the batch as the version's change source
   *    ([[changeSourcesOf]]), so no `_changes` copy is written for them.
   *  - MERGE rewrites only the hash buckets the source batch touches;
@@ -544,17 +545,19 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     * list it describes), an optional `#changes\t<dir>` pointer to the
     * version's CDC batch (token-named — see [[commitLoop]]), an optional
     * `#marked\t<batch dir>` naming the version's own data batch as a
-    * change source (see [[changeSourcesOf]]), one `bucket\tpath` line per
-    * data dir, and an `#end\t<token>` trailer.
+    * change source (see [[changeSourcesOf]]), one `#loaded\t<path>\t<length>
+    * \t<mtime>` line per file in the load ledger ([[loadedFiles]]), one
+    * `bucket\tpath` line per data dir, and an `#end\t<token>` trailer.
     * The token pair is the cross-JVM commit sentinel: a manifest is
     * COMMITTED only when its trailer token matches its header token
     * (see [[manifestCommitted]]) — a partially-written file from a
     * writer that died mid-commit never enters the version chain. */
   private def manifestText(buckets: Int, entries: Seq[(Int, String)],
       token: String, changesName: Option[String] = None,
-      markedDir: Option[String] = None): String =
+      markedDir: Option[String] = None, loaded: Seq[TableStore.LoadedFile] = Nil): String =
     ((s"#commit\t$token" +: s"#buckets\t$buckets" +:
       (changesName.map(c => s"#changes\t$c").toSeq ++ markedDir.map(d => s"#marked\t$d"))) ++
+      loaded.map(f => s"#loaded\t${f.path}\t${f.length}\t${f.mtime}") ++
       entries.map { case (b, p) => s"$b\t$p" } :+ s"#end\t$token")
       .mkString("\n")
 
@@ -594,6 +597,29 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
   private def manifestHeader(txt: String, key: String): Option[String] =
     txt.split("\n").find(_.startsWith(s"#$key\t")).map(_.stripPrefix(s"#$key\t").trim)
 
+  /** The load ledger of version v: the landed files committed into the
+    * table so far, one `#loaded` line each (path, length, mtime; the path
+    * may hold tabs, so the numbers are read from the right). */
+  private def loadedAt(table: String, v: Long): Seq[TableStore.LoadedFile] =
+    manifestTextOf(table, v).toSeq.flatMap(_.split("\n").iterator
+      .filter(_.startsWith("#loaded\t")).map { line =>
+        val rest = line.stripPrefix("#loaded\t")
+        val mtimeAt = rest.lastIndexOf('\t')
+        val lengthAt = rest.lastIndexOf('\t', mtimeAt - 1)
+        TableStore.LoadedFile(rest.substring(0, lengthAt),
+          rest.substring(lengthAt + 1, mtimeAt).toLong, rest.substring(mtimeAt + 1).toLong)
+      })
+
+  /** The table's load ledger: every landed file a [[graft.ingest.Pipe]]
+    * has committed into it, in load order. It lives in the manifest, so
+    * it is committed atomically with the rows it loaded, and every later
+    * version carries it forward (TRUNCATE, compaction, MERGE and
+    * OVERWRITE included). A clone starts with an empty ledger (Snowflake
+    * clones do not inherit load history); dropping and recreating the
+    * table starts a new one. */
+  def loadedFiles(table: String): Seq[TableStore.LoadedFile] =
+    loadedAt(table, currentVersion(table))
+
   /** Version v's manifest text; None when it is missing or unreadable. */
   private def manifestTextOf(table: String, v: Long): Option[String] =
     try Some(readFile(manifestPath(table, v)))
@@ -614,10 +640,11 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     * `entries`; the rows to write as its `_changes` batch; `marked`, the
     * entries of a data batch the body wrote whose rows with a non-null
     * [[Merge.ActionCol]] are change rows too (recorded as the manifest's
-    * `#marked` header); and the bucket count (`-1` = carry base's
-    * forward). */
+    * `#marked` header); the bucket count (`-1` = carry base's
+    * forward); and the landed files it loads, added to the ledger. */
   private case class Commit(entries: Seq[(Int, String)], changes: Option[DataFrame] = None,
-      marked: Seq[(Int, String)] = Nil, buckets: Int = -1)
+      marked: Seq[(Int, String)] = Nil, buckets: Int = -1,
+      loaded: Seq[TableStore.LoadedFile] = Nil)
 
   /** How long an UNCOMMITTED manifest (a competing writer's in-flight
     * commit claim) may sit mtime-quiet before waiters break it as a dead
@@ -633,7 +660,10 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     * against it — so no writer's batch is ever silently orphaned by a
     * concurrent `_latest`-style swap. Bodies that can reuse work across
     * rebases (append's already-written batch files) memoize internally.
-    * Returns the committed version.
+    * Every version carries its base's load ledger forward, plus the
+    * commit's `loaded` files. A commit whose `loaded` files the base's
+    * ledger already names is not published: a rebase onto a winner that
+    * loaded them commits nothing twice. Returns whether it committed.
     *
     * The change batch is written BEFORE the manifest attempt under a
     * token-unique name recorded in the manifest's `#changes` header, so
@@ -643,11 +673,14 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     * each other's batches. A losing attempt deletes its own. A marked
     * data batch needs no second write: the manifest's `#marked` header
     * names the batch the body already wrote. */
-  private def commitLoop(table: String)(body: Long => Commit): Long = {
+  private def commitLoop(table: String)(body: Long => Commit): Boolean = {
     var attempts = 0
     var base = currentVersion(table)
     while (true) {
       val c = body(base)
+      val ledger = loadedAt(table, base)
+      val seen = ledger.iterator.map(_.path).toSet
+      if (c.loaded.exists(f => seen(f.path))) return false
       val n = if (c.buckets > 0) c.buckets else bucketsOfVersion(table, base)
       val chName = c.changes.map { ch =>
         val name = s"c_${newToken()}"
@@ -655,7 +688,7 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
         name
       }
       val markedDir = c.marked.headOption.map(e => new Path(e._2).getParent.toString)
-      if (tryCommit(table, base + 1, n, c.entries, chName, markedDir)) return base + 1
+      if (tryCommit(table, base + 1, n, c.entries, chName, markedDir, ledger ++ c.loaded)) return true
       chName.foreach(nm => fs.delete(new Path(changesRoot(table), nm), true))
       attempts += 1
       require(attempts <= 20,
@@ -665,7 +698,7 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
         s"commit($table): lost the race for v${base + 1}, rebasing (attempt $attempts)")
       base = awaitBaseAdvance(table, base)
     }
-    -1L // unreachable
+    false // unreachable
   }
 
   /** One commit attempt: [[CommitPoint.publish]] the token'd manifest
@@ -678,9 +711,10 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     * zero-winner attempt leaves an mtime-quiet corpse that
     * [[awaitBaseAdvance]] breaks. */
   private def tryCommit(table: String, v: Long, buckets: Int, entries: Seq[(Int, String)],
-      changesName: Option[String], markedDir: Option[String]): Boolean = {
+      changesName: Option[String], markedDir: Option[String],
+      loaded: Seq[TableStore.LoadedFile]): Boolean = {
     val token = newToken()
-    val text = manifestText(buckets, entries, token, changesName, markedDir)
+    val text = manifestText(buckets, entries, token, changesName, markedDir, loaded)
     val won = CommitPoint.publish(fs, manifestPath(table, v), text)
     if (won) advanceLatest(table, v)
     won
@@ -759,9 +793,9 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     * is a change row with its `__action` — the version's `_changes` batch
     * ([[changesDirOf]]) and, once [[renameColumn]] has materialized it, its
     * marked batch as `_changes/<batch dir name>`. `marked`: the bucket dirs
-    * of the data batch the manifest's `#marked` header names (MERGE,
-    * INSERT OVERWRITE), whose rows with a non-null [[Merge.ActionCol]] are
-    * change rows. */
+    * of the data batch the manifest's `#marked` header names (APPEND,
+    * MERGE, INSERT OVERWRITE), whose rows with a non-null
+    * [[Merge.ActionCol]] are change rows. */
   private[store] case class ChangeSources(plain: Seq[Path], marked: Seq[Path])
 
   private[store] def changeSourcesOf(table: String, v: Long): ChangeSources = {
@@ -1242,7 +1276,8 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
           val b = st.getPath.getName.stripPrefix("__bucket=").toInt
           (b, st.getPath.toString)
         }
-      writeStatsSidecar(table, dir, out.map(_._2))
+      // no rows, no entries: nothing will reference the dir
+      if (out.isEmpty) fs.delete(dir, true) else writeStatsSidecar(table, dir, out.map(_._2))
       out
     }
   }
@@ -1366,33 +1401,47 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     df.withColumn("__action", lit(action))
 
   /** INSERT append (S5): writes only the new batch; old files carry over.
+    * The batch is its own change source, like [[overwrite]]'s: every row
+    * carries [[Merge.ActionCol]] `= 'insert'`, written in the data job.
     * Cross-JVM safe: a rebase after a lost commit race only re-reads the
     * carried-over manifest (the batch files are state-free and reused) —
     * unless the table declares autoincrement columns, whose values derive
     * from the base version's max and must be recomputed against the
-    * winner's output. */
-  def append(table: String, df: DataFrame): Unit = synchronized {
+    * winner's output.
+    *
+    * `loaded` names the landed files `df` was parsed from; the commit
+    * adds them to the table's load ledger ([[loadedFiles]]). If the ledger
+    * of the version it would commit onto already names one of them (a
+    * concurrent pipe won the race with the same files), nothing is
+    * committed, the batch is deleted, and the result is false. */
+  def append(table: String, df: DataFrame,
+      loaded: Seq[TableStore.LoadedFile] = Nil): Boolean = synchronized {
+    require(!loaded.exists(_.path.exists(c => c == '\n' || c == '\r')),
+      "a loaded file's path must fit on one manifest line")
     val stateFree = autoIncOf(table).isEmpty
     var batch: Seq[(Int, String)] = null
-    commitLoop(table) { base =>
+    val committed = commitLoop(table) { base =>
       if (batch == null || !stateFree) {
         if (batch != null) dropBatchDirs(batch) // rebased autoinc attempt
-        batch = writeBatch(table, base + 1, fillAutoInc(table, align(table, df), base))
+        batch = writeBatch(table, base + 1, fillAutoInc(table, align(table, df), base)
+          .withColumn(Merge.ActionCol, lit("insert")))
       }
-      Commit(readManifest(table, base) ++ batch,
-        Some(withAction(readPaths(table, batch.map(_._2)), "insert")))
+      Commit(readManifest(table, base) ++ batch, marked = batch, loaded = loaded)
     }
-    // write-time auto-compaction (opt-in): bound small-file accretion
+    // a batch that was not committed is deleted; after a commit,
+    // write-time auto-compaction (opt-in) bounds small-file accretion
     // from continuous micro-batch appends. The TABLE property (ALTER
     // TABLE … SET AUTO_COMPACT) wins over the session conf — including
     // an explicit OFF (0), which silences a conf-set session.
-    autoCompactOf(table) match {
+    if (!committed) dropBatchDirs(batch)
+    else autoCompactOf(table) match {
       case Some(0) => // table says OFF
       case Some(n) => autoCompact(table, n)
       case None =>
         spark.conf.getOption("spark.graft.store.autoCompactBatches")
           .map(_.toInt).filter(_ > 0).foreach(n => autoCompact(table, n))
     }
+    committed
   }
 
   /** INSERT OVERWRITE (S6): full replace; the change rows are the new
@@ -1777,6 +1826,10 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
   * parser for the store's micro-partition metadata ([[StoreFileIndex]]).
   * Domains must match [[StatsPruning]]'s comparisons. */
 object TableStore {
+
+  /** A landed file in a table's load ledger ([[TableStore.loadedFiles]]):
+    * its qualified path, and its length and mtime when it was loaded. */
+  final case class LoadedFile(path: String, length: Long, mtime: Long)
 
   /** A store that stays out of [[GraftCatalog]]'s name resolution: the
     * per-call handles [[Artifacts]] builds, which resolve by prefix. */

@@ -49,10 +49,9 @@ class IngestSpec extends AnyFunSuite {
   test("pipe continuous mode ingests landed files until paused") {
     val landing = Files.createTempDirectory("graft_landing_c")
     val storeDir = Files.createTempDirectory("graft_pipe_store_c")
-    val ckpt = Files.createTempDirectory("graft_pipe_ckpt_c")
     val store = new TableStore(spark, storeDir.toString, numBuckets = 2)
     store.createTable("stg_c", schema)
-    val pipe = new Pipe(spark, "pc", landing.toString, "stg_c", schema, store, ckpt.toString)
+    val pipe = new Pipe(spark, "pc", landing.toString, "stg_c", schema, store)
     pipe.start(intervalMs = 200L)
     try {
       assert(pipe.isRunning && pipe.status.startsWith("RUNNING"))
@@ -77,11 +76,10 @@ class IngestSpec extends AnyFunSuite {
   test("jsonl pipe parses one object per line with schema projection") {
     val landing = Files.createTempDirectory("graft_landing_j")
     val storeDir = Files.createTempDirectory("graft_pipe_store_j")
-    val ckpt = Files.createTempDirectory("graft_pipe_ckpt_j")
     val store = new TableStore(spark, storeDir.toString, numBuckets = 2)
     store.createTable("stg_j", schema)
     val pipe = new Pipe(spark, "pj", landing.toString, "stg_j", schema, store,
-      ckpt.toString, format = "jsonl")
+      format = "jsonl")
     Files.writeString(landing.resolve("f1.jsonl"),
       """{"a":"1","b":"x","c":"y"}
         |{"a":"2","b":"p"}
@@ -96,11 +94,10 @@ class IngestSpec extends AnyFunSuite {
   test("pipe runOnce ingests each landed file exactly once into the stage table") {
     val landing = Files.createTempDirectory("graft_landing")
     val storeDir = Files.createTempDirectory("graft_pipe_store")
-    val ckpt = Files.createTempDirectory("graft_pipe_ckpt")
     val store = new TableStore(spark, storeDir.toString, numBuckets = 2)
     store.createTable("stg", schema)
     val stm = ChangeStream.create(store, "stg", "stg_stm")
-    val pipe = new Pipe(spark, "p1", landing.toString, "stg", schema, store, ckpt.toString)
+    val pipe = new Pipe(spark, "p1", landing.toString, "stg", schema, store)
 
     Files.writeString(landing.resolve("f1.csv"), "A,B,C\n1,x,y\n2,p,q\n")
     pipe.runOnce()

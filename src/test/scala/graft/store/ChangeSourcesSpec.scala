@@ -141,6 +141,21 @@ class ChangeSourcesSpec extends AnyFunSuite {
     assert(!afterCompact && compactJobs == 0 && s.read.isEmpty)
   }
 
+  test("an APPEND writes its rows once: its batch is its change source, no `#changes` header") {
+    val root = freshRoot()
+    val st = new TableStore(spark, root, numBuckets = 4)
+    kvTable(st, 1L to 3L)
+    val s = ChangeStream.create(st, "t", "s")
+    val (_, jobs) = jobsDuring(st.append("t", Seq((7L, "v7", 7), (8L, "v8", 8)).toDF("id", "v", "n")))
+    val v = st.currentVersion("t")
+    val manifest = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "t", "_versions", f"v$v%08d")), "UTF-8").split("\n")
+    assert(!manifest.exists(_.startsWith("#changes\t")) && manifest.exists(_.startsWith("#marked\t")))
+    assert(jobs == 1, "the data job is the append's only write")
+    assert(st.changeRowCount("t", v - 1, v) == Some(2L))
+    assert(rows(s.read) == Seq("7|v7|7|insert", "8|v8|8|insert"))
+  }
+
   test("renameColumn rewrites a pending MERGE's and OVERWRITE's change rows under the new name") {
     val st = new TableStore(spark, freshRoot(), numBuckets = 4)
     kvTable(st, 1L to 6L)
@@ -196,7 +211,10 @@ class ChangeSourcesSpec extends AnyFunSuite {
       """CREATE TABLE t (id BIGINT, v STRING) KEYS (id);
         |CREATE TABLE u (id BIGINT, v STRING) KEYS (id);
         |CREATE STREAM s ON TABLE t;
-        |INSERT INTO t SELECT 1, 'a'""".stripMargin)
+        |INSERT INTO t SELECT 1, 'a';
+        |UPDATE t SET v = 'b' WHERE id = 1""".stripMargin)
+    // the UPDATE's `_changes` batch (an APPEND marks its data batch,
+    // which stays live in the table)
     val pending = st.changesDirOf("t", st.currentVersion("t")).get
     assert(fs.exists(st.offsetPath("t", "s")))
 

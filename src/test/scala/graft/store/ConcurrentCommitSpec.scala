@@ -62,9 +62,9 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     (1L to 2L * perWriter).foreach { v =>
       assert(a.readVersion("t", v).count() > 0, s"version $v unreadable")
     }
-    // CDC completeness: a committed version's change batch is always
-    // present (written before the manifest attempt, pointed to by its
-    // #changes header) — the stream must see every inserted row
+    // CDC completeness: a committed version's change source is always
+    // present (its own data batch, written before the manifest attempt and
+    // named by its #marked header) — the stream must see every inserted row
     var changeRows = 0L
     stream.consume { ch => changeRows = ch.count() }
     assert(changeRows == rows, s"CDC lost changes: $changeRows of $rows")

@@ -189,7 +189,11 @@ class MergeChangeCaptureSpec extends AnyFunSuite {
     GraftSql.execute(spark, st, "create table mk_ctas as select * from mk")
     hidden("CTAS", st.read("mk_ctas"))
     assert(st.schemaOf("mk_ctas").fieldNames.toSeq == kv.fieldNames.toSeq)
-    hiddenInFiles("mk_ctas")
+    // a CTAS is an APPEND, whose batch marks every row it writes 'insert':
+    // none of the source's markers (update, null) travel with the rows
+    val ctasFiles = st.readManifest("mk_ctas", st.currentVersion("mk_ctas")).map(_._2)
+    assert(spark.read.parquet(ctasFiles: _*).select(Merge.ActionCol).distinct()
+      .as[String].collect().toSeq == Seq("insert"), "mk_ctas's files carry the source's markers")
 
     st.cloneTable("mk", "mk_clone")
     hidden("CLONE", st.read("mk_clone"))

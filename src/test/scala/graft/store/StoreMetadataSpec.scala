@@ -56,8 +56,8 @@ class StoreMetadataSpec extends AnyFunSuite {
     // so hasData asks Spark and must answer exactly as Spark does
     st.append("t", Seq((3L, "c")).toDF("id", "v"))
     val v3 = st.currentVersion("t")
-    val batch3 = st.changesDirOf("t", v3).get
-    dataFiles(batch3).foreach { p =>
+    // an APPEND's change source is its own marked data batch
+    st.changeSourcesOf("t", v3).marked.flatMap(dataFiles).foreach { p =>
       fs.delete(p, false)
       fs.create(p).close()
     }
@@ -68,7 +68,7 @@ class StoreMetadataSpec extends AnyFunSuite {
     // a corrupt footer: garbage where the parquet tail should be
     st.append("t", Seq((4L, "d")).toDF("id", "v"))
     val v4 = st.currentVersion("t")
-    dataFiles(st.changesDirOf("t", v4).get).foreach { p =>
+    st.changeSourcesOf("t", v4).marked.flatMap(dataFiles).foreach { p =>
       fs.delete(p, false)
       val out = fs.create(p)
       try out.write("PAR1 this is not a parquet file PAR1".getBytes("UTF-8")) finally out.close()

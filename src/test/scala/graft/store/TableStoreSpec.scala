@@ -456,13 +456,16 @@ class TableStoreSpec extends AnyFunSuite {
   test("renameColumn heals crashed change-batch rewrites from .bak/.tmp leftovers") {
     val st = freshStore()
     st.createTable("t", schema, keys = Seq("id"))
+    st.append("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
     val stm = ChangeStream.create(st, "t", "s1")
-    st.append("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    // a DELETE writes its change rows as a `_changes` batch (an APPEND
+    // marks its data batch instead)
+    st.delete("t", col("id") =!= 3L)
     // simulate a crash between `orig -> .bak` and `tmp -> orig`: the batch
     // dir is gone, .bak holds the original, .tmp may be incomplete
     // resolve the token-named change batch through the manifest pointer
     val chDir = java.nio.file.Paths.get(
-      st.changesDirOf("t", 1L).get.toUri.getPath)
+      st.changesDirOf("t", 2L).get.toUri.getPath)
     val bak = java.nio.file.Paths.get(chDir.toString + ".bak")
     java.nio.file.Files.move(chDir, bak)
     val tmp = java.nio.file.Paths.get(chDir.toString + ".tmp")
