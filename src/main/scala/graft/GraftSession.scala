@@ -273,7 +273,11 @@ object GraftSession {
     * partition per core, UTC session time (the reference warehouse's
     * posture), AQE with skew-join splitting on, graft's Catalyst
     * extensions ([[graft.spark.GraftExtensions]]: the native `graft_*`
-    * expressions and the pruning rules), `nanosAsLong` so the events
+    * expressions and the pruning rules; it also defaults Spark's codegen
+    * cache, `spark.sql.codegen.cache.maxEntries`, to 2048 entries instead
+    * of 100, so repeated queries reuse their compiled classes. A value set
+    * in Spark's conf wins, and Spark reads it once per JVM, at the first
+    * code generation), `nanosAsLong` so the events
     * table's nanosecond timestamps load (see [[Tables.events]]), no UI,
     * WARN logging. Idempotent: `getOrCreate` returns the running session
     * when there is one. */

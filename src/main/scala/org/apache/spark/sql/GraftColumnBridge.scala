@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * (Spark 4 moved Column onto ColumnNode; `classic.ExpressionUtils` is the
   * sanctioned converter but is sql-private). Used by the table store's
   * predicate analysis ([[graft.store.TableStore]] bucket derivation) —
-  * read-only inspection of user predicates, no plan mutation.
+  * read-only inspection of user predicates, no plan mutation — and to
+  * the other spark-private hooks graft uses (`Dataset.ofRows`,
+  * `asNullable`, the SparkContext's own conf).
   */
 object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -39,4 +41,12 @@ object GraftColumnBridge {
     * read under a user schema, which [[graft.store.StoreFileIndex]]
     * reads match. */
   def nullable(schema: types.StructType): types.StructType = schema.asNullable
+
+  /** Set `key` to `value` on the active SparkContext's own conf (the
+    * spark-private `SparkContext.getActive` and `conf`; the public
+    * `getConf` is a copy) unless it is set there already. A session
+    * created after this copies the value; see
+    * [[graft.spark.GraftExtensions]]. */
+  def setConfIfMissing(key: String, value: String): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
 }

@@ -172,4 +172,28 @@ class JoinKeyPruneSpec extends AnyFunSuite
     assert(joined.collect().map(_.getLong(0)).toSet ==
       Set(scatter(123, 2), scatter(345, 6)))
   }
+
+  test("a store dim overwritten in place re-probes: the next join prunes by the new keys") {
+    val store = freshStore()
+    val fact = rangeTable(store)
+    def batchFiles(lo: Long): Set[String] =
+      factFiles(fact.filter(col("id") >= lo && col("id") < lo + 500))
+    store.createTable("dim", StructType(Seq(
+      StructField("id", LongType), StructField("label", StringType))))
+    // a build side that is itself a store read: its relation is the
+    // probe memo's key, so the memo must tell its versions apart
+    def joinDim(): DataFrame = fact.join(store.read("dim"), "id")
+    def served(df: DataFrame): Set[String] = factFiles(df).filter(_.contains("/fact/"))
+
+    store.append("dim", Seq((1500L, "a"), (1999L, "b")).toDF("id", "label"))
+    val before = joinDim()
+    assert(served(before).nonEmpty && served(before).subsetOf(batchFiles(1500L)))
+    assert(before.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1500L, 1999L))
+
+    store.overwrite("dim", Seq((2500L, "c"), (2999L, "d")).toDF("id", "label"))
+    val after = joinDim()
+    assert(served(after).nonEmpty && served(after).subsetOf(batchFiles(2500L)),
+      "the join after the overwrite must prune by the dim's new keys")
+    assert(after.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(2500L, 2999L))
+  }
 }
