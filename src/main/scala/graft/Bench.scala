@@ -42,53 +42,63 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadBefore = osBean.getSystemLoadAverage
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Each query runs `iterations` times; the headline is the min so
-    // one-off JIT/codegen warm-up for a query's unique operators doesn't
-    // get attributed to the query itself — but ALL iteration times are
-    // recorded in the JSON ("iterTimes"): a degraded host shows up as a
-    // wide min↔max spread, so a poisoned capture (the BENCH_r09.json
-    // incident — 4× host slowdown read as a 55× query regression)
-    // self-identifies instead of masquerading as a code change. A failure
-    // is reported, not swallowed: the failing query times as the wall cost
-    // of the attempt and its error message lands in the "errors" map (and
-    // errCount > 0 flags the run).
+    // Each query runs `iterations` times, pass-major: every query once,
+    // then every query again, so a host-wide slowdown spreads over many
+    // queries' single iterations instead of poisoning all iterations of
+    // the few queries that happened to run during it. The headline is the
+    // min so one-off JIT/codegen warm-up for a query's unique operators
+    // doesn't get attributed to the query itself — but ALL iteration
+    // times are recorded in the JSON ("iterTimes"), with the load average
+    // at each iteration's start ("loadAvg"): a degraded host shows up as
+    // a wide min↔max spread on a high load average, so a poisoned capture
+    // (the BENCH_r09.json incident — 4× host slowdown read as a 55× query
+    // regression) self-identifies instead of masquerading as a code
+    // change. A failure is reported, not swallowed: the failing query
+    // times as the wall cost of the attempt and its error message lands
+    // in the "errors" map (and errCount > 0 flags the run).
     // per-pass failed-attempt counts: in soak mode, an intermittent
     // pass-2+ failure inflates that pass's total — tagging errors with
     // their pass and counting per pass keeps a drift-guard trip
     // distinguishable from a genuine cache/state leak
     val passErrAttempts = scala.collection.mutable.ArrayBuffer[Int]()
-    def runSuite(passIdx: Int): Seq[(String, Seq[Double])] = {
+    val selected = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+    /** Per query, in registry order: (name, iteration times, the load
+      * average at each iteration's start). */
+    def runSuite(passIdx: Int): Seq[(String, Seq[Double], Seq[Double])] = {
       var failedAttempts = 0
-      val rows = SparkEntry.queries
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-          val times = (1 to iterations).map { _ =>
-            val t0 = System.nanoTime()
-            try run(fn)
-            catch {
-              case e: Throwable =>
-                failedAttempts += 1
-                if (!errors.contains(name))
-                  errors(name) = s"pass$passIdx: " +
-                    Option(e.getMessage).getOrElse(e.getClass.getName)
-                      .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
-            }
-            (System.nanoTime() - t0) / 1e9
+      val iters = (1 to iterations).map { _ =>
+        selected.map { case (name, fn) =>
+          val load = osBean.getSystemLoadAverage
+          val t0 = System.nanoTime()
+          try run(fn)
+          catch {
+            case e: Throwable =>
+              failedAttempts += 1
+              if (!errors.contains(name))
+                errors(name) = s"pass$passIdx: " +
+                  Option(e.getMessage).getOrElse(e.getClass.getName)
+                    .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
           }
-          name -> times
-        }.toSeq
+          ((System.nanoTime() - t0) / 1e9, load)
+        }
+      }
       passErrAttempts += failedAttempts
-      rows
+      selected.map(_._1).zip(iters.transpose).map { case (name, runs) =>
+        (name, runs.map(_._1), runs.map(_._2))
+      }
     }
     val passes = (1 to soak).map(runSuite)
     val first = passes.head
     val loadAfter = osBean.getSystemLoadAverage
     def jstr(s: String) = "\"" + s + "\""
     def jarr(xs: Seq[Double]) = xs.mkString("[", ",", "]")
-    val results = first.map { case (k, ts) => k -> ts.min }
+    val results = first.map { case (k, ts, _) => k -> ts.min }
     val qs = results.map { case (k, v) => jstr(k) + ":" + v }
       .mkString("{", ",", "}")
-    val iterTimes = first.map { case (k, ts) => jstr(k) + ":" + jarr(ts) }
+    val iterTimes = first.map { case (k, ts, _) => jstr(k) + ":" + jarr(ts) }
+      .mkString("{", ",", "}")
+    val loadAvg = first.map { case (k, _, ls) => jstr(k) + ":" + jarr(ls) }
       .mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
@@ -120,25 +130,28 @@ object Bench {
     // re-litigate them against an idle replay (the r19 a9_cube/st5
     // incident). min is still the headline — the flag is disclosure.
     val spread = first.collect {
-      case (k, ts) if ts.nonEmpty && ts.min > 0 &&
+      case (k, ts, _) if ts.nonEmpty && ts.min > 0 &&
           ts.max / ts.min > 3.0 && ts.max - ts.min > 0.5 =>
         k -> (ts.min, ts.max)
     }
     val spreadJson = spread.map { case (k, (mn, mx)) =>
       jstr(k) + s""":{"min":$mn,"max":$mx}""" }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errCount":${errors.size},"errors":$errs,"iters":$iterations,"sf":"$sfDir","env":$env,"artifactWarm":$warm,"spreadOutlierCount":${spread.size},"spreadOutliers":$spreadJson,"iterTimes":$iterTimes,"soak":$soakJson}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errCount":${errors.size},"errors":$errs,"iters":$iterations,"sf":"$sfDir","env":$env,"artifactWarm":$warm,"spreadOutlierCount":${spread.size},"spreadOutliers":$spreadJson,"iterTimes":$iterTimes,"loadAvg":$loadAvg,"soak":$soakJson}"""
     println(line)
     // the driver captures only a bounded stdout TAIL of this one giant
     // JSON line (BENCH_r11 lost 73/106 timings to truncation) — persist
     // the full artifact to the repo so the round's perf evidence
-    // survives regardless of how much of stdout the harness keeps
-    try java.nio.file.Files.writeString(java.nio.file.Path.of("BENCH_LOCAL.json"), line + "\n")
-    catch { case e: Exception => System.err.println(s"BENCH_LOCAL.json write failed: $e") }
+    // survives regardless of how much of stdout the harness keeps. The
+    // name carries the core count and the data dir, so runs at different
+    // shapes (a c8 and a c32 run, sf0.1 and sf1) keep separate captures.
+    val capture = s"BENCH_LOCAL_c${cpus}_${java.nio.file.Path.of(sfDir).getFileName}.json"
+    try java.nio.file.Files.writeString(java.nio.file.Path.of(capture), line + "\n")
+    catch { case e: Exception => System.err.println(s"$capture write failed: $e") }
     // self-check AFTER the line is out (round 19's capture was lost to a
     // parse failure downstream, "parsed": null): the emitted line must
     // round-trip through a real JSON parser (Jackson, on Spark's
     // classpath), so a malformed line fails THIS run loudly while its
-    // payload stays on stdout and in BENCH_LOCAL.json for diagnosis
+    // payload stays on stdout and in the capture file for diagnosis
     new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     spark.stop()
     if (soak > 1) {

@@ -31,8 +31,9 @@ import org.apache.spark.sql.functions._
   * rows is SALTED so the hot key spreads over saltFactor tasks
   * guaranteed (AQE's skew rule cannot split this particular join — see
   * [[canonicalizeUrlsAgg]]'s scaladoc for the measured pattern finding).
-  * Identical output (e42 vs e42b oracle-checked); SkewScale A/Bs the
-  * two on a mega-duplicated key, wall time AND max task shuffle-read.
+  * Identical output (e42 vs e42b oracle-checked); SCALE.md (round 20,
+  * "e42b_url_dedup_agg") A/Bs the two on a mega-duplicated key, wall
+  * time AND max task shuffle-read.
   *
   * Oracle determinism: every fold is a left fold in index order, all
   * counts are exact integers, doubles are produced by a single division
@@ -368,7 +369,7 @@ object WebCuration {
     * per input partition BEFORE the shuffle, and the join-back that
     * fans (keeper, url_dups) out to rows is SALTED
     * ([[SkewJoin.salted]], `saltFactor` tasks per key) so no task ever
-    * sees the whole hot key. Measured finding (SkewScale, round 20):
+    * sees the whole hot key. Measured finding (SCALE.md, round 20):
     * AQE's OptimizeSkewedJoin can NOT split this join-back on its own —
     * its pattern requires both SMJ children to be a Sort directly over
     * a shuffle stage, and the group table's final HashAggregate sits
@@ -379,14 +380,15 @@ object WebCuration {
     * window form's one, so at bench scale the window form is FASTER —
     * the agg form's property is that max-rows-per-task stays bounded
     * (hot key / saltFactor) when one canonical URL has more copies than
-    * a task can sort; SkewScale prints both wall time and max task
-    * shuffle-read on a 1M-copy key. */
+    * a task can sort; SCALE.md records both wall time and max task
+    * shuffle-read on a 1M-copy key, and `WebCurationSpec` checks the
+    * max task shuffle-read at test scale. */
   def canonicalizeUrlsAgg(docs: DataFrame, idCol: String, urlCol: String,
       saltFactor: Int = 8): DataFrame = {
     // the canon alias is FENCED: the join infers isnotnull(canon_url) on
     // both branches, and without the fence PushPredicateThroughNonJoin
     // substitutes the full 5-regex chain into those Filters — each row
-    // paid the canonicalization twice per branch (SkewScale A/B'd ~2.4×
+    // paid the canonicalization twice per branch (SCALE.md: ~2.4×
     // on the full form). Fenced, the constraint filters evaluate on the
     // attribute and the regexes run once per branch.
     val canon = docs.select(col(idCol), col(urlCol),

@@ -2241,8 +2241,8 @@ object PipelineQueries {
     // state bounded at O(cap) by the `graft_topk_min` heap (each user's
     // 8 time-earliest funnel events), the form a 100 TB event log needs
     // where one bot's tens of millions of funnel-typed events would
-    // otherwise buffer in a single task (SkewScale measures the 10 M-
-    // event bot). cap = 8 BINDS at every test sf (active users hold
+    // otherwise buffer in a single task (SCALE.md, round 14's bot-skew
+    // A/B, measures the 10 M-event bot). cap = 8 BINDS at every test sf (active users hold
     // more than 8 funnel events), so the oracle checks the capped
     // semantics itself — each engine restricts to the row_number-by-
     // (ets, step)-≤ 8 event set, then runs the same sequential-min
@@ -2287,8 +2287,8 @@ object PipelineQueries {
     // per-task sort state bounded by a chunk's events (a bot's chunks
     // sort in PARALLEL instead of serializing one task), boundary pairs
     // recovered from per-chunk (first, last); output identical to st7
-    // and hash-checked against the same oracle. SkewScale measures the
-    // 10 M-event bot.
+    // and hash-checked against the same oracle. SCALE.md (round 17)
+    // measures the 10 M-event bot.
     "st7b_transitions_chunked" -> { (s, dir) =>
       graft.ops.EventAnalytics.eventTransitionMatrix(Tables.events(s, dir),
         "user_id", "event_type", "ts", chunkUs = Some(86400000000L))
@@ -2389,8 +2389,8 @@ object PipelineQueries {
     // mega-duplicated URL collapses before the shuffle, and the
     // join-back is SALTED so no task sees the whole hot key (a window
     // partition is indivisible, and AQE's skew rule measurably declines
-    // this join's shape — see WebCuration scaladoc + SkewScale's
-    // ≥1M-copy A/B with max-task-read telemetry).
+    // this join's shape — see WebCuration scaladoc + SCALE.md round
+    // 20's ≥1M-copy A/B with max-task-read telemetry).
     "e42b_url_dedup_agg" -> { (s, dir) =>
       val id = col("doc_id")
       val docs = Tables.load(s, dir, "documents").withColumn("url", concat(

@@ -12,10 +12,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * literal predicate [[SidecarPrune]] could serve, yet only the files
   * whose key intervals/blooms can contain SOME build-side key can
   * produce join output. This rule evaluates the build side's distinct
-  * keys DRIVER-SIDE during optimization (bounded by
-  * `spark.graft.joinPrune.maxKeys`, gated on the build side's estimated
-  * size — the same "small enough to broadcast" judgement join planning
-  * already makes) and prunes the fact's FILES through the same
+  * keys DRIVER-SIDE during optimization (bounded by [[MaxKeys]], gated
+  * on the build side's estimated size — the same "small enough to
+  * broadcast" judgement join planning already makes) and prunes the
+  * fact's FILES through the same
   * [[StatsPruning]] compiler and [[StoreFileIndex.prune]] every other
   * pruning consumer uses — Snowflake's join pruning / Spark's dynamic partition
   * pruning, at sidecar-file granularity, for tables with no partition
@@ -38,11 +38,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * a driver-side job paid at plan time, so it only fires where pruning
   * a large scan can repay it; set 0 to probe unconditionally); the
   * build side must be deterministic, estimated under [[MaxBuildBytes]]
-  * (8 MiB), and yield at most `maxKeys` distinct keys (one
+  * (8 MiB), and yield at most [[MaxKeys]] distinct keys (one
   * column-pruned distinct-limit job, memoized per canonicalized build
   * plan — AQE re-optimizations and repeated queries of the same dim pay
   * once per session). A build side
-  * OVER the `maxKeys` budget degrades to a [[Span]] probe — the key's
+  * OVER the [[MaxKeys]] budget degrades to a [[Span]] probe — the key's
   * [min, max] from one more small agg — so mid-cardinality dims with a
   * selective key RANGE (a date-restricted surrogate range, a tenant's
   * id block) still prune by interval even when an IN-list would be too
@@ -56,7 +56,9 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
   val EnabledConf = "spark.graft.joinPrune.enabled"
   /** Largest estimated build side the rule will probe. */
   val MaxBuildBytes = BigInt(8L * 1024 * 1024)
-  val MaxKeysConf = "spark.graft.joinPrune.maxKeys"
+  /** Most distinct build keys the exact IN-list probe carries; a build
+    * side with more falls back to the [[Span]] probe. */
+  val MaxKeys = 10000
   val MinFactBytesConf = "spark.graft.joinPrune.minFactBytes"
 
   /** One recorded probe-and-prune decision, surfaced to operators via
@@ -164,7 +166,7 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
 
   /** What one build-side probe job learned about a join key. */
   private sealed trait Probe
-  /** ≤ maxKeys distinct non-null values — the exact IN-list probe.
+  /** ≤ [[MaxKeys]] distinct non-null values — the exact IN-list probe.
     * Empty = no non-null keys at all: nothing on the fact can match. */
   private case class Keys(vals: Seq[Any]) extends Probe
   /** Too many distinct values for an IN-list, but the key's [min, max]
@@ -214,7 +216,6 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
 
   private def buildKeys(spark: org.apache.spark.sql.SparkSession,
       build: LogicalPlan, attr: AttributeReference): Probe = {
-    val maxKeys = conf.getConfString(MaxKeysConf, "10000").toInt
     val key = (build.canonicalized,
       build.output.indexWhere(_.exprId == attr.exprId))
     val hit = memo.get(key)
@@ -224,8 +225,8 @@ object JoinKeyPrune extends Rule[LogicalPlan] with PredicateHelper {
         executing.set(true)
         val d = org.apache.spark.sql.GraftColumnBridge
           .ofRows(spark, Project(Seq(attr), build))
-        val rows = d.distinct().limit(maxKeys + 1).collect()
-        if (rows.length <= maxKeys)
+        val rows = d.distinct().limit(MaxKeys + 1).collect()
+        if (rows.length <= MaxKeys)
           Keys(rows.toIndexedSeq.map(_.get(0)).filter(_ != null))
         else if (!spanSafe(attr.dataType)) Unknown
         else {

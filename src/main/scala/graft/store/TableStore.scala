@@ -27,17 +27,18 @@ import graft.spark.GraftCatalog
   *   <root>/<table>/_latest                        pointer file, atomically replaced
   *   <root>/<table>/_changes/c_<token>/            CDC batch (rows + __action) of a version
   *                                                 whose change rows are not in its data
-  *                                                 batch: UPDATE, DELETE, MERGE's deleted
-  *                                                 rows (legacy: _changes/v<version>)
+  *                                                 batch: DELETE, MERGE's deleted rows
+  *                                                 (legacy: _changes/v<version>)
   *   <root>/<table>/_streams/<name>.offset         per-stream consumed version
   * }}}
   *
   * Scale design:
   *  - APPEND writes only the new batch and a new manifest — no data copy.
-  *  - an APPEND, MERGE or INSERT OVERWRITE writes its rows once: the batch
-  *    files carry each row's action (`__graft_action`, null on carried rows)
-  *    and the manifest names the batch as the version's change source
-  *    ([[changeSourcesOf]]), so no `_changes` copy is written for them.
+  *  - an APPEND, UPDATE, MERGE or INSERT OVERWRITE writes its rows once:
+  *    the batch files carry each row's action (`__graft_action`, null on
+  *    carried rows) and the manifest names the batch as the version's
+  *    change source ([[changeSourcesOf]]), so no `_changes` copy is
+  *    written for them.
   *  - MERGE rewrites only the hash buckets the source batch touches;
   *    untouched buckets carry over at manifest level. With B buckets and a
   *    source hitting k of them, a merge costs O(tableSize · k/B) IO instead
@@ -509,33 +510,23 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
       if (fs.exists(p)) readFile(p).trim.toInt else numBuckets
     }
 
-  /** Change a table's bucket count and rewrite it once (a [[compact]]
-    * variant — O(table) IO, done as maintenance, never per-query). With
-    * `n <= 0` the target is sized from current data (~256 MB per bucket,
-    * clamped to [1, 4096]) — the knob that keeps per-bucket rewrite cost
-    * bounded as a table grows from MBs to TBs. The count flip is ATOMIC
-    * with the rewrite commit (both live in the new version's manifest): a
-    * crash mid-rewrite leaves the old version + old count fully intact. */
-  def rebucket(table: String, n: Int = 0): Unit = synchronized {
+  /** Change a table's bucket count to `n` and rewrite it once (a
+    * [[compact]] variant — O(table) IO, done as maintenance, never
+    * per-query); the knob that keeps per-bucket rewrite cost bounded as a
+    * table grows. The count flip is ATOMIC with the rewrite commit (both
+    * live in the new version's manifest): a crash mid-rewrite leaves the
+    * old version + old count fully intact. */
+  def rebucket(table: String, n: Int): Unit = synchronized {
+    require(n > 0, s"rebucket needs a positive bucket count, got $n")
     var lastBatch: Seq[(Int, String)] = null
-    var target = 0
     commitLoop(table) { base =>
       if (lastBatch != null) dropBatchDirs(lastBatch) // rebased attempt
-      target =
-        if (n > 0) n
-        else {
-          val bytes = readManifest(table, base).map { case (_, p) =>
-            val dir = new Path(p)
-            if (fs.exists(dir)) fs.getContentSummary(dir).getLength else 0L
-          }.sum
-          math.max(1, math.min(4096, math.ceil(bytes / (256.0 * 1024 * 1024)).toInt))
-        }
-      lastBatch = writeBatch(table, base + 1, readVersion(table, base), target)
-      Commit(lastBatch, buckets = target)
+      lastBatch = writeBatch(table, base + 1, readVersion(table, base), n)
+      Commit(lastBatch, buckets = n)
     }
     // best-effort hint for pre-header readers; authoritative copy is the
     // manifest header committed above
-    writeFile(new Path(tdir(table), "_buckets"), target.toString)
+    writeFile(new Path(tdir(table), "_buckets"), n.toString)
   }
 
   // ---- manifests ----------------------------------------------------------
@@ -794,7 +785,7 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     * ([[changesDirOf]]) and, once [[renameColumn]] has materialized it, its
     * marked batch as `_changes/<batch dir name>`. `marked`: the bucket dirs
     * of the data batch the manifest's `#marked` header names (APPEND,
-    * MERGE, INSERT OVERWRITE), whose rows with a non-null
+    * UPDATE, MERGE, INSERT OVERWRITE), whose rows with a non-null
     * [[Merge.ActionCol]] are change rows. */
   private[store] case class ChangeSources(plain: Seq[Path], marked: Seq[Path])
 
@@ -1485,7 +1476,11 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
     * only the predicate + key columns — no predicate analysis needed, and
     * correct for ANY predicate since unmatched rows never change); only
     * those buckets are rewritten, the rest carry over at manifest level.
-    * At 100 TB a key-bound UPDATE costs O(tableSize·k/B) IO, same as MERGE. */
+    * At 100 TB a key-bound UPDATE costs O(tableSize·k/B) IO, same as MERGE.
+    * The rewritten batch is the version's change source, like MERGE's:
+    * a row `pred` holds for carries [[Merge.ActionCol]] `= 'update'`,
+    * decided on the row before SET rewrites the columns `pred` reads; the
+    * other rewritten rows (`pred` false or NULL) carry none. */
   def update(table: String, pred: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Unit = synchronized {
     var lastBatch: Seq[(Int, String)] = null
@@ -1493,14 +1488,13 @@ class TableStore private (val spark: SparkSession, val root: String, val numBuck
       if (lastBatch != null) dropBatchDirs(lastBatch) // recompute vs winner
       val touchedBuckets = matchingBuckets(table, pred, base)
       val updated = graft.ops.TableOps.update(
-        readVersion(table, base, touchedBuckets), pred, set)
+        readVersion(table, base, touchedBuckets)
+          .withColumn(Merge.ActionCol, when(pred, lit("update"))), pred, set)
       lastBatch = writeBatch(table, base + 1, updated)
       val untouched = touchedBuckets
         .map(bs => readManifest(table, base).filterNot(e => bs(e._1)))
         .getOrElse(Nil)
-      val changed = graft.ops.TableOps.update(
-        readVersion(table, base, touchedBuckets).filter(pred), pred, set)
-      Commit(untouched ++ lastBatch, Some(withAction(changed, "update")))
+      Commit(untouched ++ lastBatch, marked = lastBatch)
     }
   }
 

@@ -178,6 +178,37 @@ class WebCurationSpec extends AnyFunSuite {
       hot.find(_.getAs[Boolean]("keep")).get.getAs[Long]("doc_id") == 1L)
   }
 
+  test("canonicalizeUrlsAgg never gives one task the whole hot key; the window form must") {
+    val hot = 4000L
+    val urls = spark.range(hot + 500L)
+      .select(col("id").as("doc_id"),
+        when(col("id") < hot,
+            concat(lit("https://WWW.Parked.Example.NET/?sid="), col("id").cast("string")))
+          .otherwise(concat(lit("http://host-"), (col("id") % 97).cast("string"),
+            lit(".example.org/p/"), col("id").cast("string"))).as("url"))
+      .repartition(4)
+    /** Most shuffle records one task read while every column of `df` is
+      * written to the noop sink (a count could prune the window away). */
+    def maxTaskRead(df: org.apache.spark.sql.DataFrame): Long =
+      TestSpark.taskMetricDuring(_.shuffleReadMetrics.recordsRead, math.max) {
+        df.write.format("noop").mode("overwrite").save()
+      }._2
+    // many small shuffle partitions, none coalesced: at this size AQE
+    // would otherwise fold every partition into one task for both forms
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val win = maxTaskRead(WebCuration.canonicalizeUrls(urls, "doc_id", "url"))
+      val agg = maxTaskRead(WebCuration.canonicalizeUrlsAgg(urls, "doc_id", "url"))
+      assert(win >= hot, s"a window partition is indivisible: one task reads every copy ($win)")
+      assert(agg <= hot / 2, s"the agg form must spread the hot key: one task read $agg")
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions)
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
+  }
+
   test("lineDedupAgainst cleans a NEW batch against an existing dup-line table") {
     // d13's incremental pattern: the corpus's duplicated-line table is
     // already built; an ingest batch is cleaned against it without

@@ -29,9 +29,9 @@ import graft.store.TableStore
   *  - the shared run log loses no appends (manifest pointer swaps are
   *    atomic under contention): exactly entities × cycles × tasks rows.
   *
-  * Per-tick latencies at sf1 volumes are measured by the
-  * [[graft.ConcurrentScale]] main and recorded in SCALE.md; this spec
-  * keeps volumes test-sized and asserts the 1-minute tick bound holds.
+  * Per-tick latencies at sf1 volumes are recorded in SCALE.md
+  * ("Concurrent 3-entity DAG proof at sf1"); this spec keeps volumes
+  * test-sized and asserts the 1-minute tick bound holds.
   */
 class ConcurrentDagSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

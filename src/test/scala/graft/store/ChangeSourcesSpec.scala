@@ -9,13 +9,15 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.jobsDuring
 import graft.cdc.ChangeStream
 import graft.ops.Merge
 import graft.sql.MergeSql
 
 /** Where a version's change rows live ([[TableStore.changeSourcesOf]]):
-  * MERGE and INSERT OVERWRITE mark the rows of the data batch they wrote,
-  * the other writes commit a `_changes` batch. A stream reading across
+  * APPEND, UPDATE, MERGE and INSERT OVERWRITE mark the rows of the data
+  * batch they wrote; only a DELETE and a MERGE's deleted rows commit a
+  * `_changes` batch. A stream reading across
   * both kinds, the footer-only has_data answer, and the maintenance paths
   * (rename, vacuum, dropped streams) must all see the same change rows. */
 class ChangeSourcesSpec extends AnyFunSuite {
@@ -40,29 +42,6 @@ class ChangeSourcesSpec extends AnyFunSuite {
   private def sqlMerge(st: TableStore, view: String, src: DataFrame, sql: String): Unit = {
     src.createOrReplaceTempView(view)
     MergeSql.run(spark, st, sql)
-  }
-
-  /** Spark jobs started while `body` runs (listener events are async:
-    * wait until the count settles). */
-  private def jobsDuring[A](body: => A): (A, Long) = {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      var last = -1L
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val cur = jobs.get
-        if (cur == last) same += 1 else { same = 0; last = cur }
-      }
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("one stream over APPEND, MERGE, DELETE-branch MERGE, UPDATE, DELETE, OVERWRITE, keyless MERGE, TRUNCATE") {
@@ -156,6 +135,29 @@ class ChangeSourcesSpec extends AnyFunSuite {
     assert(rows(s.read) == Seq("7|v7|7|insert", "8|v8|8|insert"))
   }
 
+  test("an UPDATE writes its rows once: its batch marks the updated rows, a NULL predicate marks none") {
+    val root = freshRoot()
+    val st = new TableStore(spark, root, numBuckets = 1) // every row is rewritten
+    st.createTable("t", kv, keys = Seq("id"))
+    st.append("t", Seq((1L, "a", 1), (2L, "b", 2), (3L, null, 3), (4L, "d", 4))
+      .toDF("id", "v", "n"))
+    val s = ChangeStream.create(st, "t", "s")
+    // the SET rewrites `v`, which the predicate reads: the marker must be
+    // decided on the row before the SET. Row 3's predicate is NULL.
+    st.update("t", col("v").isin("a", "b"), Map("v" -> lit("z"), "n" -> col("n") * 10))
+    val v = st.currentVersion("t")
+    val sources = st.changeSourcesOf("t", v)
+    assert(sources.plain.isEmpty && sources.marked.nonEmpty,
+      s"the UPDATE's data batch is its only change source: $sources")
+    val manifest = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "t", "_versions", f"v$v%08d")), "UTF-8").split("\n")
+    assert(!manifest.exists(_.startsWith("#changes\t")) && manifest.exists(_.startsWith("#marked\t")))
+    assert(st.changeRowCount("t", v - 1, v) == Some(2L))
+    assert(rows(s.read) == Seq("1|z|10|update", "2|z|20|update"))
+    assert(st.read("t").orderBy("id").collect().map(_.toSeq.mkString("|")).toSeq ==
+      Seq("1|z|10", "2|z|20", "3|null|3", "4|d|4"))
+  }
+
   test("renameColumn rewrites a pending MERGE's and OVERWRITE's change rows under the new name") {
     val st = new TableStore(spark, freshRoot(), numBuckets = 4)
     kvTable(st, 1L to 6L)
@@ -212,8 +214,8 @@ class ChangeSourcesSpec extends AnyFunSuite {
         |CREATE TABLE u (id BIGINT, v STRING) KEYS (id);
         |CREATE STREAM s ON TABLE t;
         |INSERT INTO t SELECT 1, 'a';
-        |UPDATE t SET v = 'b' WHERE id = 1""".stripMargin)
-    // the UPDATE's `_changes` batch (an APPEND marks its data batch,
+        |DELETE FROM t WHERE id = 1""".stripMargin)
+    // the DELETE's `_changes` batch (an APPEND marks its data batch,
     // which stays live in the table)
     val pending = st.changesDirOf("t", st.currentVersion("t")).get
     assert(fs.exists(st.offsetPath("t", "s")))

@@ -96,7 +96,8 @@ class CommitPointSpec extends AnyFunSuite {
   test("manifest protocol: racing appends under non-atomic creates never yield two winners for one version — no batch lost") {
     val root = Files.createTempDirectory("graft_cp_store").toString
     // two INSTANCES on one root: append() is instance-synchronized, so
-    // cross-instance is the cross-JVM shape (same as StoreScale's arm)
+    // cross-instance is the cross-JVM shape (SCALE.md, round 18's
+    // concurrent-writers arm at sf1)
     val stA = new TableStore(spark, root, numBuckets = 2)
     val stB = new TableStore(spark, root, numBuckets = 2)
     stA.createTable("t", StructType(Seq(

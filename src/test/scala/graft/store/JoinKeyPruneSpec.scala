@@ -37,14 +37,15 @@ class JoinKeyPruneSpec extends AnyFunSuite
         l.relation.asInstanceOf[HadoopFsRelation].location.inputFiles.toSet
     }.reduceOption(_ ++ _).getOrElse(Set.empty)
 
-  /** 8 appends, key-range-disjoint (batch b holds ids [b·500, b·500+500)). */
-  private def rangeTable(store: TableStore): DataFrame = {
+  /** 8 appends, key-range-disjoint: batch b holds the 500 ids
+    * b·500·step + step·i (i < 500), i.e. [b·500, b·500+500) at step 1. */
+  private def rangeTable(store: TableStore, step: Long = 1L): DataFrame = {
     store.createTable("fact", StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType))),
       keys = Seq("id"))
     (0 until 8).foreach { b =>
       store.append("fact",
-        (0 until 500).map(i => (b * 500L + i, s"g$b")).toDF("id", "grp"))
+        (0 until 500).map(i => ((b * 500L + i) * step, s"g$b")).toDF("id", "grp"))
     }
     store.read("fact")
   }
@@ -128,25 +129,25 @@ class JoinKeyPruneSpec extends AnyFunSuite
 
   test("over the IN-list budget, the span fallback still prunes by key range") {
     val store = freshStore()
-    val fact = rangeTable(store)
+    // sparse ids (step 40): one batch's range is wide enough for a build
+    // side over the MaxKeys budget
+    val fact = rangeTable(store, step = 40L)
     val allFiles = factFiles(fact)
-    // 40 distinct build keys — over a maxKeys=10 budget, so the exact
-    // IN-list probe gives up; all keys sit inside batch 3's id range
-    // [1500, 2000), so the [min, max] span prunes to that batch's files
-    val dim = (0 until 40).map(i => (1500L + i * 12, s"v$i")).toDF("id", "label")
-    spark.conf.set(JoinKeyPrune.MaxKeysConf, "10")
-    try {
-      val joined = fact.join(dim, "id")
-      val served = factFiles(joined)
-      assert(served.size < allFiles.size,
-        s"span fallback must shrink the fact scan: ${served.size} of ${allFiles.size}")
-      spark.conf.set(JoinKeyPrune.EnabledConf, "false")
-      val baseline = try fact.join(dim, "id").orderBy("id").collect().toSeq
-        finally spark.conf.unset(JoinKeyPrune.EnabledConf)
-      assert(joined.orderBy("id").collect().toSeq == baseline,
-        "span-pruned join must return exactly the unpruned rows")
-      assert(baseline.size == 40)
-    } finally spark.conf.unset(JoinKeyPrune.MaxKeysConf)
+    // MaxKeys + 40 distinct build keys, so the exact IN-list probe gives
+    // up; all sit inside batch 3's id range [60000, 79960], so the
+    // [min, max] span prunes to that batch's files
+    val dim = spark.range(60000L, 60000L + JoinKeyPrune.MaxKeys + 40)
+      .select(col("id"), lit("v").as("label"))
+    val joined = fact.join(dim, "id")
+    val served = factFiles(joined)
+    assert(served.size < allFiles.size,
+      s"span fallback must shrink the fact scan: ${served.size} of ${allFiles.size}")
+    spark.conf.set(JoinKeyPrune.EnabledConf, "false")
+    val baseline = try fact.join(dim, "id").orderBy("id").collect().toSeq
+      finally spark.conf.unset(JoinKeyPrune.EnabledConf)
+    assert(joined.orderBy("id").collect().toSeq == baseline,
+      "span-pruned join must return exactly the unpruned rows")
+    assert(baseline.size == 251) // ids 60000, 60040, …, 70000
   }
 
   test("join-key pruning composes with lookup blooms on a scattered key") {

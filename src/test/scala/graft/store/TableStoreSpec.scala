@@ -19,26 +19,8 @@ class TableStoreSpec extends AnyFunSuite {
   private def freshStore() =
     new TableStore(spark, Files.createTempDirectory("graft_store").toString, numBuckets = 4)
 
-  private def recordsReadDuring(body: => Unit): Long = {
-    val records = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) records.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // listener events are async: wait until the counter settles
-      var last = -1L
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val cur = records.get
-        if (cur == last) same += 1 else { same = 0; last = cur }
-      }
-      records.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def recordsReadDuring(body: => Unit): Long =
+    TestSpark.taskMetricDuring(_.inputMetrics.recordsRead)(body)._2
 
   test("key-equality UPDATE derives buckets from literals — no discovery scan") {
     val st = freshStore() // 4 buckets
@@ -47,8 +29,8 @@ class TableStoreSpec extends AnyFunSuite {
     val read = recordsReadDuring {
       st.update("t", col("id") === 7L, Map("v" -> lit("X")))
     }
-    // pruned path reads only bucket(7)'s ~250 rows (twice: rewrite + change
-    // batch); the old discovery scan added a full 1000-row pass on top
+    // pruned path reads only bucket(7)'s ~250 rows, once for the rewrite;
+    // the old discovery scan added a full 1000-row pass on top
     assert(read < 1000, s"expected no full-table discovery scan, read $read records")
     assert(st.read("t").filter(col("id") === 7L).head().getString(1) == "X")
     assert(st.read("t").count() == 1000)

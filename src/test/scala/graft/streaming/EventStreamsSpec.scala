@@ -525,6 +525,91 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streamingFunnel bot cap collapses the bot's state: same hits as uncapped, one state row per user") {
+    implicit val sc = spark.sqlContext
+    val steps = Seq("signup", "click", "purchase")
+    // 50 users complete the funnel; a bot's 5,000 signups sit inside the
+    // last watermark horizon (2 minutes), so its pending buffer is still
+    // live when the run ends
+    val normal = (1 to 50).flatMap { u =>
+      Seq(Event(u * 10L, u, "signup", 0, ts(u)),
+        Event(u * 10L + 1, u, "click", 0, ts(u + 3600)),
+        Event(u * 10L + 2, u, "purchase", 0, ts(u + 7200)))
+    }
+    val bot = (0 until 5000).map(i => Event(1000000L + i, 777L, "signup", 0, ts(8000L + i % 60)))
+    /** (step hits, state rows, state bytes) after the last micro-batch. */
+    def run(name: String, cap: Option[Int]): (Set[(Long, Int)], Long, Long) = {
+      val mem = MemoryStream[Event]
+      val q = EventStreams.streamingFunnel(mem.toDS(), steps, maxEventsPerUser = cap)
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        mem.addData(normal ++ bot: _*)
+        q.processAllAvailable()
+        // a second batch runs under the watermark the first one set
+        // (8059 s − 2 min): the users' events fold, the bot's stay pending
+        mem.addData(Event(1, 1, "signup", 0, ts(8000)))
+        q.processAllAvailable()
+      } finally q.stop()
+      val ops = q.recentProgress.filter(_.stateOperators.nonEmpty).last.stateOperators
+      val hits = spark.table(name).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+      (hits, ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum)
+    }
+    val (exactHits, exactRows, exactBytes) = run("funnel_bot_exact", None)
+    val (cappedHits, cappedRows, cappedBytes) = run("funnel_bot_capped", Some(8))
+    assert(exactHits.size == 150, s"50 users × 3 steps: $exactHits")
+    assert(cappedHits == exactHits, "the cap must not change the finalized hits here")
+    assert(exactRows <= 51 && cappedRows <= 51,
+      s"state is one row per user, not per event: $exactRows, $cappedRows")
+    assert(cappedBytes * 5 < exactBytes,
+      s"the capped pending buffer must collapse the bot's state: $cappedBytes vs $exactBytes bytes")
+  }
+
+  test("streamingUrlDedup across a restart: re-crawls hit the restored state, the hot key is one state row") {
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[(Long, String, Timestamp)]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_url_ckpt").toString
+    // idempotent sink keyed by batch id, as in the funnel restart case
+    val kept = new scala.collection.concurrent.TrieMap[Long, Seq[Long]]()
+    def start() = EventStreams.streamingUrlDedup(mem.toDF().toDF("doc_id", "url", "ts"),
+        watermark = "10 minutes")
+      .writeStream.option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append())
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        kept(id) = df.collect().map(_.getLong(0)).toSeq
+        ()
+      }
+      .start()
+    def parked(i: Long) = s"https://WWW.Parked.Example.NET/landing?sid=$i"
+    def page(dir: String, i: Long) = s"http://host.example.org/$dir/$i"
+    // tick 0: 200 copies of one parked canonical form + 200 distinct pages
+    val tick0 = (0L until 400L).map(i =>
+      (i, if (i % 2 == 0) parked(i) else page("p", i), ts(i % 60)))
+    // tick 1: 200 more parked copies, 100 re-crawls of tick-0 pages and
+    // 100 new pages
+    val tick1 = (400L until 800L).map(i =>
+      (i, if (i % 2 == 0) parked(i) else if (i % 4 == 1) page("p", i - 400) else page("q", i),
+        ts(120 + i % 60)))
+
+    val q1 = start()
+    try { mem.addData(tick0: _*); q1.processAllAvailable() } finally q1.stop()
+    val e0 = kept.values.map(_.size).sum
+    assert(e0 == 201, s"tick 0 keeps the first parked copy and the 200 pages: $e0")
+
+    // a new query on the checkpoint: the parked flood and the re-crawls
+    // are dropped only if tick 0's keys round-tripped the state store
+    val q2 = start()
+    try { mem.addData(tick1: _*); q2.processAllAvailable() } finally q2.stop()
+    val e1 = kept.values.map(_.size).sum - e0
+    assert(e1 == 100, s"after the restart only the 100 new pages are kept: $e1")
+    val batchKeep = EventStreams.streamingUrlDedup((tick0 ++ tick1).toDF("doc_id", "url", "ts")).count()
+    assert(e0 + e1 == batchKeep, s"stream keeps ${e0 + e1}, batch $batchKeep")
+    val stateRows = q2.recentProgress.filter(_.stateOperators.nonEmpty).last
+      .stateOperators.map(_.numRowsTotal).sum
+    assert(stateRows <= 301,
+      s"one state row per distinct canonical form, the 400-copy hot key included: $stateRows")
+  }
+
   test("streamingFunnel kill/restart: per-user state round-trips the checkpoint, emissions pin to batch truth") {
     implicit val sc = spark.sqlContext
     val steps = Seq("signup", "click", "purchase")

@@ -7,7 +7,9 @@ first argument):
   - code lines: lines with something outside comments (blank lines,
     `//` comments and `/* ... */` blocks, scaladoc included, do not count);
   - the distinct `spark.graft.*` conf names and `SPARK_GRAFT_*` env names
-    that appear anywhere in those files, and their total.
+    that appear anywhere in those files, and their total;
+  - every object that defines `def main(`, with the raw lines of its file:
+    the harness surface that ships beside the engine.
 
 Run from the repo root:  python3 tools/size.py [src/main]
 """
@@ -17,6 +19,8 @@ import sys
 
 CONF = re.compile(r"spark\.graft\.[A-Za-z.]+")
 ENV = re.compile(r"SPARK_GRAFT_[A-Z0-9_]+")
+OBJECT = re.compile(r"^\s*(?:private\s+|private\[\w+\]\s+)?object\s+(\w+)", re.M)
+MAIN = re.compile(r"\bdef main\(")
 
 
 def code_lines(text):
@@ -68,10 +72,16 @@ def main():
     root = pathlib.Path(sys.argv[1] if len(sys.argv) > 1 else "src/main")
     raw = code = 0
     confs, envs = set(), set()
+    mains = []
     for f in sorted(root.rglob("*.scala")):
         text = f.read_text(encoding="utf-8")
-        raw += text.count("\n") + (0 if text.endswith("\n") or not text else 1)
+        lines = text.count("\n") + (0 if text.endswith("\n") or not text else 1)
+        raw += lines
         code += code_lines(text)
+        for m in MAIN.finditer(text):
+            owners = [o.group(1) for o in OBJECT.finditer(text, 0, m.start())]
+            if owners:
+                mains.append((owners[-1], f, lines))
         confs.update(m.rstrip(".") for m in CONF.findall(text))
         envs.update(ENV.findall(text))
     print(f"raw lines:  {raw}")
@@ -79,6 +89,9 @@ def main():
     print(f"spark.graft.* confs ({len(confs)}): {' '.join(sorted(confs))}")
     print(f"SPARK_GRAFT_* envs ({len(envs)}): {' '.join(sorted(envs))}")
     print(f"options: {len(confs) + len(envs)}")
+    print(f"mains ({len(mains)}):")
+    for name, f, lines in sorted(mains):
+        print(f"  {name:<12} {lines:>5} lines  {f}")
 
 
 if __name__ == "__main__":
